@@ -208,9 +208,10 @@ def serve_overlay(recs: DataFrame, seen: DataFrame, popularity: DataFrame,
     the user's precomputed recs that are still unseen, back-fill from
     the popularity ranking excluding both seen and already-recommended,
     serve precomputed-before-popular. Pure relational over a FIXED
-    ``recs`` input so both callers compose it: the ALS path
-    (pipeline.serve_recommendations) and the oracle-checked declared
-    query (q_recommend).
+    ``recs`` input: the oracle-checked declared query (q_recommend)
+    composes it, and it is the reference the ALS serving path
+    (pipeline.serve_recommendations, array lookups in a driver-side
+    index) is tested against.
 
     Inputs: recs(item_id, score, rec_source), seen(item_id),
     popularity(item_id, score). recs/seen are one user's rows → tiny →
@@ -239,13 +240,13 @@ def q_recommend(lineitem: DataFrame, orders: DataFrame,
     """Declared T4 query, oracle-checkable: the serving overlay over a
     FIXED deterministic precomputed-recs input.
 
-    The model path swaps ALS output into the same overlay
-    (pipeline.serve_recommendations over the pipeline's precomputed recs
-    table); here "last cycle's precomputed table" is stood in by the
-    popularity top-N — the reference's own cold-start fallback
-    (controller.py:262-310) — which makes every overlay step
-    (seen-filter, double-anti-join back-fill, priority order)
-    SQL-expressible and hash-checked by the driver at sf0.01.
+    The model path applies the same overlay rules to ALS output
+    (pipeline.serve_recommendations, by lookups in an index of the
+    pipeline's precomputed recs table); here "last cycle's precomputed
+    table" is stood in by the popularity top-N — the reference's own
+    cold-start fallback (controller.py:262-310) — which makes every
+    overlay step (seen-filter, double-anti-join back-fill, priority
+    order) SQL-expressible and hash-checked by the driver at sf0.01.
     """
     # the popularity aggregate feeds THREE overlay branches (precomputed
     # slate, back-fill source, seen-filter); without a checkpoint the

@@ -6,18 +6,25 @@ Reference flow (SURVEY.md §3.3/§3.4):
   3. stats: per-movie count/avg with HAVING (statistics.py:19-35, T2)
   4. train + top-N: SVD → per-user top-20 (estimator.py:104-129, T1)
   5. persist: pipelined KV writes (estimator.py:81-102, S9)
-  6. serve: recs minus already-rated, popularity back-fill (T4)
+  6. serve: recs minus already-rated, popularity back-fill (T4), answered
+     by array lookups in a ``ServingIndex`` of the gold tables
 
 Here each stage is a pure transform over gold parquet tables; the
 15/30-minute cadence is an external trigger (cron/Structured Streaming
 ``trigger(processingTime=...)`` — streaming/counters.py) re-running
-``run_pipeline``. Nothing in the flow collects to the driver.
-"""
+``run_pipeline``. The refresh never collects to the driver; serving
+reads the gold tables into the driver once per ``PipelineResult``
+(three Arrow reads, the reference's Redis views) and runs no Spark job
+per request."""
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
+from functools import cached_property
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +42,109 @@ class PipelineResult:
     movie_stats: DataFrame    # movie_id, count_users, avg_ratings
     recommendations: DataFrame  # user_id, item_id, score, rank
     rec_kv: DataFrame         # key "u{uid}", value "id;id;..."
+
+    @cached_property
+    def serving_index(self) -> ServingIndex:
+        """This result's serving index, loaded on first use by three
+        Arrow reads and kept for the result's lifetime: a new result
+        (a new refresh, other frames) loads its own."""
+        return ServingIndex(
+            self.ratings.select("user_id", "movie_id").toArrow(),
+            self.recommendations.select("user_id", "item_id",
+                                        "score").toArrow(),
+            self.movie_stats.select("movie_id", "count_users").toArrow())
+
+
+def _csr(users: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Keys and offsets of a user-sorted column: user ``keys[i]`` owns
+    rows ``offsets[i]:offsets[i + 1]``."""
+    keys, start = np.unique(users, return_index=True)
+    return keys, np.append(start, len(users))
+
+
+def _rows(keys: np.ndarray, offsets: np.ndarray, user_id: int) -> slice:
+    """``user_id``'s rows of a CSR column; empty for an unknown user."""
+    i = int(np.searchsorted(keys, user_id))
+    if i == len(keys) or keys[i] != user_id:
+        return slice(0, 0)
+    return slice(offsets[i], offsets[i + 1])
+
+
+class ServingIndex:
+    """One refresh's gold tables held on the driver for serving — the
+    views the reference's refresh job materializes in Redis
+    (estimator.py:81-102) and its controller reads per request
+    (controller.py:215-224).
+
+    Seen sets and recommendations are CSR arrays (sorted user keys plus
+    offsets into one flat column), each user's recs pre-sorted by score
+    desc then item_id asc; popularity is movie_stats ordered by
+    count_users desc then movie_id asc. These snapshot arrays are
+    read-only. ``add_seen`` keeps the one mutable part: ratings written
+    after the snapshot, per user and append-only, which every answer
+    excludes (the reference reconciles against live ratings at read
+    time, controller.py:227-233)."""
+
+    def __init__(self, seen: pa.Table, recs: pa.Table,
+                 popularity: pa.Table):
+        user, movie = (seen.column(c).to_numpy()
+                       for c in ("user_id", "movie_id"))
+        order = np.argsort(user, kind="stable")
+        self._seen_keys, self._seen_off = _csr(user[order])
+        self._seen = movie[order]
+
+        user, item, score = (recs.column(c).to_numpy()
+                             for c in ("user_id", "item_id", "score"))
+        order = np.lexsort((item, -score, user))
+        self._rec_keys, self._rec_off = _csr(user[order])
+        self._rec_items, self._rec_scores = item[order], score[order]
+
+        movie, count = (popularity.column(c).to_numpy()
+                        for c in ("movie_id", "count_users"))
+        order = np.lexsort((movie, -count))
+        self._pop_items = movie[order]
+        self._pop_scores = count[order].astype(np.float64)
+
+        for a in (self._seen_keys, self._seen_off, self._seen,
+                  self._rec_keys, self._rec_off, self._rec_items,
+                  self._rec_scores, self._pop_items, self._pop_scores):
+            a.flags.writeable = False
+        self._fresh: dict[int, np.ndarray] = {}
+        self._lock = threading.Lock()
+
+    def add_seen(self, user_id: int, movie_ids) -> None:
+        """Record ratings ``user_id`` wrote after the snapshot: no later
+        answer for that user contains these movies."""
+        ids = np.asarray(list(movie_ids), dtype=self._seen.dtype)
+        with self._lock:
+            self._fresh[user_id] = np.union1d(
+                self._fresh.get(user_id, ids[:0]), ids)
+
+    def recommend(self, user_id: int, n: int) -> pa.Table:
+        """``relational.serve_overlay`` by array lookups: the user's
+        unseen recs (score desc, item_id asc), then the popularity
+        back-fill without seen or recommended items, ``n`` rows at
+        most."""
+        if n < 0:
+            raise ValueError(f"n must be >= 0, got {n}")
+        seen = self._seen[_rows(self._seen_keys, self._seen_off, user_id)]
+        fresh = self._fresh.get(user_id)
+        if fresh is not None:
+            seen = np.concatenate([seen, fresh])
+        mine = _rows(self._rec_keys, self._rec_off, user_id)
+        recs = self._rec_items[mine]
+        keep = np.flatnonzero(~np.isin(recs, seen))[:n]
+        # each excluded item skips at most one popular item
+        excluded = np.concatenate([seen, recs])
+        top = self._pop_items[:n - len(keep) + len(excluded)]
+        fill = np.flatnonzero(~np.isin(top, excluded))[:n - len(keep)]
+        return pa.table({
+            "item_id": np.concatenate([recs[keep], top[fill]]),
+            "score": np.concatenate([self._rec_scores[mine][keep],
+                                     self._pop_scores[fill]]),
+            "rec_source": pa.array(
+                ["als"] * len(keep) + ["popular"] * len(fill), pa.string()),
+        })
 
 
 def compact_ratings(raw_ratings: DataFrame) -> DataFrame:
@@ -89,22 +199,11 @@ def run_pipeline(spark: SparkSession, raw_ratings: DataFrame,
 def serve_recommendations(result: PipelineResult, user_id: int,
                           n: int = 10) -> DataFrame:
     """T4 read path: PRECOMPUTED recs (the pipeline's gold table — no
-    model fit at serve time) minus CURRENT ratings (freshness
-    reconciliation, controller.py:227-233 intent), back-filled from the
-    popularity ranking (README.md:42-44). The overlay itself is the
-    shared oracle-checked operator (relational.serve_overlay)."""
-    from movie_rec_spark.operators.relational import serve_overlay
-
-    seen = (
-        result.ratings.filter(F.col("user_id") == user_id)
-        .select(F.col("movie_id").alias("item_id"))
-    )
-    recs = (
-        result.recommendations.filter(F.col("user_id") == user_id)
-        .select("item_id", "score", F.lit("als").alias("rec_source"))
-    )
-    popularity = result.movie_stats.select(
-        F.col("movie_id").alias("item_id"),
-        F.col("count_users").cast("double").alias("score"),
-    )
-    return serve_overlay(recs, seen, popularity, n)
+    model fit at serve time) minus the user's ratings, back-filled from
+    the popularity ranking (README.md:42-44), under exactly the rules
+    of ``relational.serve_overlay``. Answered from
+    ``result.serving_index`` by array lookups; the answer is a
+    DataFrame over an Arrow table (a ``LocalRelation``), so planning
+    and collecting it run no Spark job."""
+    return result.ratings.sparkSession.createDataFrame(
+        result.serving_index.recommend(user_id, n))

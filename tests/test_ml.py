@@ -143,6 +143,17 @@ def test_serve_overlay_both_branches(spark):
     ]
     # precomputed rows rank before popular even at lower score
     assert out[1].score < out[2].score
+    # the serving index answers the same fixture identically
+    from movie_rec_spark.pipeline import (PipelineResult,
+                                          serve_recommendations)
+    result = PipelineResult(
+        seen.selectExpr("1 AS user_id", "int(item_id) AS movie_id"),
+        popularity.selectExpr("int(item_id) AS movie_id",
+                              "int(score) AS count_users"),
+        recs.selectExpr("1 AS user_id", "int(item_id) AS item_id", "score"),
+        None)
+    assert [tuple(r) for r in serve_recommendations(result, 1, 4).collect()] \
+        == [tuple(r) for r in out]
 
 
 def test_q_grid_search_declared_query(spark):
