@@ -2,9 +2,9 @@
 
 Image/audio/video are treated as opaque ``binary`` columns with a typed
 metadata struct, exactly as a 100 TB lakehouse stores them. The
-decode / feature-extract / resize / frame-sample stages run as
-Arrow-batched ``mapInPandas`` — the one place Python belongs, because
-codec libraries are Python/native.
+decode / feature-extract stages run as Arrow-batched ``mapInPandas`` —
+the one place Python belongs, because codec libraries are
+Python/native.
 
 Codec resolution is FEATURE-DETECTED per operator (``codec='auto'``):
 when PIL (images) / soundfile (audio) is importable the real decoder
@@ -73,12 +73,6 @@ IMAGE_FEATURES_SCHEMA = StructType([
     StructField("height", IntegerType()),
     StructField("channels", IntegerType()),
     StructField("mean_byte", DoubleType()),
-])
-
-FRAME_SAMPLE_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("frame_idx", IntegerType()),
-    StructField("frame_sha", LongType()),
 ])
 
 
@@ -356,90 +350,6 @@ def decode_audio_features(with_payload_df: DataFrame,
             })
 
     return with_payload_df.mapInPandas(fn, AUDIO_FEATURES_SCHEMA)
-
-
-def sample_frames(with_payload_df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video frame sampling stub: emits n_frames rows per payload with a
-    deterministic per-frame digest — a 1→N mapInPandas (the real codec
-    would seek/decode keyframes per batch)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, shas = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    chunk = raw[i * step:(i + 1) * step]
-                    dig = int.from_bytes(
-                        hashlib.md5(chunk).digest()[:8], "big", signed=True)
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    shas.append(dig)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_sha": pd.Series(shas, dtype="int64"),
-            })
-
-    return with_payload_df.mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("resized", BinaryType()),
-])
-
-
-def _pil_resize(payload: bytes, target: int) -> bytes:
-    """Real resize via PIL: decode, force single-channel, bilinear
-    resample to target×target, return the raw pixel bytes (length is
-    exactly target² — same output contract as the stub)."""
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        out = im.convert("L").resize((target, target), Image.BILINEAR)
-        return out.tobytes()
-
-
-def resize_images(with_payload_df: DataFrame, target: int = 32,
-                  strict: bool = False, codec: str = "auto") -> DataFrame:
-    """Image resize over mapInPandas: emits a transformed payload of
-    deterministic size target×target. codec='auto' feature-detects PIL
-    (real decode + bilinear resample); the fallback is a strided byte
-    subsample with the SAME output contract (binary out column of
-    exactly target² bytes, 1→1 rows), so downstream stages are
-    oblivious to which codec ran.
-    """
-    real = _resolve_codec(codec, HAS_PIL, strict, "image", "PIL")
-    pil_resize = _pil_resize
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_out = target * target
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                raw = bytes(b)
-                if real:
-                    out.append(pil_resize(raw, target))
-                    continue
-                if not raw:
-                    out.append(b"\x00" * n_out)
-                    continue
-                step = max(len(raw) // n_out, 1)
-                sub = raw[::step][:n_out]
-                out.append(sub.ljust(n_out, b"\x00"))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "width": pd.Series([target] * len(pdf), dtype="int32"),
-                "height": pd.Series([target] * len(pdf), dtype="int32"),
-                "resized": out,
-            })
-
-    return with_payload_df.mapInPandas(fn, RESIZED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1276,9 +1276,7 @@ def ivf_compact_deltas(spark, path: str) -> dict:
     cell-partitioned append — cells are disjoint files, so resident
     base files are untouched) and remove them. Offline only: run with
     the append stream stopped, otherwise an uncommitted batch's delta
-    could be folded in and then replayed. The snapshot-resident index
-    (``ivf_*_snapshot``) removes this writers-stopped rule entirely —
-    its folds are atomic manifest commits."""
+    could be folded in and then replayed."""
     deltas = _list_delta_dirs(spark, path)
     if not deltas:
         return {"folded": 0, "rows": 0}
@@ -1295,103 +1293,6 @@ def ivf_compact_deltas(spark, path: str) -> dict:
         hp = jvm.org.apache.hadoop.fs.Path(d)
         hp.getFileSystem(conf).delete(hp, True)
     return {"folded": len(deltas), "rows": int(n)}
-
-
-def ivf_write_snapshot(embeddings: DataFrame, path: str, n_cells: int = 8,
-                       seed: int = 42, max_iter: int = 5) -> dict:
-    """IVF index AT REST as a manifest-committed snapshot table
-    (sources/snapshot.py) with ``cell`` as the partition key — the
-    atomic-commit form of ``ivf_write``. Probe pruning happens at the
-    MANIFEST level (the probe's ``partitions=`` file-list filter never
-    opens, lists, or stats excluded cells' files — Iceberg-style, one
-    step better than directory pruning), and every maintenance op
-    (append, delta fold, compaction) becomes one atomic version claim,
-    so searches can run concurrently with maintenance and never see a
-    half-folded index (the caveat ``ivf_compact_deltas`` has to
-    document away). Centers are written once beside the table — they
-    are immutable for the life of the index (rebuild = new table)."""
-    from movie_rec_spark.sources.snapshot import snapshot_create
-
-    spark = embeddings.sparkSession
-    assigned, centers = ivf_index(embeddings, n_cells, seed, max_iter)
-    out = snapshot_create(spark, path, assigned, "cell")
-    local_df(
-        spark, [(i, c) for i, c in enumerate(centers)],
-        "cell int, center array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_centers")
-    return out
-
-
-def _ivf_centers(spark, path: str) -> list[list[float]]:
-    rows = spark.read.parquet(path + "_centers").collect()
-    return [r.center for r in sorted(rows, key=lambda r: r.cell)]
-
-
-def ivf_read_snapshot(spark, path: str):
-    """(assigned frame, centers) from the CURRENT snapshot — base and
-    any appended deltas are just manifest entries, so there is no
-    with_deltas flag: the published version IS the index."""
-    from movie_rec_spark.sources.snapshot import snapshot_read
-
-    return snapshot_read(spark, path), _ivf_centers(spark, path)
-
-
-def ivf_append_snapshot(spark, path: str, new_embeddings: DataFrame) -> dict:
-    """``ivf_append`` with an atomic commit: assign new vectors to the
-    existing centers, append their files to the manifest in one version
-    claim. A replayed/crashed append never half-lands (either the
-    version published or it did not), which replaces the
-    batch_N-overwrite idempotence dance of ``ivf_append_batch``.
-    Returns the same drift signal (mean_sqdist vs ``ivf_drift``)."""
-    from movie_rec_spark.sources.snapshot import snapshot_append
-
-    centers = _ivf_centers(spark, path)
-    assigned = ivf_assign(new_embeddings, centers)
-    stats = assigned.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("_sqdist"), 6).alias("d")).collect()[0]
-    if not stats.n:
-        return {"appended": 0, "mean_sqdist": 0.0}
-    out = snapshot_append(spark, path, assigned.drop("_sqdist"))
-    return {"appended": int(stats.n), "mean_sqdist": float(stats.d),
-            "version": out["version"]}
-
-
-def ivf_compact_snapshot(spark, path: str, max_files: int = 4) -> dict:
-    """Fold append-accreted small files per cell into one, committed
-    atomically — concurrent searches keep reading the pre-compaction
-    snapshot until the claim publishes, so no writers-stopped rule is
-    needed (that rule is exactly what ``ivf_compact_deltas`` cannot
-    avoid on the plain layout). Old files are reclaimed later by
-    ``snapshot_vacuum`` once in-flight readers age out."""
-    from movie_rec_spark.sources.snapshot import snapshot_compact
-
-    return snapshot_compact(spark, path, max_files=max_files)
-
-
-def ivf_search_snapshot(spark, path: str, query: list[float],
-                        k: int = KNN_K, nprobe: int = 2,
-                        exclude_id: int | None = None) -> DataFrame:
-    """Search the snapshot-resident index: rank cells by the tiny
-    centers table, then read ONLY the probe cells' files via the
-    manifest partition filter."""
-    from movie_rec_spark.sources.snapshot import snapshot_read
-
-    centers = _ivf_centers(spark, path)
-
-    def cos_py(u: list[float], v: list[float]) -> float:
-        d = sum(x * y for x, y in zip(u, v))
-        nu = math.sqrt(sum(x * x for x in u)) or 1.0
-        nv = math.sqrt(sum(x * x for x in v)) or 1.0
-        return d / (nu * nv)
-
-    order = sorted(range(len(centers)),
-                   key=lambda i: -cos_py(centers[i], query))
-    probe = order[:nprobe]
-    scored = snapshot_read(spark, path,
-                           partitions=[str(c) for c in probe])
-    return ivf_search(scored, centers, query, k, nprobe=len(centers),
-                      exclude_id=exclude_id)
 
 
 SEMDEDUP_THRESHOLD = 0.4  # cosine cut matching the corpus's near-dup band

@@ -1,15 +1,14 @@
-"""Skew mitigation: salted joins.
+"""Skew mitigation: salted aggregation.
 
 At 100 TB a handful of hot keys can put one shuffle partition hours
 behind the rest. Two remedies, in preference order:
 
 1. **AQE skew-join splitting** (``spark.sql.adaptive.skewJoin.enabled``,
-   on in session.py): Spark splits oversized partitions at runtime —
-   zero code. This is the default answer.
-2. **Salting** (this module): when AQE can't help — e.g. skewed
-   aggregation keys, or a skewed side that must shuffle-join another
-   large table — spread each hot key over ``n_salts`` sub-keys and
-   replicate the other side per salt.
+   on in session.py): Spark splits oversized join partitions at
+   runtime — zero code. This is the default answer for joins.
+2. **Salting** (this module): when AQE can't help — skewed
+   aggregation keys — spread each hot key over ``n_salts`` sub-keys,
+   aggregate partially per (key, salt), then combine per key.
 
 The salt must spread rows WITHIN one key, so it hashes the full row
 content (deterministic across task retries — ``rand()`` is not and can
@@ -51,29 +50,6 @@ def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
         F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
                F.lit(n_salts)).cast("int"),
     )
-
-
-def replicate_per_salt(df: DataFrame, n_salts: int) -> DataFrame:
-    """Explode the (small or moderate) side once per salt value."""
-    return df.withColumn(
-        "_salt",
-        F.explode(F.array(*[F.lit(s) for s in range(n_salts)])),
-    )
-
-
-def salted_join(skewed: DataFrame, other: DataFrame, on: list[str],
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
-    """Equi-join where ``skewed`` has hot keys: join on (keys + salt).
-
-    Result equals ``skewed.join(other, on, how)`` (tested), but each hot
-    key's rows spread across ``n_salts`` shuffle partitions. Cost: the
-    ``other`` side is shuffled ``n_salts``× — use only when the skew
-    stall exceeds that overhead (or broadcast `other` if it's small,
-    which beats both).
-    """
-    left = with_salt(skewed, n_salts)
-    right = replicate_per_salt(other, n_salts)
-    return left.join(right, [*on, "_salt"], how).drop("_salt")
 
 
 def salted_count(df: DataFrame, key: str, n_salts: int = 8) -> DataFrame:

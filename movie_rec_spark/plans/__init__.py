@@ -20,11 +20,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def explain_formatted(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted")
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if `fragment` appears inside a PushedFilters: [...] list —
     i.e. the predicate reached the parquet reader."""

@@ -1,27 +1,16 @@
-"""Per-row external enrichment — S5 (SURVEY.md §2.1).
+"""Per-row external enrichment — S5 (SURVEY.md §2.1): the JSON shaping.
 
 The reference enriches each movie with a per-row TMDB REST GET
 (prepare_dataset.py:121-152): response JSON → title, year from
-release_date, genres joined with '|', overview. Row-at-a-time HTTP is
-the reference's slowest stage; the Spark-native shape is mapInPandas
-with ONE client per partition and batched requests — network
-concurrency scales with partitions, and the JSON shaping afterwards is
-pure Catalyst (from_json + transform + concat_ws, F5/F6).
-
-The HTTP client is injectable. ``make_http_fetcher`` is the REAL
-stdlib-urllib backend (batched GETs, backoff retry on 429/5xx) —
-exercised in-container against a loopback ``http.server`` with
-injected 503s; tests that only need the shaping logic inject the
-deterministic fake instead. The default fetcher raises until an
-endpoint is configured.
+release_date, genres joined with '|', overview. The fetch is the
+registered ``rest_enrichment`` data source (``sources/restds.py``):
+partitioned, batched, retried, emitting raw JSON per id in
+``RAW_SCHEMA``. Everything after the fetch is here and is pure
+Catalyst (from_json + transform + concat_ws, F5/F6).
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,65 +34,6 @@ TMDB_JSON_SCHEMA = StructType([
 ])
 
 
-def _default_fetcher(ids: list[int]) -> list[str]:
-    raise NotImplementedError(
-        "no endpoint configured; inject fetcher=make_http_fetcher("
-        "base_url) for a real HTTP backend, or any callable batch of "
-        "ids -> list of JSON strings")
-
-
-def make_http_fetcher(base_url: str, retries: int = 3,
-                      backoff_s: float = 0.5,
-                      timeout_s: float = 10.0
-                      ) -> Callable[[list[int]], list[str]]:
-    """A REAL HTTP fetcher on stdlib urllib — S4 closed, not stubbed:
-    batched GETs against ``base_url`` with exponential-backoff retry on
-    the transient class (429/5xx/connection), sharing the wire protocol
-    and error policy of the registered data source
-    (``restds.http_get_json_batch``). Tested in-container against a
-    loopback http.server with injected 503s."""
-    import time
-
-    from movie_rec_spark.sources.restds import (
-        TransientFetchError,
-        http_get_json_batch,
-    )
-
-    def fetch(ids: list[int]) -> list[str]:
-        last: Exception | None = None
-        for attempt in range(retries + 1):
-            try:
-                return http_get_json_batch(base_url, ids, timeout_s)
-            except TransientFetchError as exc:
-                last = exc
-                if attempt < retries:
-                    time.sleep(backoff_s * (2 ** attempt))
-        raise last
-
-    return fetch
-
-
-def fetch_raw(ids_df: DataFrame, id_col: str = "movie_id",
-              fetcher: Callable[[list[int]], list[str]] = _default_fetcher,
-              batch_size: int = 64) -> DataFrame:
-    """Batched fetch: one fetcher call per ≤batch_size ids, per
-    partition (reference: one blocking GET per movie, backoff-retried —
-    retries here are Spark task retries + fetcher-internal policy)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            out_ids: list[int] = []
-            out_raw: list[str] = []
-            for i in range(0, len(ids), batch_size):
-                chunk = ids[i:i + batch_size]
-                out_ids.extend(chunk)
-                out_raw.extend(fetcher(chunk))
-            yield pd.DataFrame({"movie_id": pd.Series(out_ids, dtype="int64"),
-                                "raw_json": out_raw})
-
-    return ids_df.select(F.col(id_col)).mapInPandas(fn, RAW_SCHEMA)
-
-
 def _genres_joined(parsed: Column) -> Column:
     """genres[].name joined with '|' (prepare_dataset.py:141, F5)."""
     return F.concat_ws(
@@ -121,24 +51,3 @@ def parse_enrichment(raw: DataFrame) -> DataFrame:
         _genres_joined(parsed).alias("genres"),
         parsed["overview"].alias("description"),
     )
-
-
-def make_fake_fetcher(seed: int = 42) -> Callable[[list[int]], list[str]]:
-    """Deterministic offline fetcher for tests: synthesizes a valid
-    TMDB-shaped JSON per id."""
-    genres = ["Drama", "Comedy", "Action", "Sci-Fi", "Horror"]
-
-    def fetch(ids: list[int]) -> list[str]:
-        out = []
-        for i in ids:
-            gs = [{"name": genres[(i + k) % len(genres)]}
-                  for k in range((i % 3) + 1)]
-            out.append(json.dumps({
-                "title": f"Movie {i}",
-                "release_date": f"{1950 + (i * seed) % 70}-01-15",
-                "genres": gs,
-                "overview": f"Synopsis of movie {i}.",
-            }))
-        return out
-
-    return fetch

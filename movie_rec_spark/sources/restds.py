@@ -15,7 +15,7 @@ the split the reference collapses into one loop.
 Connectivity is mode-switched, because this container has no network:
 
 - ``mode=fake`` (default): the deterministic TMDB-shaped synthesizer
-  (same arithmetic as ``enrichment.make_fake_fetcher``) — the full
+  (``_fake_fetch``, reproduced in SQL by the oracle) — the full
   source machinery (planning, partitioning, chunked fetch, retries,
   schema) runs for real and is oracle-checked; only the socket is
   fake. ``fail_every=N`` makes every Nth chunk raise a transient error
@@ -50,7 +50,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-RAW_SCHEMA = "movie_id bigint, raw_json string"
+from movie_rec_spark.sources.enrichment import RAW_SCHEMA, parse_enrichment
 
 _GENRES = ["Drama", "Comedy", "Action", "Sci-Fi", "Horror"]
 _FAKE_SEED = 42
@@ -61,9 +61,10 @@ class TransientFetchError(RuntimeError):
 
 
 def _fake_fetch(ids: list[int]) -> list[str]:
-    """Deterministic TMDB-shaped JSON — identical arithmetic to
-    enrichment.make_fake_fetcher(seed=42) so the two fake paths can
-    never drift apart."""
+    """Deterministic TMDB-shaped JSON per id: ``(i % 3) + 1`` genres,
+    a release year in [1950, 2020). The q_rest_enrichment oracle
+    reproduces this arithmetic in SQL, and the loopback HTTP tests
+    serve it over a real socket."""
     out = []
     for i in ids:
         gs = [{"name": _GENRES[(i + k) % len(_GENRES)]}
@@ -87,9 +88,8 @@ def http_get_json_batch(base_url: str, ids: list[int],
     extra deps — and the error split the retry loops rely on: 429/5xx
     and connection-level failures raise TransientFetchError (retry),
     anything else (4xx, malformed body, count mismatch) raises
-    permanently. Shared by the registered data source (``mode=http``)
-    and ``enrichment.make_http_fetcher`` — one wire protocol, one
-    error policy. Tested against a loopback http.server with injected
+    permanently. The transport of the registered data source's
+    ``mode=http``. Tested against a loopback http.server with injected
     503s (tests/test_enrichment.py), which is exactly the transport a
     production endpoint exercises."""
     import urllib.error
@@ -138,6 +138,13 @@ class RestEnrichmentReader(DataSourceReader):
         # fake-mode fault injection: every Nth chunk fails transiently
         # on its first attempt (0 = never)
         self.fail_every = int(options.get("fail_every", 0))
+        # option values come from .option(...): reject the ones the
+        # chunking and retry loops cannot run with
+        for name, lowest in (("batch_size", 1), ("retries", 0),
+                             ("fail_every", 0), ("backoff_s", 0)):
+            if getattr(self, name) < lowest:
+                raise ValueError(f"option {name} must be >= {lowest}, "
+                                 f"got {getattr(self, name)}")
 
     def partitions(self) -> list[InputPartition]:
         """Plan the id space into ranges — fetch parallelism IS the
@@ -199,8 +206,6 @@ def read_enrichment(spark, lo: int, hi: int, num_partitions: int = 8,
                     **options):
     """Register (idempotent) + read + JVM-side JSON shaping: the whole
     S4+S5 pipeline as one call."""
-    from movie_rec_spark.sources.enrichment import parse_enrichment
-
     spark.dataSource.register(RestEnrichmentDataSource)
     r = (spark.read.format("rest_enrichment")
          .option("lo", lo).option("hi", hi)

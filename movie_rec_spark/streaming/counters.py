@@ -162,13 +162,3 @@ def run_with_foreach_batch(spark: SparkSession, src_dir: str,
         .start()
     )
     q.awaitTermination()
-
-
-def dedup_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup: first occurrence per event_id wins;
-    duplicates arriving within the watermark horizon are dropped.
-    State is one key per id seen inside the horizon — the watermark is
-    what makes dedup state finite at 100 TB/day (without it Spark must
-    remember every key forever). Batch equivalent: dropDuplicates.
-    """
-    return stream.withWatermark("ts", watermark).dropDuplicates(["event_id"])

@@ -1,21 +1,20 @@
-"""S5 enrichment pipeline tests (offline fake fetcher)."""
+"""S4/S5 enrichment tests: the registered ``rest_enrichment`` source
+(offline fake mode and a loopback HTTP server) and the JVM-side JSON
+shaping."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row
 
-from movie_rec_spark.sources import enrichment as EN
-
-
-def _ids(spark, n=10):
-    return spark.createDataFrame([Row(movie_id=i) for i in range(1, n + 1)])
+from movie_rec_spark.sources.restds import (
+    RestEnrichmentReader,
+    read_enrichment,
+)
 
 
 def test_fetch_and_parse_shapes_json_jvm_side(spark):
-    raw = EN.fetch_raw(_ids(spark), fetcher=EN.make_fake_fetcher(),
-                       batch_size=3)
-    out = {r.movie_id: r for r in EN.parse_enrichment(raw).collect()}
+    df = read_enrichment(spark, 1, 11, num_partitions=2, batch_size=3)
+    out = {r.movie_id: r for r in df.collect()}
     assert len(out) == 10
     r = out[4]
     assert r.title == "Movie 4"
@@ -25,22 +24,27 @@ def test_fetch_and_parse_shapes_json_jvm_side(spark):
 
 
 def test_genres_pipe_join_counts(spark):
-    raw = EN.fetch_raw(_ids(spark, 6), fetcher=EN.make_fake_fetcher())
-    parsed = EN.parse_enrichment(raw)
-    got = {r.movie_id: r.genres for r in parsed.collect()}
+    got = {r.movie_id: r.genres
+           for r in read_enrichment(spark, 1, 7, num_partitions=2).collect()}
+    assert len(got) == 6
     # id i gets (i % 3) + 1 genres
     for i, g in got.items():
         assert len(g.split("|")) == (i % 3) + 1
 
 
-def test_default_fetcher_raises(spark):
-    with pytest.raises(Exception):
-        EN.fetch_raw(_ids(spark, 2)).collect()
+@pytest.mark.parametrize("option, value", [
+    ("batch_size", "0"),
+    ("retries", "-1"),
+    ("fail_every", "-1"),
+    ("backoff_s", "-0.5"),
+])
+def test_reader_rejects_out_of_range_options(option, value):
+    with pytest.raises(ValueError, match=option):
+        RestEnrichmentReader({"lo": "1", "hi": "11", "fail_every": "1",
+                              option: value})
 
 
 def test_datasource_partitions_plan_the_id_space():
-    from movie_rec_spark.sources.restds import RestEnrichmentReader
-
     r = RestEnrichmentReader({"lo": "1", "hi": "101",
                               "num_partitions": "4"})
     parts = r.partitions()
@@ -50,8 +54,6 @@ def test_datasource_partitions_plan_the_id_space():
 
 
 def test_datasource_retry_survives_injected_transients(spark):
-    from movie_rec_spark.sources.restds import read_enrichment
-
     df = read_enrichment(spark, 1, 201, num_partitions=4,
                          fail_every=2, backoff_s=0.0)
     got = {r.movie_id: r.title for r in df.collect()}
@@ -59,27 +61,10 @@ def test_datasource_retry_survives_injected_transients(spark):
 
 
 def test_datasource_retry_exhaustion_fails_loudly(spark):
-    from movie_rec_spark.sources.restds import read_enrichment
-
     df = read_enrichment(spark, 1, 201, num_partitions=1,
                          fail_every=1, retries=0, backoff_s=0.0)
     with pytest.raises(Exception, match="transient"):
         df.collect()
-
-
-def test_datasource_matches_mapinpandas_enrichment_path(spark):
-    """The registered source and the mapInPandas fetch_raw path share
-    the fake-payload arithmetic; the parsed outputs must be identical
-    row-for-row — two front doors, one answer."""
-    from movie_rec_spark.sources.restds import read_enrichment
-
-    ids = spark.createDataFrame([Row(movie_id=i) for i in range(1, 51)])
-    via_map = EN.parse_enrichment(
-        EN.fetch_raw(ids, fetcher=EN.make_fake_fetcher()))
-    via_src = read_enrichment(spark, 1, 51, num_partitions=3)
-    a = {tuple(r) for r in via_map.collect()}
-    b = {tuple(r) for r in via_src.collect()}
-    assert a == b
 
 
 def test_datasource_streams_with_offset_resume(spark, tmp_path):
@@ -184,50 +169,22 @@ def _serve(handler_cls):
 def test_http_datasource_survives_real_503s(spark):
     """mode=http against a live loopback server that 503s every
     chunk's first request: the reader's backoff retry must recover
-    every row, and the server must have seen real retried requests."""
-    from movie_rec_spark.sources.restds import RestEnrichmentDataSource
-
+    every row, and the server must have seen real retried requests.
+    The parsed rows equal the fake mode's row for row — the socket is
+    the only variable, so the real transport changes nothing
+    downstream."""
     handler = _TMDBLoopbackHandler.make(fail_first=True)
     srv, url = _serve(handler)
     try:
-        spark.dataSource.register(RestEnrichmentDataSource)
-        df = (spark.read.format("rest_enrichment")
-              .option("mode", "http").option("base_url", url)
-              .option("lo", 1).option("hi", 201)
-              .option("num_partitions", 4)
-              .option("batch_size", 32)
-              .option("backoff_s", 0.05)
-              .load())
-        rows = df.collect()
+        rows = read_enrichment(spark, 1, 201, num_partitions=4,
+                               mode="http", base_url=url, batch_size=32,
+                               backoff_s=0.05).collect()
     finally:
         srv.shutdown()
     assert len(rows) == 200
     assert {r.movie_id for r in rows} == set(range(1, 201))
     assert handler.n_failed >= 4, "503 injection never fired"
     assert handler.n_requests > handler.n_failed, "no retries happened"
-
-
-def test_http_fetcher_matches_fake_path_end_to_end(spark):
-    """make_http_fetcher through mapInPandas + JVM parsing equals the
-    injected-fake path bit-for-bit — the socket is the only variable,
-    so S4's real transport provably changes nothing downstream."""
-    from movie_rec_spark.sources.enrichment import (
-        fetch_raw,
-        make_fake_fetcher,
-        make_http_fetcher,
-        parse_enrichment,
-    )
-
-    handler = _TMDBLoopbackHandler.make(fail_first=False)
-    srv, url = _serve(handler)
-    try:
-        ids = spark.range(1, 101).withColumnRenamed("id", "movie_id")
-        via_http = parse_enrichment(
-            fetch_raw(ids, fetcher=make_http_fetcher(url, backoff_s=0.05),
-                      batch_size=16)).collect()
-    finally:
-        srv.shutdown()
-    via_fake = parse_enrichment(
-        fetch_raw(ids, fetcher=make_fake_fetcher(), batch_size=16)).collect()
-    assert sorted(map(tuple, via_http)) == sorted(map(tuple, via_fake))
-    assert handler.n_requests > 0
+    via_fake = read_enrichment(spark, 1, 201, num_partitions=4,
+                               batch_size=32).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, via_fake))

@@ -1,0 +1,125 @@
+"""Every public library entry point has a caller outside the tests.
+
+A pure-AST scan, no Spark session: each public top-level ``def`` or
+``class`` in ``movie_rec_spark/`` must be referenced (as a name, an
+attribute or an import alias) from some non-test ``.py`` file of the
+repo, outside its own definition. Code that only tests reach is either
+given a caller on a measured or declared path, deleted, or listed in
+``KEPT`` with the reason it stays.
+"""
+
+from __future__ import annotations
+
+import ast
+import functools
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "movie_rec_spark"
+# test utilities by design: plan-introspection helpers for the plan tests
+EXEMPT_MODULES = {PACKAGE / "plans"}
+SKIP_DIRS = {".git", "tests", "spark-warehouse", "__pycache__"}
+
+KEPT = {
+    "read_ratings_csv": "paper surface S1-S3: the reference's CSV inputs",
+    "read_links_csv": "paper surface S1-S3: the reference's CSV inputs",
+    "read_quoted_csv": "paper surface S1-S3: the reference's CSV inputs",
+    "decode_rec_list": "S9-S11 KV serving form; the gold writer is open",
+    "KVFileDataSource": "S9-S11 KV serving form; the gold writer is open",
+    "read_kv_manifested": "S9-S11 KV serving form; the gold writer is open",
+    "append_events": "M1/F7 append mutation",
+    "evaluate_rmse_mae": "ML3; the RMSE gate uses it",
+    "snapshot_append": "the versioned gold publish builds on snapshots",
+    "snapshot_compact": "the versioned gold publish builds on snapshots",
+    "snapshot_vacuum": "the versioned gold publish builds on snapshots",
+    "manifest_entries": "the versioned gold publish builds on snapshots",
+    "snapshot_merge_retry": "the snapshot concurrency tests drive it",
+    "merge_stream_snapshot": "the ratings ingest between refreshes",
+    "read_change_stream": "the ratings ingest between refreshes",
+    "write_bucketed": "fixture of the bucketed-join plan tests",
+    "write_partitioned": "fixture of the bucketed-join plan tests",
+    # Test-only as well and not yet triaged: each still needs a caller
+    # on a measured or declared path, or deletion with its tests.
+    "exclude_seen": "seen-pair anti-join; the ALS ranking tests use it",
+    "ivf_write": "persisted IVF index, the at-rest form of ivf_build",
+    "ivf_read": "persisted IVF index, the at-rest form of ivf_build",
+    "ivf_search": "probe search over a persisted IVF index",
+    "ivf_append": "persisted IVF index upkeep",
+    "ivf_drift": "persisted IVF index upkeep",
+    "ivf_append_stream": "persisted IVF index upkeep",
+    "ivf_compact_deltas": "persisted IVF index upkeep",
+    "text_embedding": "array form of q_text_embed for the similarity ops",
+    "write_kv": "S9-S11 KV write side; the gold writer is open",
+    "bucketed": "read side of write_bucketed",
+    "zvalue": "2-D Morton key; zvalue_n is tested against it",
+    "expire_partitions": "partition upkeep of a merge target",
+    "compact_partitions": "partition upkeep of a merge target",
+    "rocksdb_state_conf": "incremental near-dup ingest",
+    "compact_state": "incremental near-dup ingest",
+    "read_state_metrics": "incremental near-dup ingest",
+    "run_incremental_neardup": "incremental near-dup ingest",
+    "run_incremental_ingest": "incremental near-dup ingest",
+}
+
+
+def _py_files(root: Path):
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root)
+        if SKIP_DIRS.intersection(rel.parts[:-1]):
+            continue
+        if path.name.startswith("test_") or path.name == "conftest.py":
+            continue
+        yield path
+
+
+def _public_defs(tree: ast.Module) -> list[ast.AST]:
+    return [n for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.ClassDef))
+            and not n.name.startswith("_")]
+
+
+def _names_used(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+@functools.cache
+def unreferenced() -> dict[str, str]:
+    """Public library defs no non-test file references, name -> module."""
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in _py_files(ROOT)}
+    used: set[str] = set()
+    defined: dict[str, str] = {}
+    for path, tree in trees.items():
+        own = set()
+        if path.is_relative_to(PACKAGE) and not any(
+                path.is_relative_to(m) for m in EXEMPT_MODULES):
+            for d in _public_defs(tree):
+                defined[d.name] = str(path.relative_to(ROOT))
+                own.add(id(d))
+        for node in tree.body:
+            if id(node) in own:
+                # references from inside a def count for every other name
+                used |= _names_used(node) - {node.name}
+            else:
+                used |= _names_used(node)
+    return {n: m for n, m in defined.items() if n not in used}
+
+
+def test_every_public_library_def_has_a_non_test_caller():
+    missing = {n: m for n, m in unreferenced().items() if n not in KEPT}
+    assert not missing, (
+        "public defs reached from no non-test file (give them a caller, "
+        f"delete them, or list them in KEPT): {sorted(missing.items())}")
+
+
+def test_kept_names_still_exist_and_still_need_the_exemption():
+    gone = set(KEPT) - set(unreferenced())
+    assert not gone, f"KEPT entries no longer needed: {sorted(gone)}"

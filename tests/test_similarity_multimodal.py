@@ -148,35 +148,6 @@ def test_multimodal_strict_raises(spark):
         MM.decode_image_features(MM.with_payload(docs), strict=True).collect()
 
 
-def test_frame_sampling_emits_n_rows_per_doc(spark):
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text="frame data " * 10, lang="en", source="s",
-             n_chars=100) for i in range(3)]
-    )
-    out = MM.sample_frames(MM.with_payload(docs), n_frames=4).collect()
-    assert len(out) == 12
-    per_doc = {}
-    for r in out:
-        per_doc.setdefault(r.doc_id, set()).add(r.frame_idx)
-    assert all(v == {0, 1, 2, 3} for v in per_doc.values())
-
-
-def test_resize_emits_fixed_size_payloads(spark, sf_docs):
-    from movie_rec_spark.operators.multimodal import (
-        resize_images,
-        with_payload,
-    )
-
-    out = resize_images(with_payload(sf_docs), target=8).collect()
-    assert len(out) == sf_docs.count()
-    assert all(r.width == 8 and r.height == 8 for r in out)
-    assert all(len(r.resized) == 64 for r in out)
-    # deterministic: same input -> same bytes
-    again = resize_images(with_payload(sf_docs), target=8).collect()
-    assert {r.doc_id: bytes(r.resized) for r in out} == \
-        {r.doc_id: bytes(r.resized) for r in again}
-
-
 def test_knn_int8_matches_float_knn(spark, sf_emb):
     """int8-quantized search must agree with the float brute-force
     top-k on nearly all of the k set (quantization moves sims by
@@ -404,54 +375,6 @@ def test_semdedup_keep_rule_min_id(spark):
            S.q_semdedup(df, n_cells=2, threshold=0.9).collect()}
     assert out[1].keep and out[9].keep and not out[2].keep
     assert out[2].dup_of == 1 and out[1].dup_of is None
-
-
-def test_ivf_snapshot_end_to_end_atomic_maintenance(spark, sf_emb, tmp_path):
-    """Snapshot-resident IVF: (1) search reads ONLY the probe cells'
-    files via MANIFEST pruning and matches the in-memory index's
-    top-k; (2) append and compaction are atomic version claims — the
-    pre-compaction snapshot stays readable (no writers-stopped rule)
-    and row counts survive the fold exactly."""
-    from movie_rec_spark.sources.snapshot import (
-        snapshot_read,
-        snapshot_version,
-    )
-
-    path = str(tmp_path / "ivf_snap")
-    S.ivf_write_snapshot(sf_emb, path, n_cells=4)
-    query = [float(x) for x in
-             sf_emb.filter(F.col("vec_id") == 0).collect()[0].embedding]
-
-    got = S.ivf_search_snapshot(spark, path, query, k=10, nprobe=2,
-                                exclude_id=0)
-    # manifest pruning: only 2 of 4 cells' files may be opened
-    cells_read = {f.split("_p=")[1].split("/")[0] for f in got.inputFiles()}
-    assert len(cells_read) == 2, cells_read
-    mem_assigned, mem_centers = S.ivf_index(sf_emb, n_cells=4)
-    in_mem = S.ivf_search(mem_assigned, mem_centers, query, k=10,
-                          nprobe=2, exclude_id=0)
-    assert [r.vec_id for r in got.collect()] == \
-           [r.vec_id for r in in_mem.collect()]
-
-    # atomic appends: each claims a version; index grows by the batch
-    n0 = snapshot_read(spark, path).count()
-    for i in range(5):
-        batch = sf_emb.limit(3).withColumn(
-            "vec_id", F.col("vec_id") + F.lit(10_000 + 100 * i))
-        out = S.ivf_append_snapshot(spark, path, batch)
-        assert out["appended"] == 3 and out["mean_sqdist"] > 0
-    assert snapshot_read(spark, path).count() == n0 + 15
-
-    # atomic compaction: fold small append files, old snapshot intact
-    pre = snapshot_version(path)
-    res = S.ivf_compact_snapshot(spark, path, max_files=2)
-    assert res["rewritten"] >= 1
-    assert snapshot_read(spark, path).count() == n0 + 15
-    assert snapshot_read(spark, path, version=pre).count() == n0 + 15
-    # appended vectors are searchable after the fold
-    assigned, centers = S.ivf_read_snapshot(spark, path)
-    hit = S.ivf_search(assigned, centers, query, k=5, nprobe=4)
-    assert hit.count() == 5
 
 
 def test_semdedup_hierarchical_path_contract(spark, sf_emb):

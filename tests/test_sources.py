@@ -159,56 +159,6 @@ def test_write_jdbc_chunked_option_contract(spark):
     assert fake.options["isolationLevel"] == "READ_COMMITTED"
 
 
-def test_jsonl_roundtrip_and_parse(spark, tmp_path):
-    """JSON-lines sink -> typed source round trip preserves values; an
-    embedded JSON string column parses JVM-side with from_json."""
-    from pyspark.sql import Row
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from movie_rec_spark.sources.jsonl import (
-        parse_json_column, read_jsonl, write_jsonl,
-    )
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("score", DoubleType()),
-    ])
-    rows = [Row(doc_id=1, text='has "quotes", commas', score=0.5),
-            Row(doc_id=2, text="plain", score=1.25)]
-    path = str(tmp_path / "docs_jsonl")
-    write_jsonl(spark.createDataFrame(rows, schema), path)
-    back = read_jsonl(spark, path, schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, rows))
-
-    inner = StructType([StructField("lang", StringType()),
-                        StructField("stars", LongType())])
-    df = spark.createDataFrame(
-        [Row(doc_id=1, js='{"lang": "en", "stars": 4}')])
-    parsed = parse_json_column(df, "js", inner).select(
-        "doc_id", "parsed.lang", "parsed.stars").collect()[0]
-    assert (parsed.doc_id, parsed.lang, parsed.stars) == (1, "en", 4)
-
-
-def test_jsonl_corrupt_record_modes(spark, tmp_path):
-    """PERMISSIVE keeps malformed rows as nulls; DROPMALFORMED drops
-    them — the explicit corrupt-record policy, never inference."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from movie_rec_spark.sources.jsonl import read_jsonl
-
-    p = tmp_path / "bad.jsonl"
-    p.write_text('{"doc_id": 1}\nnot json at all\n{"doc_id": 2}\n')
-    schema = StructType([StructField("doc_id", LongType())])
-    permissive = read_jsonl(spark, str(p), schema).collect()
-    assert len(permissive) == 3
-    dropped = read_jsonl(spark, str(p), schema,
-                         mode="DROPMALFORMED").collect()
-    assert sorted(r.doc_id for r in dropped) == [1, 2]
-
-
 def test_kvfile_writer_commits_manifest(spark, tmp_path):
     """The registered writer's commit protocol: staged per-task files
     publish atomically via one manifest; read-back sees every row."""

@@ -145,31 +145,6 @@ def test_cdc_counters_retract_deletes_to_batch_recount(spark, tmp_path):
     assert ev.filter(F.col("event_type") == "error").count() > 0
 
 
-def test_streaming_dedup_drops_replayed_batch(spark, tmp_path):
-    import shutil as sh
-
-    from movie_rec_spark.streaming.counters import dedup_stream
-
-    # stage the same events TWICE (simulated at-least-once replay)
-    src = str(tmp_path / "dup_src")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(2).write.mode("overwrite").parquet(src)
-    for f in list(__import__("pathlib").Path(src).glob("part-*.parquet")):
-        sh.copy(f, f.with_name("replay-" + f.name))
-    q = (
-        dedup_stream(read_event_stream(spark, src))
-        .groupBy().count()
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("t_dedup")
-        .option("checkpointLocation", str(tmp_path / "ck_dd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM t_dedup").collect()[0][0]
-    assert got == ev.count(), "replayed rows must be deduped"
-
-
 def test_incremental_ingest_dedups_across_batches(spark, tmp_path):
     """A doc whose text arrived in an earlier micro-batch must be
     flagged dup_of_corpus when it reappears later; in-batch dups get

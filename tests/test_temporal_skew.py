@@ -1,4 +1,4 @@
-"""As-of join (temporal.py), salted joins/aggs (skew.py), and the
+"""As-of join (temporal.py), salted aggregation (skew.py), and the
 grouping-set / approx queries added to relational.py.
 
 The as-of semantics cases (inclusive tie, no-prior-snapshot NULL,
@@ -68,23 +68,11 @@ def skewed(spark):
     # one hot key (90% of rows) + a tail — the shape salting exists for.
     rows = [(1, i, float(i % 7)) for i in range(900)]
     rows += [(k, 1000 + k, float(k)) for k in range(2, 30)]
-    df = spark.createDataFrame(rows, "k long, payload long, v double")
-    dim = spark.createDataFrame(
-        [(k, f"name_{k}") for k in range(1, 30)], "k long, k_name string")
-    return df, dim
-
-
-def test_salted_join_equals_plain_join(skewed):
-    df, dim = skewed
-    plain = df.join(dim, ["k"], "inner")
-    salted = SK.salted_join(df, dim, on=["k"], n_salts=4)
-    assert salted.columns == plain.columns
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
+    return spark.createDataFrame(rows, "k long, payload long, v double")
 
 
 def test_salted_count_equals_groupby(skewed):
-    df, _ = skewed
+    df = skewed
     plain = {r["k"]: r["n"] for r in
              df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
     salted = {r["k"]: r["n"] for r in SK.salted_count(df, "k", 4).collect()}
@@ -92,7 +80,7 @@ def test_salted_count_equals_groupby(skewed):
 
 
 def test_salt_actually_spreads_hot_key(skewed):
-    df, _ = skewed
+    df = skewed
     n_buckets = (SK.with_salt(df, 4).filter(F.col("k") == 1)
                  .select("_salt").distinct().count())
     assert n_buckets >= 2
