@@ -18,16 +18,13 @@ a one-off host stall — next to 0.4 s siblings; min-of-2 suppresses
 exactly that class of artifact while leaving real plan costs, which
 reproduce in both passes, untouched).
 
-r13 measurement fix (r12 verdict item 4): q_knn_ivf's pass 2 used to
-hit the portable-fit memo, so its min was a WARM-index search while
-every other query rebuilt its state per pass. The bench now evicts
-that memo entry before each timed q_knn_ivf pass
-(similarity.portable_fit_cache_clear), so its number prices a cold
-build+search under the same min-of-2 meaning as the other 189 —
-the number went UP accordingly (~0.29 -> ~1.33 s cold vs 0.37 warm,
-measured same-host; the old warm-serve figure remains in
-BENCH_local_r13pre.json and earlier artifacts).
-The build-once/serve-many model itself is unchanged in the code.
+q_knn_ivf's pass 2 would otherwise search its memoized index warm, so
+the bench empties the library's memo (``movie_rec_spark.memo.clear()``)
+before each q_knn_ivf pass: it prices a cold build+search (~1.33 s vs
+0.37 warm, same host; the warm figure is in BENCH_local_r13pre.json).
+One clear per pass falls between any query's two passes, so every
+memoized fit (q_semdedup's too) is built cold in both, and each table's
+first read after a clear re-infers its schema (~80 ms).
 """
 
 from __future__ import annotations
@@ -90,16 +87,14 @@ def main() -> None:
     import gc
 
     timings: dict[str, float] = {}
-    from movie_rec_spark.operators.similarity import (
-        portable_fit_cache_clear,
-    )
+    from movie_rec_spark import memo
 
     for npass in (1, 2):
         for name, fn in qs.items():
             print(f"RUN {name} (pass {npass})", file=sys.stderr, flush=True)
             if name == "q_knn_ivf":
                 # cold build+search on BOTH passes (see module docstring)
-                portable_fit_cache_clear(n_cells=8)
+                memo.clear()
             t0 = time.time()
             run(fn)
             dt = round(time.time() - t0, 3)
@@ -110,9 +105,9 @@ def main() -> None:
             # drop them — without it ~380 runs accrete executor blocks
             # until the shared heap GC-throttles the LATE queries
             # (q_rest_enrichment measured 4.0 s late-session vs 0.9 s
-            # isolated, same code). Deliberately-held caches (e.g. the
-            # ivf_build index whose warm pass 2 is the documented
-            # serving model) keep their module references and survive.
+            # isolated, same code). Frames the library's memo holds
+            # keep their references and survive until the next
+            # memo.clear().
             gc.collect()
             print(f"  {name} {dt}s", file=sys.stderr, flush=True)
             timings[name] = min(timings.get(name, dt), dt)

@@ -23,6 +23,7 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_rec_spark import memo
 from movie_rec_spark.functions import cosine
 from movie_rec_spark.localdf import local_df
 
@@ -857,7 +858,7 @@ def q_hyperlsh_eval(embeddings: DataFrame,
     # eagerly trigger a job at plan-construction time (queries()
     # builders must stay lazy — the one sanctioned exception is a
     # bounded-collect iterative FIT like portable_cells_centers /
-    # ivf_build, whose O(K) driver sync is the algorithm, memoized
+    # semdedup_cells, whose O(K) driver sync is the algorithm, memoized
     # so a session pays it once) and raise on an empty table, while
     # the oracle SQL pins the same constant in its range() — using
     # one shared constant keeps operator and oracle in lockstep
@@ -978,36 +979,6 @@ def ivf_index(embeddings: DataFrame, n_cells: int = 8,
     return assigned, centers
 
 
-_IVF_CACHE: dict[tuple, tuple] = {}
-_IVF_FIT_COUNT = 0  # test observability: cache hits must not re-fit
-
-
-def ivf_build(embeddings: DataFrame, n_cells: int = 8, seed: int = 42,
-              max_iter: int = 5, cache: bool = True):
-    """Build-once half of the IVF index: fit the coarse quantizer,
-    persist the cell assignments, memoize per (input files, params).
-
-    Searches are the hot path and the index is query-independent, so an
-    ANN service builds once and serves many — repeated ``q_knn_ivf``
-    calls on the same table must NOT re-run KMeans. The cache key is the
-    scan's file set (content identity for a lakehouse table); ad-hoc
-    in-memory frames fall back to object identity.
-    """
-    global _IVF_FIT_COUNT
-    files = tuple(sorted(embeddings.inputFiles()))
-    key = (files or ("obj", id(embeddings)), n_cells, seed, max_iter)
-    if cache and key in _IVF_CACHE:
-        return _IVF_CACHE[key][1:]
-    _IVF_FIT_COUNT += 1
-    assigned, centers = ivf_index(embeddings, n_cells, seed, max_iter)
-    assigned = assigned.persist()
-    if cache:
-        # the source df rides in the value to pin its lifetime — an
-        # id()-keyed entry must never outlive the object it keys
-        _IVF_CACHE[key] = (embeddings, assigned, centers)
-    return assigned, centers
-
-
 def ivf_write(embeddings: DataFrame, path: str, n_cells: int = 8,
               seed: int = 42, max_iter: int = 5) -> None:
     """Persist the IVF index AT REST: the corpus cell-partitioned on
@@ -1063,7 +1034,7 @@ def q_knn_ivf(embeddings: DataFrame, query_vec_id: int | None = QUERY_VEC_ID,
     scoring is the 4-dp float cosine of q_embed_neardup. Every stage
     of the declared pipeline therefore unrolls into the DuckDB
     oracle. The MLlib float path stays available through
-    ivf_build/ivf_search for probes that want engine-native KMeans.
+    ivf_index/ivf_search for probes that want engine-native KMeans.
 
     Search-only at steady state: the index covers the FULL corpus (so
     it is query-independent and cacheable) and the query vector
@@ -1306,30 +1277,6 @@ SEMDEDUP_CELL_TARGET = 256  # target vectors per cell — bounds the gemm
 # cell count the two-level quantizer takes over: O(n·√k) total.
 SEMDEDUP_FLAT_MAX_CELLS = 64
 
-_HIER_CACHE: dict[tuple, tuple] = {}
-
-
-_PC_CACHE: dict[tuple, tuple] = {}
-
-
-def portable_fit_cache_clear(n_cells: int | None = None) -> int:
-    """Evict portable-Lloyd fit memo entries (all, or one ``n_cells``),
-    unpersisting their assignment frames. Exists for MEASUREMENT: the
-    bench clears q_knn_ivf's entry before each timed pass so its
-    min-of-2 prices a COLD build+search like every other query (r12
-    verdict item 4), instead of pass 2 serving from the warm index.
-    The serving model itself (build once / search many) is unchanged —
-    this is never called on a query path."""
-    keys = [k for k in _PC_CACHE if n_cells is None or k[1] == n_cells]
-    for k in keys:
-        assigned = _PC_CACHE.pop(k)[0]
-        try:
-            assigned.unpersist()
-        except Exception:
-            pass
-    return len(keys)
-
-
 def portable_cells_centers(embeddings: DataFrame, n_cells: int,
                            iters: int = KMEANS_ITERS):
     """Flat cell assignment by ENGINE-EXACT integer Lloyd — the
@@ -1365,19 +1312,19 @@ def portable_cells_centers(embeddings: DataFrame, n_cells: int,
     (the q_kmeans parity bound, documented there).
 
     The Lloyd rounds run EAGER driver-synced jobs at build time (the
-    sanctioned bounded-collect loop); results memoize per (input
-    files, n_cells, iters) — the ivf_build discipline — so a
-    bench/selfcheck session pays each fit once, not per reference.
-    The fit is fully deterministic (seedless: min-vec_id seeding), so
-    the cache can never serve a stale-seed answer.
+    sanctioned bounded-collect loop); results memoize in ``memo`` per
+    (table fingerprint, n_cells, iters), so a bench/selfcheck session
+    pays each fit once per table version, not per reference. The fit
+    is fully deterministic (seedless: min-vec_id seeding), so the memo
+    can never serve a stale-seed answer.
     """
+    return memo.lookup(embeddings, ("portable_cells", n_cells, iters),
+                       lambda: _portable_fit(embeddings, n_cells, iters))
+
+
+def _portable_fit(embeddings: DataFrame, n_cells: int, iters: int):
     import numpy as np
     import pandas as pd
-
-    files = tuple(sorted(embeddings.inputFiles()))
-    key = (files or ("obj", id(embeddings)), n_cells, iters)
-    if key in _PC_CACHE:
-        return _PC_CACHE[key][:2]
 
     e = _as_double(embeddings)
     q = e.select(
@@ -1428,10 +1375,6 @@ def portable_cells_centers(embeddings: DataFrame, n_cells: int,
     assigned = q.mapInPandas(assigner(centers, True),
                              "vec_id bigint, cell int, "
                              "embedding array<double>").persist()
-    # Pin the source frame in the value: an id()-keyed entry must never
-    # outlive the object it keys (the _IVF_CACHE discipline), else CPython
-    # id reuse could serve a different in-memory frame stale results.
-    _PC_CACHE[key] = (assigned, centers, embeddings)
     return assigned, centers
 
 
@@ -1466,21 +1409,26 @@ def semdedup_cells(embeddings: DataFrame, n_cells: int,
     (n/√k rows — 500k rows / 28 groups ≈ 18k×64 doubles ≈ 9 MB at the
     measured 100× corpus); corpora big enough to outgrow that deepen
     the hierarchy by one more level, same recurrence.
+
+    Only the fine assignment is persisted, memoized in ``memo`` per
+    (table fingerprint, n_cells, seed, max_iter).
     """
+    return memo.lookup(
+        embeddings, ("semdedup_cells", n_cells, seed, max_iter),
+        lambda: _semdedup_fit(embeddings, n_cells, seed, max_iter))
+
+
+def _semdedup_fit(embeddings: DataFrame, n_cells: int, seed: int,
+                  max_iter: int) -> DataFrame:
     import math as _math
 
     import numpy as np
     import pandas as pd
 
-    files = tuple(sorted(embeddings.inputFiles()))
-    key = (files or ("obj", id(embeddings)), n_cells, seed, max_iter)
-    if key in _HIER_CACHE:
-        return _HIER_CACHE[key][1]
-
     g = max(2, _math.ceil(_math.sqrt(n_cells)))
     fine = max(1, _math.ceil(n_cells / g))
-    coarse, _ = ivf_build(embeddings, n_cells=g, seed=seed,
-                          max_iter=max_iter, cache=False)
+    coarse, _ = ivf_index(embeddings, n_cells=g, seed=seed,
+                          max_iter=max_iter)
     coarse = coarse.withColumnRenamed("cell", "grp")
 
     def fine_assign(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1510,14 +1458,12 @@ def semdedup_cells(embeddings: DataFrame, n_cells: int,
             "cell": (grp * fine + a).astype(np.int32),
         })
 
-    assigned = (coarse.select("vec_id", "embedding", "grp")
-                .groupBy("grp")
-                .applyInPandas(
-                    fine_assign,
-                    "vec_id bigint, embedding array<double>, cell int")
-                .persist())
-    _HIER_CACHE[key] = (embeddings, assigned)
-    return assigned
+    return (coarse.select("vec_id", "embedding", "grp")
+            .groupBy("grp")
+            .applyInPandas(
+                fine_assign,
+                "vec_id bigint, embedding array<double>, cell int")
+            .persist())
 
 
 def q_semdedup(embeddings: DataFrame, n_cells: int | None = None,
@@ -1556,9 +1502,9 @@ def q_semdedup(embeddings: DataFrame, n_cells: int | None = None,
     exclusive-run trend table: 3.1 s at 10× with sized cells (8→79) vs
     12.5 s fixed at 8. Per-task memory is one cell; one shuffle keys
     vectors by cell (applyInPandas group); nothing returns to the
-    driver but the tiny centroid list, and the flat fit memoizes
-    through portable_cells' (input files, params) cache so repeated
-    calls on the same table pay only the column-pruned count(). The
+    driver but the tiny centroid list, and both fits memoize in
+    ``memo`` per (table fingerprint, params) so repeated calls on the
+    same table pay only the column-pruned count(). The
     ``seed`` parameter applies to the TWO-LEVEL path only — the flat
     integer Lloyd is deliberately seedless (min-vec_id seeding is
     part of its cross-engine determinism contract).
@@ -1615,7 +1561,7 @@ def q_semdedup(embeddings: DataFrame, n_cells: int | None = None,
         })
 
     out = (
-        # embedding is already array<double>: ivf_build -> _as_double
+        # embedding is already array<double>: both quantizers emit it
         assigned.select("vec_id", "cell", "embedding")
         .groupBy("cell")
         .applyInPandas(prune,
@@ -2185,7 +2131,7 @@ def q_jl_eval(embeddings: DataFrame,
     # eagerly trigger a job at plan-construction time (queries()
     # builders must stay lazy — the one sanctioned exception is a
     # bounded-collect iterative FIT like portable_cells_centers /
-    # ivf_build, whose O(K) driver sync is the algorithm, memoized
+    # semdedup_cells, whose O(K) driver sync is the algorithm, memoized
     # so a session pays it once) and raise on an empty table, while
     # the oracle SQL pins the same constant in its range() — using
     # one shared constant keeps operator and oracle in lockstep

@@ -11,11 +11,12 @@ Catalyst pushes predicates and prunes columns down to the parquet reader
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from movie_rec_spark import memo
 
 TABLES = (
     "region",
@@ -36,45 +37,17 @@ DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-@lru_cache(maxsize=256)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark can't map those
-    natively, so they're read as int64 (nanosAsLong) and converted.
-
-    ``path`` may be a single file (the driver fixtures) or a
-    directory-shaped table (anything Spark wrote — the normal lakehouse
-    layout); for a directory the schema comes from its first part file
-    (parquet tables are schema-uniform by contract)."""
-    if os.path.isdir(path):
-        parts = sorted(
-            f for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_")))
-        if not parts:
-            return ()
-        path = os.path.join(path, parts[0])
-    schema = pq.read_schema(path)
-    return tuple(
-        f.name for f in schema
-        if str(f.type).startswith("timestamp[ns")
-    )
-
-
-@lru_cache(maxsize=256)
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count of a catalog table from parquet FOOTER metadata —
-    no Spark job, no scan, memoized per (sf_dir, table). The cheap
-    answer for operators that need corpus size only to SIZE themselves
-    (LSH auto-sizing, SemDeDup cell count): a ``df.count()`` on the
-    query path costs a full (column-pruned) scan per invocation, which
-    bench measured at +0.4 s on q_neardup_lsh. Parquet tables are
-    immutable here, so the memo never goes stale."""
+    no Spark job, no scan, memoized per table fingerprint (``memo``), so
+    a table rewritten in place is counted afresh. The cheap answer for
+    operators that need corpus size only to SIZE themselves (LSH
+    auto-sizing, SemDeDup cell count): a ``df.count()`` on the query
+    path costs a full (column-pruned) scan per invocation, which bench
+    measured at +0.4 s on q_neardup_lsh."""
     path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_")))
-    return pq.ParquetFile(path).metadata.num_rows
+    return memo.lookup(path, ("rows",), lambda: sum(
+        pq.ParquetFile(f).metadata.num_rows for f in memo.part_files(path)))
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -111,14 +84,17 @@ def _ship_package(spark: SparkSession) -> None:
     sc._movie_rec_spark_shipped = True
 
 
-# Analyzed Spark schema per table PATH, filled on first read. Catalog
-# tables are immutable driver fixtures (same contract as the
-# table_rows footer memo above), so the schema never goes stale; a
-# schema-supplied read skips the JVM's footer-inference pass, which
-# profiling measured at ~80 ms per spark.read.parquet call — the
-# single largest slice of the per-query driver-side floor (a query
-# loading 4 tables paid ~320 ms before its first job).
-_SCHEMA_CACHE: dict[str, object] = {}
+def _read_schema(spark: SparkSession, path: str):
+    """(analyzed Spark schema, TIMESTAMP(NANOS) columns) of a table;
+    the ns columns come from the first part file's footer (parquet
+    tables are schema-uniform by contract)."""
+    parts = memo.part_files(path)
+    ts_cols = tuple(
+        f.name for f in (pq.read_schema(parts[0]) if parts else ())
+        if str(f.type).startswith("timestamp[ns"))
+    if ts_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path).schema, ts_cols
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -131,22 +107,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     floor-truncated to microseconds (``ts div 1000`` — integer division;
     a double division would lose precision at 1e18 ns). DuckDB performs
     the same floor-truncation when reading ns parquet, so values match.
+
+    The analyzed schema is memoized per table fingerprint (``memo``),
+    so a rewritten table is re-inferred; a schema-supplied read skips
+    the ~80 ms footer-inference pass of ``spark.read.parquet``.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ship_package(spark)
     path = f"{sf_dir}/{name}.parquet"
-    ts_cols = _nanos_ts_columns(path)
+    schema, ts_cols = memo.lookup(path, ("schema",),
+                                  lambda: _read_schema(spark, path))
     if ts_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        # first read infers (under the nanosAsLong conf set above) and
-        # memoizes the ANALYZED schema; later reads supply it explicitly
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-    else:
-        df = spark.read.schema(sch).parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     for c in ts_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df

@@ -1,0 +1,107 @@
+"""The library's one memo: bounded, fingerprint-keyed, and it releases
+the frames it holds."""
+
+from __future__ import annotations
+
+import gc
+import sys
+import threading
+import weakref
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark import StorageLevel
+
+from movie_rec_spark import memo
+
+
+@pytest.fixture
+def table(tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    memo.clear()
+    yield path
+    memo.clear()
+
+
+def _fill(path, n):
+    """Insert ``n`` fresh entries keyed on ``path``."""
+    for i in range(n):
+        memo.lookup(path, ("fill", i), lambda i=i: i)
+
+
+def test_size_stays_within_bound(table):
+    _fill(table, memo.MAX_ENTRIES + 5)
+    assert len(memo._entries) == memo.MAX_ENTRIES
+    # the least recently used entry went first; the newest stays
+    newest = memo.MAX_ENTRIES + 4
+    assert memo.lookup(table, ("fill", newest), lambda: "new") == newest
+    assert memo.lookup(table, ("fill", 0), lambda: "rebuilt") == "rebuilt"
+
+
+def test_eviction_unpersists_the_value(spark, table):
+    df = spark.range(3).persist()
+    assert memo.lookup(table, ("persisted",), lambda: (df, [1]))[0] is df
+    _fill(table, memo.MAX_ENTRIES - 1)
+    assert df.storageLevel != StorageLevel.NONE
+    _fill(table, memo.MAX_ENTRIES)
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_clear_unpersists_everything(spark, table):
+    frames = [spark.range(i + 1).persist() for i in range(3)]
+    for i, df in enumerate(frames):
+        memo.lookup(table, ("persisted", i), lambda df=df: df)
+    memo.clear()
+    assert not memo._entries
+    assert all(df.storageLevel == StorageLevel.NONE for df in frames)
+
+
+def test_identity_keyed_frame_is_pinned(spark, table):
+    df = spark.range(1)
+    alive = weakref.ref(df)
+    memo.lookup(df, ("pinned",), lambda: "first")
+    del df
+    gc.collect()
+    assert alive() is not None
+    # each short-lived frame gets its own entry: no id() is reused while
+    # the entry keyed by it exists
+    for i in range(2 * memo.MAX_ENTRIES):
+        assert memo.lookup(spark.range(1), ("pinned",), lambda i=i: i) == i
+
+
+def test_rewritten_file_gets_a_new_key(spark, table):
+    assert memo.lookup(spark.read.parquet(table), ("v",), lambda: 1) == 1
+    assert memo.lookup(spark.read.parquet(table), ("v",), lambda: 2) == 1
+    pq.write_table(pa.table({"a": [1, 2, 3]}), table)
+    assert memo.lookup(spark.read.parquet(table), ("v",), lambda: 3) == 3
+
+
+def test_concurrent_lookups_keep_the_bound_and_their_keys(table):
+    n_keys, errors = memo.MAX_ENTRIES + 8, []
+
+    def worker(t):
+        try:
+            for i in range(3000):
+                j = (i * 7 + t) % n_keys
+                got = memo.lookup(table, ("stress", j), lambda j=j: j)
+                if got != j:
+                    errors.append((j, got))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,))
+                   for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(memo._entries) <= memo.MAX_ENTRIES

@@ -10,7 +10,6 @@ import dataclasses
 import datetime as dt
 import sys
 import threading
-import uuid
 
 import pyarrow as pa
 import pytest
@@ -18,6 +17,7 @@ from hypothesis import example, given
 from hypothesis import strategies as st
 
 from hyp import SLOW
+from spark_jobs import jobs_launched
 from pyspark.sql import functions as F
 
 from movie_rec_spark import schemas
@@ -255,27 +255,13 @@ def test_each_result_serves_its_own_snapshot(spark, tmp_path):
     assert dataclasses.replace(new).serving_index is not new.serving_index
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under a fresh job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_serving_runs_no_spark_job_per_request(spark):
     result = literal_result(
         spark, seen=[(1, 0)], recs=[(1, 2, 5.0), (1, 3, 4.0)],
         stats=[(m, 10 - m) for m in range(6)])
     result.serving_index  # the one-off load runs its Arrow reads here
     # the counter sees the Spark overlay's jobs ...
-    assert _jobs_launched(
+    assert jobs_launched(
         spark, lambda: overlay_reference(result, 1, 4).collect()) > 0
 
     # ... and none from serving, collect included
@@ -283,4 +269,4 @@ def test_serving_runs_no_spark_job_per_request(spark):
         for u, n in ((1, 4), (2, 3), (99, 10), (1, 1), (1, 0)):
             serve_recommendations(result, u, n).collect()
 
-    assert _jobs_launched(spark, requests) == 0
+    assert jobs_launched(spark, requests) == 0

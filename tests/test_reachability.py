@@ -41,8 +41,8 @@ KEPT = {
     # Test-only as well and not yet triaged: each still needs a caller
     # on a measured or declared path, or deletion with its tests.
     "exclude_seen": "seen-pair anti-join; the ALS ranking tests use it",
-    "ivf_write": "persisted IVF index, the at-rest form of ivf_build",
-    "ivf_read": "persisted IVF index, the at-rest form of ivf_build",
+    "ivf_write": "persisted IVF index, the at-rest form of ivf_index",
+    "ivf_read": "persisted IVF index, the at-rest form of ivf_index",
     "ivf_search": "probe search over a persisted IVF index",
     "ivf_append": "persisted IVF index upkeep",
     "ivf_drift": "persisted IVF index upkeep",

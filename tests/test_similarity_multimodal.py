@@ -8,8 +8,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from movie_rec_spark import memo
 from movie_rec_spark.operators import multimodal as MM
 from movie_rec_spark.operators import similarity as S
+from spark_jobs import jobs_launched
 
 
 def _emb(spark, vecs):
@@ -110,16 +112,24 @@ def test_ivf_at_rest_prunes_partitions(spark, sf_emb, tmp_path):
            [r.vec_id for r in in_mem.collect()]
 
 
-def test_ivf_build_is_cached_across_queries(spark, sf_emb):
+def test_q_knn_ivf_reuses_memoized_fit(spark, sf_emb):
     """Second q_knn_ivf on the same table must be search-only: the
-    KMeans fit happens once and the cached index serves every query."""
-    S._IVF_CACHE.clear()
-    first = S.q_knn_ivf(sf_emb, query_vec_id=0).collect()
-    fits_after_first = S._IVF_FIT_COUNT
-    again = S.q_knn_ivf(sf_emb, query_vec_id=0).collect()
+    integer-Lloyd fit (a seed collect plus KMEANS_ITERS - 1 rounds, each
+    at least one job) runs once and the memoized index serves every
+    query."""
+    memo.clear()
+    runs = []
+
+    def search():
+        runs.append([r.vec_id for r in
+                     S.q_knn_ivf(sf_emb, query_vec_id=0).collect()])
+
+    fit_and_search = jobs_launched(spark, search)
+    search_only = jobs_launched(spark, search)
+    assert search_only <= fit_and_search - S.KMEANS_ITERS, (
+        fit_and_search, search_only)
+    assert runs[0] == runs[1]
     other_query = S.q_knn_ivf(sf_emb, query_vec_id=7).collect()
-    assert S._IVF_FIT_COUNT == fits_after_first, "cache hit must not re-fit"
-    assert [r.vec_id for r in first] == [r.vec_id for r in again]
     assert len(other_query) == 10
     assert all(r.vec_id != 7 for r in other_query)
 
@@ -396,10 +406,18 @@ def test_semdedup_hierarchical_path_contract(spark, sf_emb):
         if not r.keep:
             assert r.dup_of < r.vec_id and cell[r.dup_of] == cell[r.vec_id]
             assert (r.dup_of, r.vec_id) in exact
-    # determinism: a cache-bypassing second build agrees exactly
-    S._HIER_CACHE.clear()
+    # determinism: a memo-bypassing second build agrees exactly
+    memo.clear()
     again = S.q_semdedup(sf_emb, n_cells=n_cells).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
+
+
+def _grid_vectors(spark):
+    """600 8-dim vectors on a small integer grid, as an in-memory frame."""
+    rows = [(i, [float((i * 37 + j * 11) % 13) for j in range(8)])
+            for i in range(600)]
+    return spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>")
 
 
 def test_semdedup_hierarchical_groups_are_bounded_tasks(spark):
@@ -408,17 +426,26 @@ def test_semdedup_hierarchical_groups_are_bounded_tasks(spark):
     (cell // fine == grp), so per-task memory is the coarse group —
     the n/√k contract the docstring claims."""
     import math
-    rows = [(i, [float((i * 37 + j * 11) % 13) for j in range(8)])
-            for i in range(600)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     n_cells = 81
     g = max(2, math.ceil(math.sqrt(n_cells)))
     fine = max(1, math.ceil(n_cells / g))
-    assigned = S.semdedup_cells(df, n_cells=n_cells, seed=7)
+    assigned = S.semdedup_cells(_grid_vectors(spark), n_cells=n_cells,
+                                seed=7)
     cells = [r.cell for r in assigned.select("cell").collect()]
     assert all(0 <= c < g * fine for c in cells)
     # more than one coarse block must actually be populated
     assert len({c // fine for c in cells}) > 1
+
+
+def test_semdedup_cells_leaves_no_persisted_frame_behind(spark):
+    """Only the memoized fine assignment stays persisted: once the memo
+    is cleared, Spark's cache holds nothing from the build (the coarse
+    assignment is never persisted)."""
+    memo.clear()
+    spark.catalog.clearCache()
+    S.semdedup_cells(_grid_vectors(spark), n_cells=81, seed=7).count()
+    memo.clear()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_pq_knn_separates_planted_groups(spark):

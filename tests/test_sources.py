@@ -5,6 +5,9 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import (
     IntegerType,
@@ -15,6 +18,7 @@ from pyspark.sql.types import (
 
 from movie_rec_spark.sources import csv as C
 from movie_rec_spark.sources import kv as KV
+from movie_rec_spark.sources.catalog import load_table, table_rows
 
 
 def test_read_ratings_csv(spark, tmp_path):
@@ -55,6 +59,45 @@ def test_read_quoted_csv_multiline(spark, tmp_path):
     assert out[1].title == "Comma, The Movie"
     assert out[1].description == "line one\nline two"
     assert out[2].title == 'Quote "inner" title'
+
+
+NS = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999,
+      1_700_000_002_999_999_999]
+
+
+@pytest.mark.parametrize("case", ["new_column", "row_count",
+                                  "nanos_column", "spark_directory"])
+def test_table_rewritten_in_place_is_read_afresh(spark, tmp_path, case):
+    """A table rewritten at the same path is read with its new schema and
+    counted afresh: no memoized schema, row count or ns-column list of
+    the old version is served."""
+    sf_dir, path = str(tmp_path), str(tmp_path / "region.parquet")
+    old = {"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}
+    new = {"r_regionkey": [0, 1, 2], "r_name": ["AFRICA", "ASIA", "EUROPE"],
+           "r_comment": (pa.array(NS, pa.timestamp("ns"))
+                         if case == "nanos_column" else ["a", "b", "c"])}
+
+    def write(cols):
+        if case == "spark_directory":
+            (spark.createDataFrame(pa.table(cols).to_pandas())
+             .write.mode("overwrite").parquet(path))
+        else:
+            pq.write_table(pa.table(cols), path)
+
+    write(old)
+    assert load_table(spark, sf_dir, "region").columns == list(old)
+    assert table_rows(sf_dir, "region") == 2
+    write(new)
+    df = load_table(spark, sf_dir, "region")
+    if case == "row_count":
+        assert table_rows(sf_dir, "region") == 3
+    elif case == "nanos_column":
+        micros = df.orderBy("r_regionkey").selectExpr(
+            "unix_micros(r_comment)").collect()
+        assert [r[0] for r in micros] == [n // 1000 for n in NS]
+    else:
+        assert df.columns == list(new)
+        assert sorted(r.r_comment for r in df.collect()) == ["a", "b", "c"]
 
 
 def test_kv_roundtrip_with_batching(spark, tmp_path):
