@@ -114,20 +114,6 @@ def recommend_top_n(model, n: int = TOP_N) -> DataFrame:
     )
 
 
-def exclude_seen(recs: DataFrame, seen: DataFrame) -> DataFrame:
-    """Drop (user, item) pairs the user already interacted with and
-    re-rank densely — the standard leave-one-out evaluation protocol
-    (and the serving contract: never recommend what's in the history).
-    One anti join + one per-user rank window, both on user_id."""
-    from pyspark.sql.window import Window
-
-    kept = recs.join(seen.select("user_id", "item_id"),
-                     ["user_id", "item_id"], "left_anti")
-    w = Window.partitionBy("user_id").orderBy("rank")
-    return kept.withColumn("rank",
-                           F.row_number().over(w).cast("int"))
-
-
 def evaluate_ranking(recs: DataFrame, test: DataFrame,
                      k: int = 10) -> dict:
     """Top-K ranking metrics — the evaluation a recommender actually
@@ -323,7 +309,8 @@ def q_als_audit(lineitem: DataFrame, orders: DataFrame,
     serving path under engine-portable pseudo-factors — score every
     (sampled user, sampled item) pair by the rank-AUDIT_K integer dot
     product, clamp (ML5), quantize onto the AUDIT_GRID, drop seen
-    pairs (the exclude_seen contract), and keep each user's dense
+    pairs (the serving contract: never recommend what's in the
+    history), and keep each user's dense
     top-``n`` by (score DESC, item_id).
 
     Output: (user_id, item_id, pred_q, rank), ordered by

@@ -733,17 +733,12 @@ CC_ROUNDS: dict[str, int] = {}
 # labels in milliseconds). 2M edges is ~32 MB of id pairs — trivially
 # within one task's memory anywhere. Scale-adaptive, not local-tuned:
 # a 100 TB corpus's near-dup graph exceeds the cap and takes the
-# iterative path unchanged. MRS_CC_LOCAL_EDGES overrides for cluster
-# tuning (0 disables the local path).
+# iterative path unchanged.
 CC_LOCAL_EDGE_CAP = 2_000_000
 
 
 def _cc_effective_cap(local_edge_cap: int | None) -> int:
-    if local_edge_cap is not None:
-        return local_edge_cap
-    import os
-
-    return int(os.environ.get("MRS_CC_LOCAL_EDGES", CC_LOCAL_EDGE_CAP))
+    return CC_LOCAL_EDGE_CAP if local_edge_cap is None else local_edge_cap
 
 
 def _cc_local_labels(edges: DataFrame, a: str, b: str) -> DataFrame | None:

@@ -36,8 +36,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_REPORT_COLS = ("constraint_name", "kind", "n_rows", "violations", "passed")
-
 
 def not_null(col: str, name: str | None = None) -> dict:
     return {"kind": "not_null", "col": col,

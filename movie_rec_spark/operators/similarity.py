@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from movie_rec_spark import memo
 from movie_rec_spark.functions import cosine
-from movie_rec_spark.localdf import local_df
 
 KNN_K = 10
 NEARDUP_THRESHOLD = 0.4
@@ -409,7 +408,7 @@ def q_kmeans(embeddings: DataFrame, k: int = KMEANS_K,
     # as the loop below does. Gate = corpus count (parquet metadata at
     # any scale) x the corpus dim contract — conservative for narrower
     # test vectors, and a 100 TB corpus takes the unchanged rounds.
-    cap = _pq_effective_cap(None)
+    cap = PQ_LOCAL_POINT_CAP
     if cap and e.count() * EMBED_DIM <= cap:
         pts_ck = _pq_split(pts, 1 << 30).localCheckpoint(eager=True)
         seed_ids = [r[0] for r in seeds.collect()]   # bounded: k rows
@@ -979,43 +978,6 @@ def ivf_index(embeddings: DataFrame, n_cells: int = 8,
     return assigned, centers
 
 
-def ivf_write(embeddings: DataFrame, path: str, n_cells: int = 8,
-              seed: int = 42, max_iter: int = 5) -> None:
-    """Persist the IVF index AT REST: the corpus cell-partitioned on
-    disk (``path/cell=i/``) plus a tiny sibling centers table. A probe
-    filter ``cell IN (...)`` then becomes PARTITION PRUNING at the scan
-    — a search over nprobe/n_cells of the corpus reads only those
-    directories, which is how an ANN index over 100 TB of embeddings
-    serves without touching the other cells' files at all (verified by
-    inputFiles in tests). Rebuild cadence is an offline concern, same
-    as any secondary index."""
-    assigned, centers = ivf_index(embeddings, n_cells, seed, max_iter)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    spark = embeddings.sparkSession
-    local_df(
-        spark, [(i, c) for i, c in enumerate(centers)],
-        "cell int, center array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "_centers")
-
-
-def ivf_read(spark, path: str, with_deltas: bool = False):
-    """Load a persisted IVF index: (cell-partitioned assigned frame,
-    centers list). Centers are driver-tiny by construction (n_cells
-    rows). ``with_deltas=True`` unions the streaming append deltas
-    (``ivf_append_stream``) so searches see not-yet-compacted vectors;
-    every part keeps its own cell partitioning, so a probe's
-    ``cell IN (...)`` filter prunes directories in the base AND in each
-    delta alike."""
-    assigned = spark.read.parquet(path)
-    if with_deltas:
-        for d in _list_delta_dirs(spark, path):
-            assigned = assigned.unionByName(
-                spark.read.option("basePath", d).parquet(d))
-    rows = spark.read.parquet(path + "_centers").collect()
-    centers = [r.center for r in sorted(rows, key=lambda r: r.cell)]
-    return assigned, centers
-
-
 def q_knn_ivf(embeddings: DataFrame, query_vec_id: int | None = QUERY_VEC_ID,
               k: int = KNN_K, n_cells: int = 8,
               nprobe: int = 3,
@@ -1033,8 +995,7 @@ def q_knn_ivf(embeddings: DataFrame, query_vec_id: int | None = QUERY_VEC_ID,
     float-cosine probe order was ulp-fragile), and within-cell
     scoring is the 4-dp float cosine of q_embed_neardup. Every stage
     of the declared pipeline therefore unrolls into the DuckDB
-    oracle. The MLlib float path stays available through
-    ivf_index/ivf_search for probes that want engine-native KMeans.
+    oracle.
 
     Search-only at steady state: the index covers the FULL corpus (so
     it is query-independent and cacheable) and the query vector
@@ -1083,187 +1044,6 @@ def q_knn_ivf(embeddings: DataFrame, query_vec_id: int | None = QUERY_VEC_ID,
         .orderBy(F.desc("sim"), F.asc("vec_id"))
         .limit(k)
     )
-
-
-def ivf_search(assigned: DataFrame, centers: list[list[float]],
-               query: list[float], k: int = KNN_K,
-               nprobe: int = 2, exclude_id: int | None = None) -> DataFrame:
-    """Probe the nprobe nearest cells only — scoring cost drops by
-    ~n_cells/nprobe vs brute force; recall tested vs q_knn_brute."""
-    def cos_py(u: list[float], v: list[float]) -> float:
-        d = sum(x * y for x, y in zip(u, v))
-        nu = math.sqrt(sum(x * x for x in u)) or 1.0
-        nv = math.sqrt(sum(x * x for x in v)) or 1.0
-        return d / (nu * nv)
-
-    order = sorted(range(len(centers)),
-                   key=lambda i: -cos_py(centers[i], query))
-    probe = order[:nprobe]
-    scored = assigned.filter(F.col("cell").isin(probe))
-    if exclude_id is not None:
-        scored = scored.filter(F.col("vec_id") != exclude_id)
-    qcol = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        scored
-        .select("vec_id",
-                F.round(cosine(F.col("embedding"), qcol), 4).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ivf_assign(embeddings: DataFrame,
-               centers: list[list[float]]) -> DataFrame:
-    """Assign each vector to its nearest center (squared Euclidean —
-    the same objective KMeans minimizes, so assignments agree with a
-    ``transform`` by the fitted model). Pure codegen expressions: the
-    centers ride as an array-of-structs literal (n_cells·dim doubles —
-    driver-tiny), distance per center is a fused zip_with/aggregate,
-    and argmin is array_min over (dist, cell) structs (lexicographic
-    struct order = min distance, ties to the lower cell id). Map-only:
-    no shuffle, no Python."""
-    centers_lit = F.array(*[
-        F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda a, x: a + x).alias("sqdist"),
-            F.lit(i).alias("cell"),
-        )
-        for i, c in enumerate(centers)])
-    best = F.array_min(centers_lit)
-    return (_as_double(embeddings)
-            .withColumn("_best", best)
-            .withColumn("cell", F.col("_best.cell"))
-            .withColumn("_sqdist", F.col("_best.sqdist"))
-            .drop("_best"))
-
-
-def ivf_append(spark, path: str, new_embeddings: DataFrame) -> dict:
-    """Incremental maintenance of a persisted IVF index (``ivf_write``
-    layout): assign NEW vectors to the EXISTING centers and append them
-    cell-partitioned — no refit, no touch of resident cells' files;
-    searches see the new vectors immediately via the same partition
-    pruning.
-
-    The returned ``mean_sqdist`` is the drift signal: appended batches
-    drawn from the build-time distribution score ≈ the index-wide
-    ``ivf_drift``; a rising trend means the centers no longer describe
-    the data and an offline rebuild (``ivf_write``) is due — the
-    standard freshness contract of every ANN index (build once, append
-    cheaply, refit on drift)."""
-    rows = spark.read.parquet(path + "_centers").collect()
-    centers = [r.center for r in sorted(rows, key=lambda r: r.cell)]
-    assigned = ivf_assign(new_embeddings, centers)
-    stats = assigned.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("_sqdist"), 6).alias("d")).collect()[0]
-    if not stats.n:  # empty batch: nothing to write, no drift sample
-        return {"appended": 0, "mean_sqdist": 0.0}
-    (assigned.drop("_sqdist")
-     .write.mode("append").partitionBy("cell").parquet(path))
-    return {"appended": int(stats.n), "mean_sqdist": float(stats.d)}
-
-
-def ivf_drift(spark, path: str) -> float:
-    """Index-wide mean squared distance to the assigned centers — the
-    baseline ``ivf_append``'s per-batch drift signal compares against.
-    One map-only scan of the index."""
-    rows = spark.read.parquet(path + "_centers").collect()
-    centers = [r.center for r in sorted(rows, key=lambda r: r.cell)]
-    idx = spark.read.parquet(path).drop("cell")
-    return float(ivf_assign(idx, centers)
-                 .agg(F.round(F.avg("_sqdist"), 6)).collect()[0][0])
-
-
-def ivf_delta_dir(path: str) -> str:
-    return path + "__delta"
-
-
-def _list_delta_dirs(spark, path: str) -> list[str]:
-    """batch_* delta dirs under the index's delta root, via the Hadoop
-    FileSystem API (works on HDFS/S3, not just local disk)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(ivf_delta_dir(path))
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_"):
-            out.append(str(st.getPath()))
-    return sorted(out)
-
-
-def ivf_append_batch(spark, path: str, batch: DataFrame,
-                     batch_id: int) -> dict:
-    """Replay-safe streaming form of ``ivf_append``: the batch's
-    assigned rows land in their OWN ``__delta/batch_N`` dir with
-    mode=overwrite, so a replayed micro-batch overwrites its previous
-    (possibly partial) attempt instead of double-appending — the same
-    idempotent-by-batch_id recipe as streaming/ingest. Cell
-    partitioning inside the delta keeps probe-side partition pruning."""
-    rows = spark.read.parquet(path + "_centers").collect()
-    centers = [r.center for r in sorted(rows, key=lambda r: r.cell)]
-    assigned = ivf_assign(batch, centers)
-    stats = assigned.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("_sqdist"), 6).alias("d")).collect()[0]
-    (assigned.drop("_sqdist")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{ivf_delta_dir(path)}/batch_{batch_id}"))
-    return {"batch_id": batch_id, "appended": int(stats.n),
-            "mean_sqdist": float(stats.d)}
-
-
-def ivf_append_stream(spark, stream: DataFrame, path: str,
-                      checkpoint_dir: str) -> list[dict]:
-    """Stream embeddings into the persisted IVF index via foreachBatch;
-    returns per-batch append/drift summaries (the drift trend is the
-    rebuild scheduler's input). Use ``ivf_read(…, with_deltas=True)``
-    to search base + deltas; fold deltas into the base offline with
-    ``ivf_compact_deltas`` (stream stopped — same committed-only rule
-    as ``streaming.ingest.compact_state``)."""
-    log: list[dict] = []
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if not batch.isEmpty():
-            log.append(ivf_append_batch(
-                batch.sparkSession, path, batch, batch_id))
-
-    q = (stream.writeStream.foreachBatch(apply)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return log
-
-
-def ivf_compact_deltas(spark, path: str) -> dict:
-    """Fold the streaming delta dirs into the base index (plain
-    cell-partitioned append — cells are disjoint files, so resident
-    base files are untouched) and remove them. Offline only: run with
-    the append stream stopped, otherwise an uncommitted batch's delta
-    could be folded in and then replayed."""
-    deltas = _list_delta_dirs(spark, path)
-    if not deltas:
-        return {"folded": 0, "rows": 0}
-    df = spark.read.option("basePath", deltas[0]).parquet(deltas[0])
-    for d in deltas[1:]:
-        df = df.unionByName(
-            spark.read.option("basePath", d).parquet(d))
-    df = df.localCheckpoint(eager=True)
-    n = df.count()
-    df.write.mode("append").partitionBy("cell").parquet(path)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for d in deltas:
-        hp = jvm.org.apache.hadoop.fs.Path(d)
-        hp.getFileSystem(conf).delete(hp, True)
-    return {"folded": len(deltas), "rows": int(n)}
 
 
 SEMDEDUP_THRESHOLD = 0.4  # cosine cut matching the corpus's near-dup band
@@ -1641,7 +1421,7 @@ def q_hard_negatives(embeddings: DataFrame,
     shuffle), and the per-anchor top-k is one WindowGroupLimit window
     keyed on anchor_id. At corpus scale the candidate generator
     composes in front unchanged — mine from each anchor's IVF cell
-    (ivf_search) or LSH bucket instead of the full scan, then this
+    (q_knn_ivf's probe) or LSH bucket instead of the full scan, then this
     same label-filtered rank finishes.
     """
     e = _as_double(embeddings)
@@ -1768,16 +1548,8 @@ def _pq_split(pts: DataFrame, sub_dim: int) -> DataFrame:
 # trivially within one task. Scale-adaptive, not local-tuned: the gate
 # is the corpus row count × dim, so a 100 TB corpus takes the
 # distributed path unchanged without ever materializing the exploded
-# points. MRS_PQ_LOCAL_POINTS overrides (0 disables the local path).
+# points.
 PQ_LOCAL_POINT_CAP = 4_000_000
-
-
-def _pq_effective_cap(local_point_cap: int | None) -> int:
-    if local_point_cap is not None:
-        return local_point_cap
-    import os
-
-    return int(os.environ.get("MRS_PQ_LOCAL_POINTS", PQ_LOCAL_POINT_CAP))
 
 
 def _pq_local_kernel(pts_ck: DataFrame, seed_ids: list[int],
@@ -1880,7 +1652,8 @@ def _pq_train_encode(pts: DataFrame, seeds: DataFrame, iters: int,
     distributed rounds, so the 100 TB shape is untouched. The returned
     points frame is the materialized checkpoint on the local route —
     callers reuse it so the explode subtree runs once."""
-    cap = _pq_effective_cap(local_point_cap)
+    cap = (PQ_LOCAL_POINT_CAP if local_point_cap is None
+           else local_point_cap)
     if cap and n_pts is not None and n_pts <= cap:
         pts_ck = pts.localCheckpoint(eager=True)
         seed_ids = [r[0] for r in seeds.collect()]   # bounded: k rows
@@ -1980,8 +1753,8 @@ def q_ivfpq_knn(embeddings: DataFrame,
     n_cells rows of (sub, cid) codes joined to a broadcast
     n_probe·PQ_SUBS·PQ_K-row LUT. At 100 TB both codebooks train on a
     stable_bucket sample, n_cells grows to √n, and the per-cell code
-    lists are the parquet layout (cell-partitioned, as ivf_write
-    already demonstrates for plain IVF).
+    lists are the parquet layout (cell-partitioned, so a probe's
+    ``cell IN (...)`` filter becomes partition pruning at the scan).
 
     Reference analogue: none (SURVEY §2 has no ANN); the composition
     of q_pq_knn (memory) and q_knn_ivf (pruning), oracle-exact where
@@ -1991,7 +1764,7 @@ def q_ivfpq_knn(embeddings: DataFrame,
     # route gate (shared by both trainers): one cheap corpus count
     # bounds the exploded point rows without materializing them
     n_pts = e.count() * EMBED_DIM
-    cap = _pq_effective_cap(None)
+    cap = PQ_LOCAL_POINT_CAP
     use_local = bool(cap) and n_pts <= cap
     gpts = _grid_pts(e)
     full_dim = EMBED_DIM

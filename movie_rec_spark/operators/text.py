@@ -1043,7 +1043,8 @@ def q_chunk_knn(documents: DataFrame, query_chunk_id: int = 0,
     kernel (``knn_sparse`` — a chunk carries ≤CHUNK_TOKENS nonzero
     positions, so the former dense-array path paid ~6× the nonzero
     work; 57.9 → 5.4 s at the 30× retrieval_scale probe) — at corpus
-    scale the persisted-index path is ivf_write over chunk vectors.
+    scale the chunk vectors go through an IVF index (q_knn_ivf's
+    cell probe) instead of the full scan.
     """
     from movie_rec_spark.operators.dedup import chunk_rows
 
@@ -1276,12 +1277,11 @@ def q_bpe_merges(documents: DataFrame,
     convergence-scalar discipline), and one row-local string replace
     applying the merge. Rounds eager-checkpoint so plans stay flat.
     Size-adaptive (r12, the CC_LOCAL_EDGE_CAP doctrine): dicts under
-    ``local_word_cap`` (default BPE_LOCAL_WORD_CAP; env
-    MRS_BPE_LOCAL_WORDS, 0 disables) run the whole induction in ONE
-    single-task pass over the materialized dict — identical argmax/
-    replace semantics (see ``_bpe_local``) — instead of ``rounds``
-    driver-synchronized job batches; larger dicts take the unchanged
-    distributed loop.
+    ``local_word_cap`` (default BPE_LOCAL_WORD_CAP; 0 disables) run
+    the whole induction in ONE single-task pass over the materialized
+    dict — identical argmax/replace semantics (see ``_bpe_local``) —
+    instead of ``rounds`` driver-synchronized job batches; larger
+    dicts take the unchanged distributed loop.
 
     Determinism across engines: the argmax tie rule is (freq DESC,
     left ASC, right ASC); merge application is PLAIN (non-regex)
@@ -1318,17 +1318,12 @@ def q_bpe_merges(documents: DataFrame,
 # tokenizer vocabularies (~10^6 words after frequency collapse) fit,
 # which is exactly why classical BPE trainers are single-machine over
 # the dict. A corpus whose SPLIT dict exceeds the cap takes the
-# unchanged distributed loop. MRS_BPE_LOCAL_WORDS overrides
-# (0 disables the local path).
+# unchanged distributed loop.
 BPE_LOCAL_WORD_CAP = 2_000_000
 
 
 def _bpe_effective_cap(local_word_cap: int | None) -> int:
-    if local_word_cap is not None:
-        return local_word_cap
-    import os
-
-    return int(os.environ.get("MRS_BPE_LOCAL_WORDS", BPE_LOCAL_WORD_CAP))
+    return BPE_LOCAL_WORD_CAP if local_word_cap is None else local_word_cap
 
 
 def _bpe_word_dict(documents: DataFrame) -> DataFrame:

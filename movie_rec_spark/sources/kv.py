@@ -3,20 +3,17 @@
 The reference materializes recs/stats into Redis with pipelined SETs in
 chunks of REDIS_CHUNK_SIZE=1000 (estimator.py:81-102, statistics.py:39-60,
 web/config.py:21). The Spark-native equivalent is a partitioned table
-write; for true KV parity this module ships rows via ``foreachPartition``
-with client-side batching — one client per PARTITION, one flush per
-``batch_size`` keys, never a driver-side collect.
-
-The client is pluggable (``client_factory``); tests use
-``FileKVClient`` (one file per partition under a directory — same
-interface shape as a Redis pipeline: set / flush / close).
+write; for KV parity the registered ``kvfile`` data source below ships
+rows from each task with client-side batching — one client per task,
+one flush per ``batch_size`` keys, never a driver-side collect.
+``FileKVClient`` writes one file per task (same interface shape as a
+Redis pipeline: set / flush / close).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,12 +23,12 @@ BATCH_SIZE = 1000  # reference REDIS_CHUNK_SIZE (web/config.py:21)
 
 
 class FileKVClient:
-    """File-backed stand-in for a Redis pipeline (tests/local runs)."""
+    """File-backed stand-in for a Redis pipeline: appends to ``path``,
+    which is created on the first non-empty flush."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
+    def __init__(self, path: str):
         self._buf: list[tuple[str, str]] = []
-        self._path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.kv")
+        self._path = path
 
     def set(self, key: str, value: str) -> None:
         self._buf.append((key, value))
@@ -46,28 +43,6 @@ class FileKVClient:
 
     def close(self) -> None:
         self.flush()
-
-
-def write_kv(df: DataFrame, key_col: str, value_col: str,
-             client_factory: Callable[[], object],
-             batch_size: int = BATCH_SIZE) -> None:
-    """S9/S10: ship (key, value) rows to a KV store, batched per
-    partition. Executor-side only — the driver never sees the data."""
-    rows = df.select(F.col(key_col).alias("k"), F.col(value_col).alias("v"))
-
-    def per_partition(it):
-        client = client_factory()
-        n = 0
-        try:
-            for row in it:
-                client.set(str(row.k), str(row.v))
-                n += 1
-                if n % batch_size == 0:
-                    client.flush()
-        finally:
-            client.close()
-
-    rows.foreachPartition(per_partition)
 
 
 def encode_rec_list(recs: DataFrame, n: int = 20) -> DataFrame:
@@ -102,16 +77,14 @@ def decode_rec_list(kv: DataFrame) -> DataFrame:
     )
 
 
-# --- S9/S10 as a REGISTERED Spark-4 Python Data Source WRITER: the
-# foreachPartition path above ships rows but has no commit protocol —
-# a failed job leaves whatever partitions already flushed. The writer
-# below adds the all-or-nothing contract the API provides: tasks STAGE
-# their batches to uniquely-named files and return commit messages;
-# commit() publishes one _manifest.json naming exactly the staged
-# files (readers trust only manifested files, same atomic-publish
-# stance as sources/snapshot.py); abort() deletes the orphans. On a
-# real deployment the staged file becomes a Redis pipeline guarded by
-# a transactional rename-key or versioned-namespace flip.
+# --- S9/S10 as a REGISTERED Spark-4 Python Data Source WRITER with
+# the all-or-nothing contract the API provides: tasks STAGE their
+# batches to uniquely-named files and return commit messages; commit()
+# publishes one _manifest.json naming exactly the committed files
+# (readers trust only manifested files, same atomic-publish stance as
+# sources/snapshot.py); abort() deletes the orphans. On a real
+# deployment the staged file becomes a Redis pipeline guarded by a
+# transactional rename-key or versioned-namespace flip.
 
 import json as _json
 
@@ -123,21 +96,23 @@ from pyspark.sql.datasource import (  # noqa: E402
 
 
 class _KVCommit(WriterCommitMessage):
-    def __init__(self, filename: str, rows: int):
+    """``filename`` is None for a task that staged no rows."""
+
+    def __init__(self, filename: str | None, rows: int):
         self.filename = filename
         self.rows = rows
 
 
 class KVFileWriter(DataSourceWriter):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, overwrite: bool):
         self.path = options["path"]
         self.batch_size = int(options.get("batch_size", BATCH_SIZE))
+        self.overwrite = overwrite
 
     def write(self, iterator):
         os.makedirs(self.path, exist_ok=True)
         name = f"staged-{uuid.uuid4().hex}.kv"
-        client = FileKVClient(self.path)
-        client._path = os.path.join(self.path, name)
+        client = FileKVClient(os.path.join(self.path, name))
         n = 0
         try:
             for row in iterator:
@@ -147,20 +122,32 @@ class KVFileWriter(DataSourceWriter):
                     client.flush()
         finally:
             client.close()
-        return _KVCommit(name, n)
+        return _KVCommit(name if n else None, n)
 
     def commit(self, messages):
-        man = {"files": sorted(m.filename for m in messages
-                               if m is not None),
-               "rows": sum(m.rows for m in messages if m is not None)}
+        """Append keeps the prior manifest's files and row count;
+        overwrite publishes only this job's files (the replaced files
+        stay on disk, unread, for readers of the prior manifest). The
+        read-then-replace of the manifest is not fenced: writers to one
+        path must commit one at a time."""
+        done = [m for m in messages if m is not None and m.filename]
+        man = {"files": [m.filename for m in done],
+               "rows": sum(m.rows for m in done)}
+        manifest = os.path.join(self.path, "_manifest.json")
+        if not self.overwrite and os.path.exists(manifest):
+            with open(manifest) as fh:
+                old = _json.load(fh)
+            man["files"] += old["files"]
+            man["rows"] += old["rows"]
+        man["files"].sort()
         tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             _json.dump(man, fh)
-        os.replace(tmp, os.path.join(self.path, "_manifest.json"))
+        os.replace(tmp, manifest)
 
     def abort(self, messages):
         for m in messages:
-            if m is not None:
+            if m is not None and m.filename:
                 try:
                     os.unlink(os.path.join(self.path, m.filename))
                 except OSError:
@@ -176,7 +163,7 @@ class KVFileDataSource(DataSource):
         return "kvfile"
 
     def writer(self, schema, overwrite: bool) -> KVFileWriter:
-        return KVFileWriter(self.options)
+        return KVFileWriter(self.options, overwrite)
 
 
 def read_kv_manifested(spark, path: str) -> DataFrame:

@@ -37,10 +37,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
     w.saveAsTable(table)
 
 
-def bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_table(spark: SparkSession, sf_dir: str, table: str,
                    bucket_col: str, n_buckets: int = 16,
                    sort_col: str | None = None) -> DataFrame:
@@ -109,24 +105,17 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
-def zvalue(col_a, col_b, bits: int = 16):
-    """Morton (Z-order) interleave of two non-negative integer columns,
-    ``bits`` bits each — a pure codegen expression (aggregate over a
-    bit sequence; no UDF). Sorting by the z-value clusters rows so that
-    BOTH dimensions are locally coherent, which is what makes
-    row-group min/max statistics selective for 2-D predicates.
-    """
-    return zvalue_n([col_a, col_b], bits)
-
-
 def zvalue_n(cols, bits: int = 16):
-    """N-dimensional Morton interleave — ``zvalue`` for any number of
-    cluster columns (Delta's OPTIMIZE ZORDER BY accepts a column LIST
-    for the same reason: a 3-D workload filters on three dimensions).
-    Dimension d contributes its bit i at output position i·n + d, so
-    the total z-width is n·bits — keep n·bits ≤ 62 to stay inside a
-    signed long (3 dims × 16 bits = 48 default). Still pure unrolled
-    codegen: shift amounts are literals, no UDF, no shuffle."""
+    """N-dimensional Morton (Z-order) interleave of non-negative
+    integer columns, ``bits`` bits each. Sorting by the z-value
+    clusters rows so that EVERY dimension is locally coherent, which is
+    what makes row-group min/max statistics selective for
+    multi-column predicates (Delta's OPTIMIZE ZORDER BY accepts a
+    column LIST for the same reason). Dimension d contributes its bit
+    i at output position i·n + d, so the total z-width is n·bits —
+    keep n·bits ≤ 62 to stay inside a signed long (3 dims × 16 bits =
+    48 default). Pure unrolled codegen: shift amounts are literals, no
+    UDF, no shuffle."""
     from pyspark.sql import functions as F
 
     n = len(cols)
@@ -143,78 +132,3 @@ def zvalue_n(cols, bits: int = 16):
             z = z + F.shiftleft(
                 F.shiftright(c, i).bitwiseAND(F.lit(1)), i * n + d)
     return z
-
-
-def write_zordered(df: DataFrame, path: str, col_a: str, col_b: str,
-                   *more_cols: str, n_files: int = 8,
-                   row_group_bytes: int = 512 * 1024) -> None:
-    """OPTIMIZE ZORDER BY (a, b, ...), the plain-parquet way: sort by
-    the Morton interleave of the cluster columns (2 by signature, more
-    via ``*more_cols`` — ``zvalue_n`` handles any count with 62
-    z-bits, bits shrinking as dimensions grow) and write with small
-    row groups, so every row group's (min, max) on EVERY cluster
-    column covers a tight box of the value space. A multi-column
-    predicate then skips
-    most row groups on parquet statistics alone — the data-skipping
-    answer when a query filters on two columns and directory
-    partitioning can only serve one. repartitionByRange on the z-value
-    keeps the sort global across output files (each file owns a
-    z-range), so file-level footer stats prune too, not just row
-    groups.
-
-    Both dimensions min/max-scale onto the same [0, 2^bits) grid
-    BEFORE interleaving (two driver scalars from one tiny agg):
-    interleaving RAW values lets the wider-ranged column's high bits
-    dominate every z prefix and the narrow column never clusters —
-    the standard Z-order normalization (Delta's OPTIMIZE ZORDER uses
-    range-partition ids for the same reason). Measured on sf0.1
-    orders (tools/zorder_demo.py): a customer x date box predicate
-    touches 33.8x fewer candidate row groups than insertion order
-    (4/137 vs 135/135 at identical 64 KB row groups).
-
-    ``row_group_bytes`` sets the parquet block size DIRECTLY (it is
-    the skipping granularity: rows-per-group = row_group_bytes /
-    encoded-row-width, so a byte knob is the honest one — a
-    rows-based knob silently shrinks for wide rows). Smaller groups
-    skip tighter but cost more footer metadata; 128 KB-1 MB is the
-    useful range for stat-pruning workloads vs parquet's 128 MB
-    scan-throughput default.
-
-    Both cluster columns must be numeric (or date/timestamp cast
-    upstream to a numeric — the demo's epoch-day conversion is the
-    intended pattern); empty input raises rather than writing an
-    unreadable layout.
-    """
-    from pyspark.sql import functions as F
-
-    cols = [col_a, col_b, *more_cols]
-    bits = min(16, 62 // len(cols))
-    grid = (1 << bits) - 1
-    mm = df.agg(*[f for c in cols
-                  for f in (F.min(c), F.max(c))]).collect()[0]
-    if any(mm[2 * i] is None for i in range(len(cols))):
-        raise ValueError(
-            "write_zordered: empty input (or all-null cluster column) — "
-            f"no {tuple(cols)} value range to grid")
-    try:
-        bounds = [(float(mm[2 * i]), float(mm[2 * i + 1]))
-                  for i in range(len(cols))]
-    except (TypeError, ValueError) as exc:
-        raise ValueError(
-            f"write_zordered: cluster columns {tuple(cols)} must be "
-            "numeric; convert dates/timestamps to epoch days/seconds "
-            "first (see tools/zorder_demo.py::_day)") from exc
-
-    def scaled(c, lo, hi):
-        span = (hi - lo) or 1.0
-        return F.floor((c.cast("double") - lo) / span * grid).cast("long")
-
-    z = df.withColumn("_z", zvalue_n(
-        [scaled(F.col(c), lo, hi) for c, (lo, hi) in zip(cols, bounds)],
-        bits))
-    (z.repartitionByRange(n_files, "_z")
-     .sortWithinPartitions("_z")
-     .drop("_z")
-     .write.mode("overwrite")
-     .option("parquet.block.size", row_group_bytes)
-     .parquet(path))

@@ -126,9 +126,9 @@ def merge_into(spark: SparkSession, target_path: str, updates: DataFrame,
         raise ValueError(
             f"update batch contains NULL {partition_col!r} values; "
             "partition keys must be non-null")
-    # mergeSchema: a previously-evolved table stores different footers
-    # per partition until compact_partitions rewrites them — always
-    # resolve the union schema
+    # mergeSchema: a previously-evolved table keeps different footers
+    # per partition (merges rewrite only the partitions they touch) —
+    # always resolve the union schema
     target = spark.read.option("mergeSchema", "true").parquet(target_path)
     tgt_types = dict(target.dtypes)
     upd_types = dict(updates.dtypes)
@@ -229,93 +229,6 @@ def merge_into(spark: SparkSession, target_path: str, updates: DataFrame,
             "deleted": int(stats["del"] or 0),
             "inserted": int(stats["ins"] or 0),
             "ignored": int(stats["ign"] or 0)}
-
-
-def expire_partitions(spark: SparkSession, target_path: str,
-                      partition_col: str, keep) -> dict:
-    """Retention / TTL for a partitioned table: drop every partition
-    directory whose VALUE fails the ``keep`` predicate — pure partition
-    METADATA work (directory listing + deletes through the Hadoop FS
-    API, the same calls that run against HDFS/S3); no data file is ever
-    opened, so expiring a year of a 100 TB table costs seconds. The
-    retention twin of ``merge_into``: MERGE mutates rows inside
-    partitions, this removes whole partitions at the boundary a
-    time/category layout was chosen for.
-
-    ``keep`` receives the partition value as a STRING (the directory
-    name's encoding — cast inside the predicate as needed) and returns
-    truthy to retain. Returns {"examined", "dropped", "values"}.
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = root.getFileSystem(conf)
-    prefix = f"{partition_col}="
-    examined, dropped = 0, []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(prefix)):
-            continue
-        examined += 1
-        value = name[len(prefix):]
-        if not keep(value):
-            fs.delete(st.getPath(), True)
-            dropped.append(value)
-    return {"examined": examined, "dropped": len(dropped),
-            "values": sorted(dropped)}
-
-
-def compact_partitions(spark: SparkSession, target_path: str,
-                       partition_col: str, max_files: int = 4,
-                       sort_col: str | None = None) -> dict:
-    """OPTIMIZE for the merge/CDC table: steady micro-batch merges
-    accrete small files per partition (every dynamic overwrite and
-    append writes its own parts), and scan cost at 100 TB is driven by
-    file count as much as bytes. This rewrites ONLY partitions whose
-    file count exceeds ``max_files`` — offender detection is pure
-    Hadoop-FS metadata, the rewrite is a per-partition coalesce(1)
-    read-write, and compliant partitions stay byte-identical.
-
-    ``sort_col`` additionally clusters each rewritten partition by that
-    column (OPTIMIZE ... ZORDER-lite for one dimension): parquet
-    row-group min/max stats then prune point/range predicates on it
-    inside the partition.
-
-    Same committed-only rule as every maintenance op here: run with
-    writers stopped (plain parquet has no commit protocol to fence
-    concurrent writers).
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = root.getFileSystem(conf)
-    prefix = f"{partition_col}="
-    offenders = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(prefix)):
-            continue
-        n_files = sum(
-            1 for f in fs.listStatus(st.getPath())
-            if f.isFile() and f.getPath().getName().endswith(".parquet"))
-        if n_files > max_files:
-            offenders.append((name[len(prefix):], str(st.getPath()),
-                              n_files))
-    rewritten = 0
-    for value, p, _n in offenders:
-        # mergeSchema: normalize files written before a schema
-        # evolution; materialize BEFORE the overwrite replaces the
-        # directory being read
-        part = (spark.read.option("mergeSchema", "true").parquet(p)
-                .localCheckpoint(eager=True))
-        out = part.coalesce(1)
-        if sort_col:
-            out = out.sortWithinPartitions(sort_col)
-        out.write.mode("overwrite").parquet(p)
-        rewritten += 1
-    return {"examined_over_limit": len(offenders),
-            "rewritten": rewritten,
-            "values": sorted(v for v, _p, _n in offenders)}
 
 
 def merge_frames(target: DataFrame, updates: DataFrame,

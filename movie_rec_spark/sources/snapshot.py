@@ -34,8 +34,8 @@ metadata tree, public designs both):
   files no retained manifest references — time travel for free, and the
   reason concurrent readers are safe without any locking.
 
-Partition values are carried as STRINGS (the hive directory encoding,
-same contract as ``merge.expire_partitions``). Data files keep ALL
+Partition values are carried as STRINGS (the hive directory
+encoding). Data files keep ALL
 columns including the partition column (the hive layout under
 ``data/c-*/`` uses a ``_p=`` duplicate for its directory names), so a
 manifest's file list reads back complete with one ``spark.read.parquet``.
@@ -539,7 +539,7 @@ def snapshot_append(spark: SparkSession, path: str,
                     stream_batch_id: int | None = None) -> dict:
     """Append-only commit: new segments join the touched partitions'
     reference lists; every resident segment and file is untouched (the
-    IVF delta-fold / ingest case).
+    event-ingest case).
 
     Metadata folding: when a partition's reference list exceeds
     ``SEG_FOLD_THRESHOLD``, its segments fold into ONE new segment at
@@ -576,18 +576,17 @@ def snapshot_compact(spark: SparkSession, path: str,
     """OPTIMIZE: rewrite partitions whose file count exceeds
     ``max_files`` into one file each and commit atomically — readers on
     the old snapshot keep their old files (they are not deleted), so
-    compaction is safe under concurrent reads, unlike the in-place
-    ``merge.compact_partitions`` (which requires writers-stopped).
+    compaction is safe under concurrent reads, unlike an in-place
+    rewrite of a plain directory table (which requires writers stopped).
     Offender detection is pure VERSION-MANIFEST metadata — segment refs
     carry their file counts, so no segment is loaded for compliant
     partitions; compaction also folds each offender's accreted segment
     list back to one segment (metadata compaction riding along).
 
     ``zorder_cols`` = OPTIMIZE ... ZORDER BY: rewritten rows sort by
-    the Morton interleave of the named columns (sources/layout.zvalue_n
-    — the same clustering write_zordered proves skips row groups), so
-    a maintained snapshot table gets multi-column data skipping as a
-    side effect of routine compaction, exactly Delta/Iceberg's
+    the Morton interleave of the named columns (sources/layout.zvalue_n),
+    so a maintained snapshot table gets multi-column data skipping as
+    a side effect of routine compaction, exactly Delta/Iceberg's
     OPTIMIZE ZORDER posture. Mutually exclusive with ``sort_col``
     (one ordering per rewrite)."""
     if sort_col and zorder_cols:

@@ -34,7 +34,7 @@ Two variants, trading latency for ordering tolerance:
 State is one row per user: (ts_secs array<long>, vals array<double>),
 evicted below ``max_seen − window`` each batch, so state size is
 bounded by each user's event rate × window — observable via the usual
-state-store metrics, same posture as streaming/ingest.
+state-store metrics.
 """
 
 from __future__ import annotations

@@ -90,8 +90,8 @@ def event_counters_cdc(stream: DataFrame, op_col: str = "op") -> DataFrame:
     of surviving events (pinned by test). Update output mode, one state
     row per user; a fully-deleted user converges to n_events = 0, the
     same observable state as a Redis key DECRed back to zero. The
-    production sink is foreachBatch → kv.write_kv merging each
-    micro-batch's changed rows.
+    production sink is foreachBatch writing each micro-batch's changed
+    rows through the ``kvfile`` data source (sources/kv.py).
     """
     sign = F.col(op_col).cast("long")
     return stream.groupBy("user_id").agg(

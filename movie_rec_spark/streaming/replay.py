@@ -129,15 +129,13 @@ def replay_file_stream(
         # with bytes-derived sizing; the Python-stateful
         # q_anomaly_stream_et regressed 12→16 s at 2 partitions and
         # recovered to 11.3 s at defaultParallelism/2 — hence the
-        # caller-supplied floor. MRS_REPLAY_PARTITIONS overrides for
-        # cluster tuning.
+        # caller-supplied floor.
         sess = spark.conf.get("spark.sql.shuffle.partitions")
         nbytes = sum(
             os.path.getsize(os.path.join(src, f))
             for f in os.listdir(src) if f.endswith(".parquet"))
-        parts = int(os.environ.get("MRS_REPLAY_PARTITIONS", "0")) or \
-            min(int(sess),
-                max(2, state_parallelism or 0, nbytes // (4 << 20) + 1))
+        parts = min(int(sess),
+                    max(2, state_parallelism or 0, nbytes // (4 << 20) + 1))
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
             q = (build(spark.readStream.schema(schema)

@@ -15,7 +15,7 @@ from movie_rec_spark.sources.catalog import load_table
 from movie_rec_spark.sources.layout import (
     write_bucketed,
     write_partitioned,
-    write_zordered,
+    zvalue_n,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -86,63 +86,12 @@ def test_partitioned_write_prunes(spark, tmp_path):
 def test_zvalue_interleaves_bits(spark):
     """Morton interleave of known values: z(a=0b11, b=0b01) =
     0b0111 = 7; z(1,1)=3; z(2,0)=4; dimension order (a even bits)."""
-    from pyspark.sql import functions as F
-    from movie_rec_spark.sources.layout import zvalue
     df = spark.createDataFrame(
         [(3, 1), (1, 1), (2, 0), (0, 0)], "a int, b int")
     out = {(r.a, r.b): r.z for r in
-           df.select("a", "b", zvalue(F.col("a"), F.col("b"))
+           df.select("a", "b", zvalue_n([F.col("a"), F.col("b")])
                      .alias("z")).collect()}
     assert out == {(3, 1): 7, (1, 1): 3, (2, 0): 4, (0, 0): 0}
-
-
-def test_zorder_write_tightens_both_dimensions(spark, tmp_path):
-    """Files of a z-ordered write cover tight rectangles: the summed
-    per-file custkey span is far below files x full-span (which is
-    what a date-sorted layout would give), while date spans stay
-    bounded — both dimensions cluster at once."""
-    from pyspark.sql import functions as F
-    from movie_rec_spark.sources.catalog import load_table
-    from movie_rec_spark.sources.layout import write_zordered
-    import glob
-    import pyarrow.parquet as pq
-
-    orders = load_table(spark, "/root/testdata/sf0.01", "orders") \
-        .withColumn("_day", F.datediff(
-            F.to_date("o_orderdate"),
-            F.lit("1970-01-01").cast("date")).cast("long"))
-    path = str(tmp_path / "z")
-    write_zordered(orders, path, "o_custkey", "_day", n_files=8)
-    spans_c, full_c = [], [0, 0]
-    for f in glob.glob(path + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        st = md.row_group(0).column(idx["o_custkey"]).statistics
-        lo, hi = st.min, st.max
-        for rg in range(1, md.num_row_groups):
-            s2 = md.row_group(rg).column(idx["o_custkey"]).statistics
-            lo, hi = min(lo, s2.min), max(hi, s2.max)
-        spans_c.append(hi - lo)
-        full_c = [min(full_c[0], lo) if spans_c[1:] else lo,
-                  max(full_c[1], hi)]
-    full = full_c[1] - full_c[0]
-    assert len(spans_c) >= 4
-    assert sum(spans_c) < len(spans_c) * full * 0.7, \
-        "z-order must tighten per-file custkey ranges vs the full span"
-
-
-def test_zorder_rejects_empty_and_non_numeric(spark, tmp_path):
-    """Edge-input guards: empty input and non-numeric cluster columns
-    fail with a clear ValueError instead of a TypeError deep in the
-    min/max float cast."""
-    empty = spark.createDataFrame([], "a long, b long")
-    with pytest.raises(ValueError, match="empty input"):
-        write_zordered(empty, str(tmp_path / "e"), "a", "b")
-    dated = spark.createDataFrame(
-        [(1, "2024-01-01")], "a long, d string"
-    ).withColumn("d", F.to_date("d"))
-    with pytest.raises(ValueError, match="must be numeric"):
-        write_zordered(dated, str(tmp_path / "d"), "a", "d")
 
 
 def test_bucketed_catalog_drops_agg_exchange(spark):
@@ -198,9 +147,7 @@ def test_bucketed_catalog_reregisters_without_rewrite(spark):
 def test_zvalue_n_three_dims_and_overflow_guard(spark):
     """3-D Morton: dim d's bit i lands at position 3i+d —
     z(1,0,0)=1, z(0,1,0)=2, z(0,0,1)=4, z(1,1,1)=7, z(2,0,0)=8;
-    2-col zvalue stays bit-identical to zvalue_n([a,b]); >62 z-bits
-    raises."""
-    from movie_rec_spark.sources.layout import zvalue, zvalue_n
+    >62 z-bits raises."""
     df = spark.createDataFrame(
         [(1, 0, 0), (0, 1, 0), (0, 0, 1), (1, 1, 1), (2, 0, 0)],
         "a int, b int, c int")
@@ -210,46 +157,8 @@ def test_zvalue_n_three_dims_and_overflow_guard(spark):
         .alias("z")).collect()}
     assert out == {(1, 0, 0): 1, (0, 1, 0): 2, (0, 0, 1): 4,
                    (1, 1, 1): 7, (2, 0, 0): 8}
-    two = df.select(
-        (zvalue(F.col("a"), F.col("b"))
-         == zvalue_n([F.col("a"), F.col("b")])).alias("same")).collect()
-    assert all(r.same for r in two)
     with pytest.raises(ValueError, match="overflows"):
         zvalue_n([F.col("a")] * 4, bits=16)
-
-
-def test_zorder_write_three_dims(spark, tmp_path):
-    """write_zordered with a third cluster column produces per-file
-    stats tighter than the full span on ALL THREE dimensions."""
-    import glob
-    import pyarrow.parquet as pq
-
-    orders = load_table(spark, "/root/testdata/sf0.01", "orders") \
-        .withColumn("_day", F.datediff(
-            F.to_date("o_orderdate"),
-            F.lit("1970-01-01").cast("date")).cast("long")) \
-        .withColumn("_price", F.col("o_totalprice").cast("long"))
-    path = str(tmp_path / "z3")
-    write_zordered(orders, path, "o_custkey", "_day", "_price",
-                   n_files=8)
-    for col in ("o_custkey", "_day", "_price"):
-        spans, lo_all, hi_all = [], None, None
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            spans.append(hi - lo)
-            lo_all = lo if lo_all is None else min(lo_all, lo)
-            hi_all = hi if hi_all is None else max(hi_all, hi)
-        full = hi_all - lo_all
-        assert len(spans) >= 4
-        assert sum(spans) < len(spans) * full * 0.85, \
-            f"{col}: z-order must tighten per-file ranges"
 
 
 def test_cobucketed_fact_join_drops_exchanges_and_sorts(

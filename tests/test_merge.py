@@ -169,23 +169,6 @@ def test_cdc_merge_stream_end_to_end(spark, tmp_path):
     assert replay["ignored"] == 1  # the stale row stays stale
 
 
-def test_expire_partitions_metadata_only(spark, target):
-    from movie_rec_spark.sources.merge import expire_partitions
-
-    before = {k: v for k, v in _snapshot(target).items()
-              if "/day=3/" in k}
-    summary = expire_partitions(spark, target, "day",
-                                keep=lambda v: int(v) >= 2)
-    assert summary == {"examined": 3, "dropped": 1, "values": ["1"]}
-    left = spark.read.parquet(target)
-    assert sorted(r.day for r in left.select("day").distinct()
-                  .collect()) == [2, 3]
-    # retained partitions untouched on disk
-    after = {k: v for k, v in _snapshot(target).items()
-             if "/day=3/" in k}
-    assert after == before
-
-
 def test_merge_matches_reference_model(spark, tmp_path):
     """Property-style sweep: merge_into must match a pure-Python
     reference model of the MERGE semantics (ts guard, tombstones,
@@ -232,39 +215,6 @@ def test_merge_matches_reference_model(spark, tmp_path):
         got = {(r.id, r.day): (r.val, r.ts)
                for r in spark.read.parquet(path).collect()}
         assert got == expect, f"seed {seed}"
-
-
-def test_compact_partitions_rewrites_only_offenders(spark, tmp_path):
-    """Five appends fragment day=1 into 5 files; compaction rewrites it
-    to one file, leaves the compliant partition byte-identical, and
-    preserves the data exactly (optionally clustered by a sort key)."""
-    import glob
-
-    from movie_rec_spark.sources.merge import compact_partitions
-
-    path = str(tmp_path / "frag")
-    for i in range(5):
-        (spark.createDataFrame([Row(id=i, day=1, val=f"v{i}")])
-         .coalesce(1).write.mode("append").partitionBy("day")
-         .parquet(path))
-    (spark.createDataFrame([Row(id=9, day=2, val="x")])
-     .coalesce(1).write.mode("append").partitionBy("day").parquet(path))
-
-    def files(day):
-        return sorted(glob.glob(f"{path}/day={day}/*.parquet"))
-
-    assert len(files(1)) == 5
-    before_d2 = {f: os.stat(f).st_mtime_ns for f in files(2)}
-    want = sorted((r.id, r.day, r.val)
-                  for r in spark.read.parquet(path).collect())
-    summary = compact_partitions(spark, path, "day", max_files=2,
-                                 sort_col="id")
-    assert summary["rewritten"] == 1 and summary["values"] == ["1"]
-    assert len(files(1)) == 1
-    assert {f: os.stat(f).st_mtime_ns for f in files(2)} == before_d2
-    got = sorted((r.id, r.day, r.val)
-                 for r in spark.read.parquet(path).collect())
-    assert got == want
 
 
 def test_merge_schema_discipline_and_evolution(spark, tmp_path):

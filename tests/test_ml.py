@@ -4,12 +4,24 @@ value-equality (SURVEY.md §5, §7.3 item 1)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from movie_rec_spark import ml as ML
 from movie_rec_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def exclude_seen(recs: DataFrame, seen: DataFrame) -> DataFrame:
+    """Drop (user, item) pairs the user already interacted with and
+    re-rank densely — the leave-one-out evaluation protocol."""
+    kept = recs.join(seen.select("user_id", "item_id"),
+                     ["user_id", "item_id"], "left_anti")
+    w = Window.partitionBy("user_id").orderBy("rank")
+    return kept.withColumn("rank",
+                           F.row_number().over(w).cast("int"))
 
 
 @pytest.fixture(scope="module")
@@ -264,8 +276,6 @@ def test_ranking_beats_popularity_on_planted_structure(spark):
     the non-personalized popularity list on NDCG@10 against a held-out
     loved item per user — popularity cannot separate the cohorts by
     construction, so this is the minimum personalization bar."""
-    from pyspark.sql.window import Window
-
     rows = []
     for u in range(40):
         block = u % 2                      # cohort -> item block
@@ -290,7 +300,7 @@ def test_ranking_beats_popularity_on_planted_structure(spark):
     train = ranked.filter(F.col("rn") > 1).drop("rn")
     model = ML.train_als(train)
     # leave-one-out protocol: recommend wide, EXCLUDE seen, re-rank
-    als_recs = ML.exclude_seen(ML.recommend_top_n(model, 30), train)
+    als_recs = exclude_seen(ML.recommend_top_n(model, 30), train)
     als = ML.evaluate_ranking(als_recs, heldout)
     pop_items = (train.groupBy("item_id")
                  .agg(F.count(F.lit(1)).alias("c"))
@@ -298,7 +308,7 @@ def test_ranking_beats_popularity_on_planted_structure(spark):
                  .withColumn("rank", F.row_number().over(
                      Window.orderBy(F.desc("c"), F.asc("item_id"))))
                  .select("item_id", "rank"))
-    pop = ML.exclude_seen(
+    pop = exclude_seen(
         train.select("user_id").distinct()
         .crossJoin(pop_items)
         .select("user_id", "item_id",

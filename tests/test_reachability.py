@@ -1,11 +1,15 @@
-"""Every public library entry point has a caller outside the tests.
+"""Every public library entry point has a caller outside the tests,
+and the library reads no environment variable beyond its deployment
+settings.
 
 A pure-AST scan, no Spark session: each public top-level ``def`` or
 ``class`` in ``movie_rec_spark/`` must be referenced (as a name, an
 attribute or an import alias) from some non-test ``.py`` file of the
 repo, outside its own definition. Code that only tests reach is either
 given a caller on a measured or declared path, deleted, or listed in
-``KEPT`` with the reason it stays.
+``KEPT`` with the reason it stays. Every ``os.environ`` / ``os.getenv``
+read in ``movie_rec_spark/`` must name a variable in ``ENV_SETTINGS``,
+so tuning knobs that nothing sets cannot grow back unnoticed.
 """
 
 from __future__ import annotations
@@ -19,6 +23,16 @@ PACKAGE = ROOT / "movie_rec_spark"
 # test utilities by design: plan-introspection helpers for the plan tests
 EXEMPT_MODULES = {PACKAGE / "plans"}
 SKIP_DIRS = {".git", "tests", "spark-warehouse", "__pycache__"}
+
+# where the session runs and what it reads: set by deployments, the
+# benchmark and the tier-1 command, not tuning knobs
+ENV_SETTINGS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_DRIVER_MEM",
+    "SPARK_CHECKPOINT_DIR",
+    "MRS_SCRATCH_DIR",
+}
 
 KEPT = {
     "read_ratings_csv": "paper surface S1-S3: the reference's CSV inputs",
@@ -38,27 +52,8 @@ KEPT = {
     "read_change_stream": "the ratings ingest between refreshes",
     "write_bucketed": "fixture of the bucketed-join plan tests",
     "write_partitioned": "fixture of the bucketed-join plan tests",
-    # Test-only as well and not yet triaged: each still needs a caller
-    # on a measured or declared path, or deletion with its tests.
-    "exclude_seen": "seen-pair anti-join; the ALS ranking tests use it",
-    "ivf_write": "persisted IVF index, the at-rest form of ivf_index",
-    "ivf_read": "persisted IVF index, the at-rest form of ivf_index",
-    "ivf_search": "probe search over a persisted IVF index",
-    "ivf_append": "persisted IVF index upkeep",
-    "ivf_drift": "persisted IVF index upkeep",
-    "ivf_append_stream": "persisted IVF index upkeep",
-    "ivf_compact_deltas": "persisted IVF index upkeep",
-    "text_embedding": "array form of q_text_embed for the similarity ops",
-    "write_kv": "S9-S11 KV write side; the gold writer is open",
-    "bucketed": "read side of write_bucketed",
-    "zvalue": "2-D Morton key; zvalue_n is tested against it",
-    "expire_partitions": "partition upkeep of a merge target",
-    "compact_partitions": "partition upkeep of a merge target",
-    "rocksdb_state_conf": "incremental near-dup ingest",
-    "compact_state": "incremental near-dup ingest",
-    "read_state_metrics": "incremental near-dup ingest",
-    "run_incremental_neardup": "incremental near-dup ingest",
-    "run_incremental_ingest": "incremental near-dup ingest",
+    "text_embedding": ("dense reference that tests compare knn_sparse/"
+                       "q_rrf against"),
 }
 
 
@@ -123,3 +118,52 @@ def test_every_public_library_def_has_a_non_test_caller():
 def test_kept_names_still_exist_and_still_need_the_exemption():
     gone = set(KEPT) - set(unreferenced())
     assert not gone, f"KEPT entries no longer needed: {sorted(gone)}"
+
+
+def _is_environ(node: ast.AST) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") \
+        or (isinstance(node, ast.Name) and node.id == "environ")
+
+
+def _env_keys(tree: ast.Module) -> list[ast.AST]:
+    """The key expression of every environment read in ``tree``:
+    ``environ.get/setdefault/pop(k)``, ``getenv(k)``, ``environ[k]`` and
+    ``k in environ``."""
+    keys = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call) and n.args and isinstance(
+                n.func, ast.Attribute) and (
+                (n.func.attr in ("get", "setdefault", "pop")
+                 and _is_environ(n.func.value))
+                or n.func.attr == "getenv"):
+            keys.append(n.args[0])
+        elif isinstance(n, ast.Subscript) and _is_environ(n.value):
+            keys.append(n.slice)
+        elif isinstance(n, ast.Compare) and any(
+                isinstance(op, (ast.In, ast.NotIn)) for op in n.ops) \
+                and any(_is_environ(c) for c in n.comparators):
+            keys.append(n.left)
+    return keys
+
+
+def test_library_reads_only_deployment_env_settings():
+    bad = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        consts = {t.id: n.value.value for n in tree.body
+                  if isinstance(n, ast.Assign)
+                  and isinstance(n.value, ast.Constant)
+                  for t in n.targets if isinstance(t, ast.Name)}
+        for key in _env_keys(tree):
+            if isinstance(key, ast.Constant):
+                name = key.value
+            elif isinstance(key, ast.Name):
+                name = consts.get(key.id, f"<unresolved {key.id}>")
+            else:
+                name = f"<dynamic {ast.unparse(key)}>"
+            if name not in ENV_SETTINGS:
+                bad.append(f"{path.relative_to(ROOT)}:{key.lineno} {name}")
+    assert not bad, (
+        "environment reads outside the deployment settings "
+        f"{sorted(ENV_SETTINGS)} (use a module constant or a "
+        f"parameter instead): {bad}")

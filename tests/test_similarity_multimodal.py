@@ -6,7 +6,6 @@ import math
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from movie_rec_spark import memo
 from movie_rec_spark.operators import multimodal as MM
@@ -76,40 +75,12 @@ def test_lsh_recall_vs_brute(spark, sf_emb):
 
 
 def test_ivf_topk_overlaps_brute(spark, sf_emb):
-    query = sf_emb.filter(F.col("vec_id") == 0).collect()[0].embedding
-    query = [float(x) for x in query]
-    assigned, centers = S.ivf_index(sf_emb, n_cells=4)
-    ivf = [r.vec_id for r in
-           S.ivf_search(assigned.filter(F.col("vec_id") != 0), centers,
-                        query, k=10, nprobe=2).collect()]
+    """The declared q_knn_ivf probes only nprobe of n_cells cells; its
+    top-10 must still share at least half its ids with q_knn_brute."""
+    ivf = [r.vec_id for r in S.q_knn_ivf(sf_emb, 0, k=10).collect()]
     brute = [r.vec_id for r in S.q_knn_brute(sf_emb, 0, k=10).collect()]
     overlap = len(set(ivf) & set(brute)) / 10
-    assert overlap >= 0.5, f"IVF@nprobe=2 overlap {overlap}"
-
-
-def test_ivf_at_rest_prunes_partitions(spark, sf_emb, tmp_path):
-    """A persisted IVF index must serve a probe by READING ONLY the
-    probed cells' files (partition pruning), and return the same top-k
-    as the in-memory index."""
-    path = str(tmp_path / "ivf")
-    S.ivf_write(sf_emb, path, n_cells=4)
-    assigned, centers = S.ivf_read(spark, path)
-    query = [float(x) for x in
-             sf_emb.filter(F.col("vec_id") == 0).collect()[0].embedding]
-
-    at_rest = S.ivf_search(assigned, centers, query, k=10, nprobe=2,
-                           exclude_id=0)
-    # pruning: the probe predicate must land in PartitionFilters (whole
-    # cell directories skipped), not a post-scan Filter
-    from movie_rec_spark.plans import partition_filters
-    pf = partition_filters(at_rest)
-    assert any("cell" in f and f for f in pf), pf
-
-    mem_assigned, mem_centers = S.ivf_index(sf_emb, n_cells=4)
-    in_mem = S.ivf_search(mem_assigned, mem_centers, query, k=10,
-                          nprobe=2, exclude_id=0)
-    assert [r.vec_id for r in at_rest.collect()] == \
-           [r.vec_id for r in in_mem.collect()]
+    assert overlap >= 0.5, f"q_knn_ivf overlap {overlap}"
 
 
 def test_q_knn_ivf_reuses_memoized_fit(spark, sf_emb):
@@ -241,114 +212,6 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     # cluster 0; cluster 1 empties but keeps its seed centroid (0,0)
     assert sizes == {0: 3, 1: 0}
     assert all(r.centroid_val == 0.0 for r in out)
-
-
-def test_ivf_append_and_drift(spark, sf_emb, tmp_path):
-    """Incremental IVF maintenance: build at rest on half the corpus,
-    append the other half — appended vectors land in their NEAREST
-    cell (numpy-verified), resident cell files are not rewritten,
-    searches immediately see appended ids, and the drift signal reacts
-    to out-of-distribution batches."""
-    import glob
-    import os
-
-    import numpy as np
-
-    path = str(tmp_path / "ivf_inc")
-    old = sf_emb.filter(F.col("vec_id") % 2 == 0)
-    new = sf_emb.filter(F.col("vec_id") % 2 == 1)
-    S.ivf_write(old, path, n_cells=4)
-    before = {f: os.stat(f).st_mtime_ns
-              for f in glob.glob(path + "/cell=*/*.parquet")}
-
-    summary = S.ivf_append(spark, path, new)
-    assert summary["appended"] == new.count()
-    # resident files untouched (append adds files, never rewrites)
-    after = {f: os.stat(f).st_mtime_ns
-             for f in glob.glob(path + "/cell=*/*.parquet")}
-    for f, m in before.items():
-        assert after[f] == m
-
-    assigned, centers = S.ivf_read(spark, path)
-    assert assigned.count() == sf_emb.count()
-    # spot-check: appended rows sit in their numpy-nearest cell
-    ctr = np.asarray(centers, dtype=np.float64)
-    sample = (assigned.filter(F.col("vec_id") % 2 == 1)
-              .select("vec_id", "embedding", "cell").limit(20).collect())
-    for r in sample:
-        v = np.asarray(r.embedding, dtype=np.float64)
-        want = int(np.argmin(((ctr - v) ** 2).sum(axis=1)))
-        assert r.cell == want, (r.vec_id, r.cell, want)
-    # search over the maintained index can return appended ids
-    q = list(new.select("embedding").first()[0])
-    hits = [r.vec_id for r in
-            S.ivf_search(assigned, centers, [float(x) for x in q],
-                         k=5, nprobe=4).collect()]
-    assert any(v % 2 == 1 for v in hits)
-
-    # drift: an out-of-distribution batch scores far above baseline
-    base = S.ivf_drift(spark, path)
-    shifted = new.limit(50).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x + F.lit(25.0))
-        .alias("embedding"), "label")
-    far = S.ivf_append(spark, path, shifted)
-    assert far["mean_sqdist"] > 10 * max(base, 1e-9)
-
-
-def test_ivf_streaming_append_exactly_once(spark, sf_emb, tmp_path):
-    """Streaming embedding ingestion into the IVF index: batches land
-    in batch-keyed delta dirs (replayed batch = overwrite, not
-    double-append), searches see deltas immediately, and offline
-    compaction folds them into the base with no duplicates."""
-    from pyspark.sql.types import (
-        ArrayType, FloatType, IntegerType, LongType, StructField,
-        StructType,
-    )
-
-    path = str(tmp_path / "ivf_s")
-    src = str(tmp_path / "emb_src")
-    base = sf_emb.filter(F.col("vec_id") % 2 == 0)
-    newer = sf_emb.filter(F.col("vec_id") % 2 == 1)
-    S.ivf_write(base, path, n_cells=4)
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ])
-    newer.coalesce(2).write.parquet(src)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    log = S.ivf_append_stream(spark, stream, path,
-                              str(tmp_path / "ivf_ckpt"))
-    assert sum(s["appended"] for s in log) == newer.count()
-
-    full, centers = S.ivf_read(spark, path, with_deltas=True)
-    assert full.count() == sf_emb.count()
-    assert full.select("vec_id").distinct().count() == sf_emb.count()
-
-    # replay of an already-committed batch overwrites, never duplicates
-    b0 = spark.read.option(
-        "basePath", S.ivf_delta_dir(path) + f"/batch_{log[0]['batch_id']}"
-    ).parquet(S.ivf_delta_dir(path) + f"/batch_{log[0]['batch_id']}")
-    S.ivf_append_batch(spark, path,
-                       b0.drop("cell").localCheckpoint(eager=True),
-                       log[0]["batch_id"])
-    full2, _ = S.ivf_read(spark, path, with_deltas=True)
-    assert full2.count() == sf_emb.count()
-
-    folded = S.ivf_compact_deltas(spark, path)
-    assert folded["rows"] == newer.count()
-    import glob
-    assert glob.glob(S.ivf_delta_dir(path) + "/batch_*") == []
-    final, centers = S.ivf_read(spark, path)
-    assert final.count() == sf_emb.count()
-    q = list(newer.select("embedding").first()[0])
-    hits = [r.vec_id for r in
-            S.ivf_search(final, centers, [float(x) for x in q],
-                         k=5, nprobe=4).collect()]
-    assert any(v % 2 == 1 for v in hits)
 
 
 def test_semdedup_drops_only_true_neardups_in_cell(spark, sf_emb):
@@ -527,7 +390,7 @@ def test_pq_local_route_matches_distributed(spark, monkeypatch):
     bit-identical to the distributed Lloyd rounds: q_pq_knn and
     q_ivfpq_knn return the same (vec_id, distance[, cell]) rows with
     the local route (default at test scale) and with it disabled
-    (MRS_PQ_LOCAL_POINTS=0 → the unchanged distributed path). Planted
+    (PQ_LOCAL_POINT_CAP=0 → the unchanged distributed path). Planted
     interleaved corpus so empty-cluster fallback and cid tie-breaks
     are exercised (duplicate seeds empty out)."""
     def pat(seed):
@@ -538,7 +401,7 @@ def test_pq_local_route_matches_distributed(spark, monkeypatch):
     local_pq = [tuple(r) for r in S.q_pq_knn(e, 0, k=12).collect()]
     local_ivf = [tuple(r) for r in S.q_ivfpq_knn(e, 0, k=12).collect()]
     local_km = sorted(tuple(r) for r in S.q_kmeans(e).collect())
-    monkeypatch.setenv("MRS_PQ_LOCAL_POINTS", "0")
+    monkeypatch.setattr(S, "PQ_LOCAL_POINT_CAP", 0)
     dist_pq = [tuple(r) for r in S.q_pq_knn(e, 0, k=12).collect()]
     dist_ivf = [tuple(r) for r in S.q_ivfpq_knn(e, 0, k=12).collect()]
     dist_km = sorted(tuple(r) for r in S.q_kmeans(e).collect())

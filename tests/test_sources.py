@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pyarrow as pa
@@ -110,10 +111,9 @@ def test_kv_roundtrip_with_batching(spark, tmp_path):
     assert rows == {"u1": "11;12", "u2": "21;22"}
 
     out_dir = str(tmp_path / "kv")
-    os.makedirs(out_dir, exist_ok=True)
-    KV.write_kv(encoded, "key", "value",
-                client_factory=lambda: KV.FileKVClient(out_dir),
-                batch_size=1)
+    spark.dataSource.register(KV.KVFileDataSource)
+    (encoded.write.format("kvfile").option("path", out_dir)
+     .option("batch_size", 1).mode("append").save())
     lines = []
     for f in glob.glob(f"{out_dir}/*.kv"):
         lines += open(f).read().splitlines()
@@ -223,6 +223,46 @@ def test_kvfile_writer_commits_manifest(spark, tmp_path):
     back = {r.key: r.value
             for r in read_kv_manifested(spark, out).collect()}
     assert len(back) == 100 and back["u7"] == "7;8"
+
+
+def test_kvfile_writer_empty_tasks_publish_nothing(spark, tmp_path):
+    """Tasks that receive no rows stage no file and name none in the
+    manifest, so a manifested read of 1 row over 4 tasks succeeds."""
+    spark.dataSource.register(KV.KVFileDataSource)
+    out = str(tmp_path / "kvsparse")
+    df = spark.createDataFrame([("u1", "1;2")],
+                               "key string, value string").repartition(4)
+    df.write.format("kvfile").option("path", out).mode("append").save()
+    man = json.load(open(os.path.join(out, "_manifest.json")))
+    assert man["rows"] == 1 and len(man["files"]) == 1
+    assert glob.glob(os.path.join(out, "staged-*.kv")) == [
+        os.path.join(out, man["files"][0])]
+    assert [tuple(r) for r in
+            KV.read_kv_manifested(spark, out).collect()] == [("u1", "1;2")]
+
+
+def test_kvfile_writer_append_keeps_and_overwrite_replaces(spark, tmp_path):
+    """mode("append") adds to the published manifest (files and row
+    count); mode("overwrite") publishes only the new job's files."""
+    spark.dataSource.register(KV.KVFileDataSource)
+    out = str(tmp_path / "kvmodes")
+
+    def write(key, mode):
+        (spark.createDataFrame([(key, "1")], "key string, value string")
+         .coalesce(1).write.format("kvfile").option("path", out)
+         .mode(mode).save())
+
+    def state():
+        man = json.load(open(os.path.join(out, "_manifest.json")))
+        keys = sorted(r.key for r in
+                      KV.read_kv_manifested(spark, out).collect())
+        return keys, man["rows"], len(man["files"])
+
+    write("u1", "append")
+    write("u2", "append")
+    assert state() == (["u1", "u2"], 2, 2)
+    write("u3", "overwrite")
+    assert state() == (["u3"], 1, 1)
 
 
 def test_kvfile_writer_abort_leaves_no_manifest(spark, tmp_path):

@@ -145,306 +145,6 @@ def test_cdc_counters_retract_deletes_to_batch_recount(spark, tmp_path):
     assert ev.filter(F.col("event_type") == "error").count() > 0
 
 
-def test_incremental_ingest_dedups_across_batches(spark, tmp_path):
-    """A doc whose text arrived in an earlier micro-batch must be
-    flagged dup_of_corpus when it reappears later; in-batch dups get
-    dup_in_batch on all but the smallest id; state survives batches."""
-    import os
-
-    from pyspark.sql import Row
-
-    from movie_rec_spark.streaming.ingest import run_incremental_ingest
-
-    src = str(tmp_path / "docs_src")
-    os.makedirs(src)
-
-    def doc(i, t):
-        return Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t))
-
-    b1 = [doc(1, "first text"), doc(2, "second text"), doc(3, "first text")]
-    b2 = [doc(10, "first text"), doc(11, "brand new text")]
-    # one parquet file per producer batch; maxFilesPerTrigger=1 makes
-    # each file its own micro-batch, and file-source ordering follows
-    # modification time — stamp b2 strictly later.
-    spark.createDataFrame(b1).coalesce(1).write.mode("append").parquet(src)
-    import glob
-    import time
-    first_files = set(glob.glob(src + "/*.parquet"))
-    time.sleep(1.1)
-    spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src)
-    for f in set(glob.glob(src + "/*.parquet")) - first_files:
-        os.utime(f)
-
-    run_incremental_ingest(
-        spark, src, str(tmp_path / "ingest_ckpt"),
-        str(tmp_path / "digest_state"), str(tmp_path / "ingest_log"))
-
-    log = spark.read.parquet(str(tmp_path / "ingest_log") + "/*/")
-    got = {r.doc_id: r.status for r in log.collect()}
-    assert got[1] == "new" and got[3] == "dup_in_batch"
-    assert got[2] == "new"
-    assert got[10] == "dup_of_corpus"
-    assert got[11] == "new"
-    # digest state holds exactly the distinct ingested texts
-    fps = spark.read.parquet(str(tmp_path / "digest_state") + "/*/")
-    assert fps.distinct().count() == 3
-
-
-def test_incremental_neardup_finds_cross_batch_pair(spark, tmp_path):
-    """A near-identical doc arriving in a later micro-batch must pair
-    with the earlier original via the persistent band state; unrelated
-    docs must not pair; within-batch dups are also reported."""
-    import glob
-    import os
-    import time
-
-    from pyspark.sql import Row
-
-    from movie_rec_spark.streaming.ingest import run_incremental_neardup
-
-    src = str(tmp_path / "nd_src")
-    os.makedirs(src)
-    base = "the quick brown fox jumps over the lazy dog again and again"
-
-    def doc(i, t):
-        return Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t))
-
-    b1 = [doc(1, base), doc(2, "completely unrelated words about spark "
-                               "query engines and shuffles")]
-    # one appended word: 10 of 11 shingles shared (J≈0.91) — high
-    # enough that at least one of 8 bands collides with certainty
-    # instead of the coin flip a mid-string one-word swap gives (J≈0.5)
-    b2 = [doc(10, base + " tail"),               # near-dup of 1
-          doc(11, "fresh content with nothing in common here at all"),
-          doc(12, base + " tail")]               # exact dup of 10, in-batch
-    spark.createDataFrame(b1).coalesce(1).write.mode("append").parquet(src)
-    first = set(glob.glob(src + "/*.parquet"))
-    time.sleep(1.1)
-    spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src)
-    for f in set(glob.glob(src + "/*.parquet")) - first:
-        os.utime(f)
-
-    run_incremental_neardup(
-        spark, src, str(tmp_path / "nd_ckpt"),
-        str(tmp_path / "nd_state"), str(tmp_path / "nd_log"))
-
-    log = spark.read.parquet(str(tmp_path / "nd_log") + "/*/")
-    pairs = {(r.new_doc, r.old_doc) for r in log.collect()}
-    assert (10, 1) in pairs or (12, 1) in pairs   # cross-batch near-dup
-    assert (10, 12) in pairs or (12, 10) in pairs  # within-batch dup
-    flat = {d for p in pairs for d in p}
-    assert 2 not in flat and 11 not in flat
-
-
-def test_ingest_replay_is_idempotent(spark, tmp_path):
-    """ADVICE r3 (medium): a replayed micro-batch must see exactly the
-    PRE-batch state — not its own half-committed delta.  Simulate the
-    crash-after-state-write-before-checkpoint-commit window by applying
-    batch 1 twice: verdicts and the digest state must be identical, and
-    batch 1's genuinely-new digest must NOT be reclassified as
-    dup_of_corpus (which would overwrite the delta with an empty one
-    and permanently lose it)."""
-    from pyspark.sql import Row
-
-    from movie_rec_spark.streaming.ingest import _ingest_apply
-
-    def doc(i, t):
-        return Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t))
-
-    state, log = str(tmp_path / "state"), str(tmp_path / "log")
-    b0 = spark.createDataFrame([doc(1, "first text"), doc(2, "second text")])
-    b1 = spark.createDataFrame([doc(10, "first text"), doc(11, "brand new")])
-    _ingest_apply(b0, 0, state, log)
-    _ingest_apply(b1, 1, state, log)
-
-    def snapshot():
-        v = {r.doc_id: r.status
-             for r in spark.read.parquet(log + "/*/").collect()}
-        fps = sorted(r.fp for r in spark.read.parquet(state + "/*/").collect())
-        return v, fps
-
-    first = snapshot()
-    assert first[0][11] == "new" and first[0][10] == "dup_of_corpus"
-    _ingest_apply(b1, 1, state, log)          # replay batch 1
-    assert snapshot() == first, "replay must be byte-idempotent"
-    assert len(first[1]) == 3                 # doc 11's digest survived
-
-
-def test_neardup_state_metrics_and_single_sig_storage(spark, tmp_path):
-    """ADVICE r3 (low): each signature is persisted once in the sigs
-    table (not once per band), and per-batch state telemetry is
-    emitted with monotonically growing state_bytes."""
-    import glob
-    import os
-    import time
-
-    from pyspark.sql import Row
-
-    from movie_rec_spark.operators.dedup import MINHASH_BANDS
-    from movie_rec_spark.streaming.ingest import (
-        read_state_metrics,
-        run_incremental_neardup,
-    )
-
-    src = str(tmp_path / "m_src")
-    os.makedirs(src)
-
-    def doc(i, t):
-        return Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t))
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    b1 = [doc(1, base), doc(2, "completely unrelated words about spark")]
-    b2 = [doc(10, base + " tail")]
-    spark.createDataFrame(b1).coalesce(1).write.mode("append").parquet(src)
-    first = set(glob.glob(src + "/*.parquet"))
-    time.sleep(1.1)
-    spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src)
-    for f in set(glob.glob(src + "/*.parquet")) - first:
-        os.utime(f)
-
-    state = str(tmp_path / "m_state")
-    run_incremental_neardup(
-        spark, src, str(tmp_path / "m_ckpt"), state,
-        str(tmp_path / "m_log"))
-
-    # cross-batch pair still found with the split band/sig state
-    pairs = {(r.new_doc, r.old_doc)
-             for r in spark.read.parquet(str(tmp_path / "m_log") + "/*/").collect()}
-    assert (10, 1) in pairs
-
-    sigs = spark.read.parquet(state + "/sigs/*/")
-    bands = spark.read.parquet(state + "/bands/*/")
-    assert sigs.count() == 3                       # one row per doc
-    assert bands.count() == 3 * MINHASH_BANDS
-    assert "sig" not in bands.columns              # no 8x sig duplication
-
-    m = {r.batch_id: r for r in read_state_metrics(spark, state).collect()}
-    assert set(m) == {0, 1}
-    assert m[0].sig_rows_added == 2 and m[1].sig_rows_added == 1
-    assert m[1].state_bytes > m[0].state_bytes > 0
-    assert m[1].state_files > 0
-
-
-def test_neardup_state_family_guard(spark, tmp_path):
-    """r10 review finding: persisted band keys are only comparable
-    within one signature family. Resuming a portable-family state with
-    portable=False must raise (not silently join STRING keys against
-    BIGINT ones), and a legacy pre-marker state (bands exist, no
-    family dir) must raise with the rebuild guidance."""
-    import os
-    import shutil
-
-    import pytest
-    from pyspark.sql import Row
-
-    from movie_rec_spark.streaming.ingest import run_incremental_neardup
-
-    src = str(tmp_path / "f_src")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [Row(doc_id=1, text="alpha beta gamma delta", lang="en",
-             source="s", n_chars=22)]).coalesce(1) \
-        .write.mode("append").parquet(src)
-    state = str(tmp_path / "f_state")
-    run_incremental_neardup(
-        spark, src, str(tmp_path / "f_ckpt"), state,
-        str(tmp_path / "f_log"))
-    assert spark.read.parquet(state + "/family").first()[0] \
-        == "minhash-portable-v1"
-    with pytest.raises(ValueError, match="signature family"):
-        run_incremental_neardup(
-            spark, src, str(tmp_path / "f_ckpt2"), state,
-            str(tmp_path / "f_log2"), portable=False)
-    shutil.rmtree(state + "/family")  # simulate a pre-r10 state dir
-    with pytest.raises(ValueError, match="predates family markers"):
-        run_incremental_neardup(
-            spark, src, str(tmp_path / "f_ckpt3"), state,
-            str(tmp_path / "f_log3"))
-
-
-def test_rocksdb_state_conf_shape():
-    """The RocksDB posture helper pins the provider class and a
-    bounded compaction cadence (snapshot every N deltas)."""
-    from movie_rec_spark.streaming.ingest import rocksdb_state_conf
-
-    conf = rocksdb_state_conf()
-    assert conf["spark.sql.streaming.stateStore.providerClass"].endswith(
-        "RocksDBStateStoreProvider")
-    assert int(conf["spark.sql.streaming.stateStore.minDeltasForSnapshot"]) > 0
-    assert conf["spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled"] == "true"
-    assert "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" in conf
-
-
-def test_state_compaction_snapshot_and_replay_floor(spark, tmp_path):
-    """compact_state folds the per-batch digest deltas into one
-    snapshot, readers see identical pre-batch state afterwards, the
-    stream keeps deduping correctly against the compacted state, and a
-    reader positioned BEFORE the snapshot boundary (an uncommitted
-    batch replay) never sees data the snapshot baked in."""
-    import glob
-    import os
-    import time
-
-    from pyspark.sql import Row
-
-    from movie_rec_spark.streaming.ingest import (
-        _list_prior_batches,
-        compact_state,
-        run_incremental_ingest,
-    )
-
-    src = str(tmp_path / "c_src")
-    state = str(tmp_path / "c_state")
-    log = str(tmp_path / "c_log")
-    ckpt = str(tmp_path / "c_ckpt")
-    os.makedirs(src)
-
-    def doc(i, t):
-        return Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t))
-
-    def add_batch(rows):
-        before = set(glob.glob(src + "/*.parquet"))
-        time.sleep(1.05)
-        spark.createDataFrame(rows).coalesce(1).write.mode(
-            "append").parquet(src)
-        for f in set(glob.glob(src + "/*.parquet")) - before:
-            os.utime(f)
-
-    add_batch([doc(1, "alpha"), doc(2, "beta")])
-    add_batch([doc(3, "gamma")])
-    run_incremental_ingest(spark, src, ckpt, state, log)
-
-    before_rows = {r.fp for r in
-                   spark.read.parquet(*_list_prior_batches(
-                       spark, state, 99)).collect()}
-    summary = compact_state(spark, state)
-    assert summary["snapshot"] == 2 and summary["rows"] == 3
-    dirs = sorted(os.path.basename(p)
-                  for p in glob.glob(state + "/*") if os.path.isdir(p))
-    assert dirs == ["snapshot_2"]
-    after_rows = {r.fp for r in
-                  spark.read.parquet(*_list_prior_batches(
-                      spark, state, 99)).collect()}
-    assert after_rows == before_rows
-    # a replay positioned BEFORE the snapshot boundary must not read it
-    assert _list_prior_batches(spark, state, 1) == []
-
-    # the stream continues against the compacted state: 'alpha' from
-    # batch 0 is still recognized as a corpus duplicate
-    add_batch([doc(10, "alpha"), doc(11, "delta")])
-    run_incremental_ingest(spark, src, ckpt, state, log)
-    verdicts = {r.doc_id: r.status
-                for r in spark.read.option("recursiveFileLookup", "true")
-                .parquet(log).collect()}
-    assert verdicts[10] == "dup_of_corpus"
-    assert verdicts[11] == "new"
-    # idempotent: nothing new to fold -> no-op... until new deltas exist
-    again = compact_state(spark, state)
-    assert again["snapshot"] == 3 and again["rows"] == 4
-    assert compact_state(spark, state)["snapshot"] is None
-
-
 def test_streaming_anomaly_matches_batch_kernel(spark, tmp_path):
     """Batch/stream parity for the anomaly detector: the stateful
     online scorer over in-order micro-batches produces the SAME
