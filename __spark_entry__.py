@@ -565,7 +565,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # aggregation Exchange disappears — tests/test_layout.py asserts
         # the plan delta). Oracle: identical SQL; the layout must never
         # change the answer.
-        "q_top_movies_bucketed": lambda s, d: R.q_top_movies(
+        "q_top_movies_bucketed": lambda s, d: R.top_movies_plan(
             L.bucketed_table(s, d, "lineitem", "l_partkey", 16),
             _t("part")(s, d)),
         # the fact-fact half of the bucketing story: both facts

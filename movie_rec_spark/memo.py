@@ -1,11 +1,18 @@
-"""The library's one memo, for parquet schemas and row counts and the
-persisted IVF and SemDeDup fits. A key is the source's fingerprint plus
-a params tuple naming the call site. A table path, or a DataFrame with
-input files, is fingerprinted by each file's local (path, size,
-mtime_ns), so a table rewritten in place is read afresh. A DataFrame
-with no input files is keyed by ``id()`` and pinned by its entry. At
-most ``MAX_ENTRIES`` entries are kept (LRU); evicting or clearing an
-entry unpersists the DataFrames in its value.
+"""The library's one memo, for parquet schemas and row counts, the
+persisted IVF and SemDeDup fits, and serving's user-independent
+answers. A key is the source's fingerprint plus a params tuple naming
+the call site. A table path is fingerprinted by each file's local
+(path, size, mtime_ns), so a table rewritten in place is read afresh.
+A DataFrame with input files is keyed by those files plus its plan's
+``semanticHash()``, and a hit must also pass ``sameSemantics`` against
+the stored source, so a transformed frame over the same files never
+gets another frame's value. A DataFrame with no input files is keyed
+by ``id()`` and pinned by its entry. A tuple of sources is keyed by
+each in turn. At most ``MAX_ENTRIES`` entries are kept (LRU); evicting
+or clearing an entry releases the DataFrames in its value, cached or
+``localCheckpoint``-ed. A released checkpoint cannot be recomputed, so
+a frame built over a memoized checkpoint is collected before later
+lookups can evict it.
 """
 
 from __future__ import annotations
@@ -33,42 +40,74 @@ def part_files(path: str) -> list[str]:
                   if f.endswith(".parquet") and not f.startswith((".", "_")))
 
 
-def _fingerprint(source: str | DataFrame) -> tuple:
+def _fingerprint(source) -> tuple:
+    if isinstance(source, tuple):
+        return tuple(_fingerprint(s) for s in source)
+    plan = ()
     if isinstance(source, DataFrame):
         files = [unquote(urlparse(u).path) for u in source.inputFiles()]
         if not files:
             return ("obj", id(source))
+        plan = (source.semanticHash(),)
     else:
         # an empty table directory is keyed by the directory itself
         files = part_files(source) or [source]
     stats = [(f, os.stat(f)) for f in sorted(files)]
-    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats) + plan
+
+
+def _same(source, stored) -> bool:
+    """Whether ``stored``, the source an entry was built for, computes
+    what ``source`` computes (a matching key is only a hash)."""
+    if isinstance(source, tuple):
+        return all(_same(s, t) for s, t in zip(source, stored))
+    if isinstance(source, DataFrame) and source is not stored:
+        return source.sameSemantics(stored)
+    return True
+
+
+def _release(df: DataFrame) -> None:
+    """Free ``df``'s blocks. ``unpersist`` only drops a cached plan; a
+    ``localCheckpoint`` frame's blocks belong to the RDD under its plan."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _unpersist(values: list) -> None:
     for value in values:
         for v in value if isinstance(value, tuple) else (value,):
             if isinstance(v, DataFrame):
-                v.unpersist()
+                _release(v)
 
 
-def lookup(source: str | DataFrame, params: tuple,
+def lookup(source: str | DataFrame | tuple, params: tuple,
            build: Callable[[], Any]) -> Any:
     """``build()``'s value for ``source`` and ``params``, memoized. A
-    miss builds outside the lock (a fit runs Spark jobs)."""
+    miss builds outside the lock (a fit runs Spark jobs). A key whose
+    entry fails the semantic check (a hash collision) is rebuilt and
+    replaces that entry."""
     key = (_fingerprint(source), params)
     with _lock:
-        if key in _entries:
+        entry = _entries.get(key)
+        if entry is not None:
             _entries.move_to_end(key)
-            return _entries[key][0]
+    if entry is not None and _same(source, entry[1]):
+        return entry[0]
     value = build()
     dropped = []
     with _lock:
-        if key in _entries:  # a concurrent build of this key won
+        entry = _entries.get(key)
+        if entry is not None and _same(source, entry[1]):
+            # a concurrent build of this key won
             dropped.append(value)
-            value = _entries[key][0]
+            value = entry[0]
         else:
+            if entry is not None:
+                dropped.append(entry[0])
             _entries[key] = (value, source)
+            _entries.move_to_end(key)
             while len(_entries) > MAX_ENTRIES:
                 dropped.append(_entries.popitem(last=False)[1][0])
     _unpersist(dropped)
@@ -76,7 +115,7 @@ def lookup(source: str | DataFrame, params: tuple,
 
 
 def clear() -> None:
-    """Drop every entry, unpersisting the DataFrames it holds."""
+    """Drop every entry, releasing the DataFrames it holds."""
     with _lock:
         dropped = [value for value, _ in _entries.values()]
         _entries.clear()

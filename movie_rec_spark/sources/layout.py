@@ -104,31 +104,3 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
     planning time (never touch excluded directories)."""
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
-
-def zvalue_n(cols, bits: int = 16):
-    """N-dimensional Morton (Z-order) interleave of non-negative
-    integer columns, ``bits`` bits each. Sorting by the z-value
-    clusters rows so that EVERY dimension is locally coherent, which is
-    what makes row-group min/max statistics selective for
-    multi-column predicates (Delta's OPTIMIZE ZORDER BY accepts a
-    column LIST for the same reason). Dimension d contributes its bit
-    i at output position i·n + d, so the total z-width is n·bits —
-    keep n·bits ≤ 62 to stay inside a signed long (3 dims × 16 bits =
-    48 default). Pure unrolled codegen: shift amounts are literals, no
-    UDF, no shuffle."""
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    if n < 2:
-        raise ValueError("zvalue_n needs at least 2 cluster columns")
-    if n * bits > 62:
-        raise ValueError(
-            f"{n} dims x {bits} bits = {n * bits} z-bits overflows a "
-            "signed long; lower bits")
-    longs = [c.cast("long") for c in cols]
-    z = F.lit(0).cast("long")
-    for i in range(bits):  # unrolled: shift amounts must be literals
-        for d, c in enumerate(longs):
-            z = z + F.shiftleft(
-                F.shiftright(c, i).bitwiseAND(F.lit(1)), i * n + d)
-    return z

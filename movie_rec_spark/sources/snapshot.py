@@ -342,8 +342,9 @@ def snapshot_read(spark: SparkSession, path: str,
     if [file_min, file_max] intersects [lo, hi] (None = open end).
     SKIPPING ONLY — the caller still applies the exact row predicate;
     a file with no recorded stats for the column is conservatively
-    kept. Combined with a sorted/z-ordered layout this is the Iceberg
-    file-skipping story one level above parquet row-group pruning.
+    kept. Combined with a sorted layout (``snapshot_compact``'s
+    ``sort_col``) this is the Iceberg file-skipping story one level
+    above parquet row-group pruning.
 
     Partition pruning here never even LOADS excluded partitions'
     segment files — planning IO is proportional to the partitions
@@ -571,8 +572,7 @@ def snapshot_append(spark: SparkSession, path: str,
 
 def snapshot_compact(spark: SparkSession, path: str,
                      max_files: int = 4,
-                     sort_col: str | None = None,
-                     zorder_cols: tuple[str, ...] = ()) -> dict:
+                     sort_col: str | None = None) -> dict:
     """OPTIMIZE: rewrite partitions whose file count exceeds
     ``max_files`` into one file each and commit atomically — readers on
     the old snapshot keep their old files (they are not deleted), so
@@ -582,15 +582,7 @@ def snapshot_compact(spark: SparkSession, path: str,
     carry their file counts, so no segment is loaded for compliant
     partitions; compaction also folds each offender's accreted segment
     list back to one segment (metadata compaction riding along).
-
-    ``zorder_cols`` = OPTIMIZE ... ZORDER BY: rewritten rows sort by
-    the Morton interleave of the named columns (sources/layout.zvalue_n),
-    so a maintained snapshot table gets multi-column data skipping as
-    a side effect of routine compaction, exactly Delta/Iceberg's
-    OPTIMIZE ZORDER posture. Mutually exclusive with ``sort_col``
-    (one ordering per rewrite)."""
-    if sort_col and zorder_cols:
-        raise ValueError("pass sort_col or zorder_cols, not both")
+    ``sort_col`` orders each rewritten partition's rows."""
     base = snapshot_version(path)
     man = _load_manifest(path, base)
     partition_col = man["summary"]["partition_col"]
@@ -606,12 +598,6 @@ def snapshot_compact(spark: SparkSession, path: str,
     out = df.repartition(len(offenders), partition_col)
     if sort_col:
         out = out.sortWithinPartitions(sort_col)
-    elif zorder_cols:
-        from movie_rec_spark.sources.layout import zvalue_n
-
-        out = (out.withColumn(
-            "_zv", zvalue_n([F.col(c) for c in zorder_cols]))
-            .sortWithinPartitions("_zv").drop("_zv"))
     out = out.localCheckpoint(eager=True)
     new_entries = _write_data_files(out, path, partition_col,
                                     man["summary"].get("stats_cols"))

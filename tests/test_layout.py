@@ -15,7 +15,6 @@ from movie_rec_spark.sources.catalog import load_table
 from movie_rec_spark.sources.layout import (
     write_bucketed,
     write_partitioned,
-    zvalue_n,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -83,30 +82,19 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert got == want
 
 
-def test_zvalue_interleaves_bits(spark):
-    """Morton interleave of known values: z(a=0b11, b=0b01) =
-    0b0111 = 7; z(1,1)=3; z(2,0)=4; dimension order (a even bits)."""
-    df = spark.createDataFrame(
-        [(3, 1), (1, 1), (2, 0), (0, 0)], "a int, b int")
-    out = {(r.a, r.b): r.z for r in
-           df.select("a", "b", zvalue_n([F.col("a"), F.col("b")])
-                     .alias("z")).collect()}
-    assert out == {(3, 1): 7, (1, 1): 3, (2, 0): 4, (0, 0): 0}
-
-
 def test_bucketed_catalog_drops_agg_exchange(spark):
-    """q_top_movies over the maintained bucketed lineitem (bucketed on
-    the grouping key l_partkey) loses the aggregation Exchange the
-    parquet path needs, and the rows are identical — layout must never
-    change the answer."""
-    from movie_rec_spark.operators.relational import q_top_movies
+    """The top-movies plan over the maintained bucketed lineitem
+    (bucketed on the grouping key l_partkey) loses the aggregation
+    Exchange the parquet path needs, and the rows are identical —
+    layout must never change the answer."""
+    from movie_rec_spark.operators.relational import top_movies_plan
     from movie_rec_spark.plans import count_exchanges, scanned_bucketed
     from movie_rec_spark.sources.layout import bucketed_table
 
     part = load_table(spark, SF, "part")
-    plain = q_top_movies(load_table(spark, SF, "lineitem"), part)
+    plain = top_movies_plan(load_table(spark, SF, "lineitem"), part)
     li_b = bucketed_table(spark, SF, "lineitem", "l_partkey", 8)
-    buck = q_top_movies(li_b, part)
+    buck = top_movies_plan(li_b, part)
     assert scanned_bucketed(buck)
     assert count_exchanges(buck) < count_exchanges(plain), (
         f"bucketed plan must drop the groupBy Exchange: "
@@ -142,23 +130,6 @@ def test_bucketed_catalog_reregisters_without_rewrite(spark):
     after = {f: os.path.getmtime(f)
              for f in glob.glob(os.path.join(loc[0], "*.parquet"))}
     assert after == before, "re-registration must not rewrite data files"
-
-
-def test_zvalue_n_three_dims_and_overflow_guard(spark):
-    """3-D Morton: dim d's bit i lands at position 3i+d —
-    z(1,0,0)=1, z(0,1,0)=2, z(0,0,1)=4, z(1,1,1)=7, z(2,0,0)=8;
-    >62 z-bits raises."""
-    df = spark.createDataFrame(
-        [(1, 0, 0), (0, 1, 0), (0, 0, 1), (1, 1, 1), (2, 0, 0)],
-        "a int, b int, c int")
-    out = {(r.a, r.b, r.c): r.z for r in df.select(
-        "a", "b", "c",
-        zvalue_n([F.col("a"), F.col("b"), F.col("c")], bits=8)
-        .alias("z")).collect()}
-    assert out == {(1, 0, 0): 1, (0, 1, 0): 2, (0, 0, 1): 4,
-                   (1, 1, 1): 7, (2, 0, 0): 8}
-    with pytest.raises(ValueError, match="overflows"):
-        zvalue_n([F.col("a")] * 4, bits=16)
 
 
 def test_cobucketed_fact_join_drops_exchanges_and_sorts(

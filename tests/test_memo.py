@@ -105,3 +105,55 @@ def test_concurrent_lookups_keep_the_bound_and_their_keys(table):
     assert not any(th.is_alive() for th in threads)
     assert errors == []
     assert len(memo._entries) <= memo.MAX_ENTRIES
+
+
+def test_transformed_frame_over_the_same_files_gets_its_own_value(spark):
+    from pyspark.sql import functions as F
+
+    from movie_rec_spark.sources.catalog import load_table
+
+    memo.clear()
+    sf = "/root/testdata/sf0.001"
+    li = load_table(spark, sf, "lineitem")
+    big = li.filter(F.col("l_quantity") >= 25)
+    n_all, n_big = li.count(), big.count()
+    assert n_big < n_all
+    assert memo.lookup(li, ("n",), li.count) == n_all
+    assert memo.lookup(big, ("n",), big.count) == n_big
+    # a fresh read of the same files is the same plan: a hit
+    again = load_table(spark, sf, "lineitem")
+    assert memo.lookup(again, ("n",), lambda: "rebuilt") == n_all
+    memo.clear()
+
+
+def test_hash_collision_is_rebuilt_not_served(spark, table, monkeypatch):
+    a = spark.read.parquet(table)
+    b = a.filter("a > 1")
+    monkeypatch.setattr(type(a), "semanticHash", lambda self: 7)
+    assert memo.lookup(a, ("v",), lambda: "a") == "a"
+    assert memo.lookup(b, ("v",), lambda: "b") == "b"
+    # the colliding build replaced the entry instead of adding one
+    assert len(memo._entries) == 1
+    assert memo.lookup(b, ("v",), lambda: "b2") == "b"
+
+
+def _persistent_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_release_frees_checkpointed_and_cached_values(spark, table):
+    base = _persistent_rdds(spark)
+    memo.lookup(table, ("ckpt",),
+                lambda: spark.range(5).localCheckpoint(eager=True))
+    memo.lookup(table, ("cache",), lambda: spark.range(4).cache())
+    memo.lookup(table, ("cache",), lambda: None).count()
+    assert _persistent_rdds(spark) == base + 2
+    memo.clear()
+    assert _persistent_rdds(spark) == base
+
+    memo.lookup(table, ("ckpt",),
+                lambda: spark.range(5).localCheckpoint(eager=True))
+    assert _persistent_rdds(spark) == base + 1
+    _fill(table, memo.MAX_ENTRIES)
+    assert ("ckpt",) not in {p for _, p in memo._entries}
+    assert _persistent_rdds(spark) == base

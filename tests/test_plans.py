@@ -21,7 +21,7 @@ def _t(spark, name):
 
 
 def test_top_movies_plan(spark):
-    df = R.q_top_movies(_t(spark, "lineitem"), _t(spark, "part"))
+    df = R.top_movies_plan(_t(spark, "lineitem"), _t(spark, "part"))
     assert P.has_pushed_filter(df, "GreaterThanOrEqual(l_quantity,25.0)")
     assert P.has_broadcast_join(df)
     assert P.has_top_k(df)

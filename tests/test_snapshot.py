@@ -581,37 +581,22 @@ def test_snapshot_read_empty_states_return_empty_frame(spark, tmp_path):
     assert set(empty.columns) == {"id", "day", "val"}
 
 
-def test_snapshot_compact_zorder_clusters_rows(spark, tmp_path):
-    """OPTIMIZE ZORDER through compaction: the rewritten partition's
-    rows come back Morton-ordered on (a, b) — row k's interleave never
-    decreases — with row content identical and sort_col/zorder_cols
-    mutually exclusive."""
-    from movie_rec_spark.sources.layout import zvalue_n
-    from movie_rec_spark.sources.snapshot import snapshot_append
 
-    path = str(tmp_path / "zsnap")
+def test_snapshot_compact_sort_col_orders_rows(spark, tmp_path):
+    """Compaction with ``sort_col``: the rewritten partition is one file
+    whose physical row order follows the column, rows unchanged."""
+    path = str(tmp_path / "sorted")
     mk = lambda lo: spark.createDataFrame(
-        [Row(id=i, day=1, a=i % 7, b=(i * 3) % 11)
-         for i in range(lo, lo + 10)])
+        [Row(id=i, day=1, a=(i * 37) % 60) for i in range(lo, lo + 10)])
     snapshot_create(spark, path, mk(0), "day")
     for lo in (10, 20, 30, 40, 50):
         snapshot_append(spark, path, mk(lo))
-
-    with pytest.raises(ValueError):
-        snapshot_compact(spark, path, max_files=1,
-                         sort_col="a", zorder_cols=("a", "b"))
-
-    res = snapshot_compact(spark, path, max_files=1,
-                           zorder_cols=("a", "b"))
+    res = snapshot_compact(spark, path, max_files=1, sort_col="a")
     assert res["rewritten"] == 1
     got = snapshot_read(spark, path)
-    assert got.count() == 60
     assert {r.id for r in got.collect()} == set(range(60))
-    # one file after compaction; its physical row order is z-ordered
     files = got.inputFiles()
     assert len(files) == 1
-    zs = [r.z for r in
-          spark.read.parquet(files[0].replace("file:", ""))
-          .select(zvalue_n([F.col("a"), F.col("b")]).alias("z"))
-          .collect()]
-    assert zs == sorted(zs)
+    a = [r.a for r in spark.read.parquet(files[0].replace("file:", ""))
+         .select("a").collect()]
+    assert a == sorted(a) and len(a) == 60
