@@ -21,7 +21,6 @@ stays inside codegen and is reproducible across engines.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from fractions import Fraction
 
 from pyspark.sql import DataFrame
@@ -382,8 +381,8 @@ def prefix_index(documents: DataFrame,
     """The (doc_id, g) PREFIX rows q_dedup_prefix indexes: each doc's
     first s − ⌈τ·s⌉ + 1 shingles in ascending global-df order (rarest
     first, ties by shingle). Exposed separately so the candidate
-    volume of the prefix strategy is observable via ``blocking_stats``
-    next to the full-index / minhash / simhash paths.
+    volume of the prefix strategy (Σ occ·(occ−1)/2 over its (g) blocks)
+    can be counted next to the full-index / minhash / simhash paths.
 
     ``with_pos=True`` additionally carries ``rn`` (the shingle's
     1-based position in the doc's global-df order — the SAME total
@@ -446,7 +445,7 @@ def q_dedup_prefix(documents: DataFrame,
     Scale shape: one df agg, one per-doc rank window (partitions
     bounded by doc length), the prefix self-join (small by design),
     and one verify join keyed on the candidate pair. All keyed; the
-    skew knob is the same as every blocked path (blocking_stats).
+    skew knob is the same as every blocked path (per-block occupancy).
     """
     sh = _shingle_rows(documents).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -539,7 +538,7 @@ def minhash_banded(documents: DataFrame,
                    portable: bool = True) -> DataFrame:
     """Banded MinHash signatures: (doc_id, sig, band, bh) rows — the
     blocked intermediate of q_dedup_minhash, exposed so its bucket
-    occupancy is observable via ``blocking_stats``. Portable mode
+    occupancy per (band, bh) can be counted. Portable mode
     (default) keys each band with the ':'-joined signature slice —
     a deterministic string both engines build identically — instead
     of an xxhash64 of the slice; the join cost is the same equi-join
@@ -645,7 +644,8 @@ def simhash_segments(documents: DataFrame, hamming_max: int = 3,
                      portable: bool = True) -> DataFrame:
     """Segmented SimHash signatures: (doc_id, sig, q, qh) rows over
     ``hamming_max + 1`` contiguous bit segments — the blocked
-    intermediate of q_dedup_simhash, exposed for ``blocking_stats``.
+    intermediate of q_dedup_simhash, exposed so its per-(q, qh)
+    occupancy can be counted.
     Segment widths split the signature's ACTUAL bit width (56
     portable / 64 xxhash), so the pigeonhole guarantee is exact in
     both modes."""
@@ -1014,35 +1014,6 @@ def dedup_components_star(pairs: DataFrame, max_iter: int = 30,
         nodes.join(labels, "doc_id", "left")
         .select("doc_id",
                 F.coalesce(F.col("comp"), F.col("doc_id")).alias("comp"))
-    )
-
-
-def blocking_stats(blocked: DataFrame, block_cols: Sequence[str]) -> DataFrame:
-    """Observability for every LSH/blocking path — the 'no silent caps'
-    rule made measurable. Input: any blocked intermediate (one row per
-    (item, block)); output: ONE row of occupancy telemetry:
-
-      n_blocks, n_rows, max_occ, avg_occ, p99_occ,
-      candidate_pairs = Σ occ·(occ−1)/2  — the exact number of pair
-      comparisons the downstream bucket self-join will perform.
-
-    This is the quantity to alert on at scale: recall regressions and
-    hot-bucket skew BOTH show up here (recall loss → candidate_pairs
-    collapses; a degenerate band → max_occ explodes and the self-join
-    goes quadratic) long before either shows up as a wrong answer or a
-    straggler task. Works for minhash_banded (band, bh),
-    simhash_segments (q, qh), and similarity.lsh_bucketed (tbl, bucket).
-    """
-    occ = blocked.groupBy(*[F.col(c) for c in block_cols]).agg(
-        F.count(F.lit(1)).alias("occ"))
-    return occ.agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.sum("occ").alias("n_rows"),
-        F.max("occ").alias("max_occ"),
-        F.round(F.avg("occ"), 2).alias("avg_occ"),
-        F.expr("percentile_approx(occ, 0.99)").alias("p99_occ"),
-        F.sum(F.expr("occ * (occ - 1) / 2")).cast("long")
-        .alias("candidate_pairs"),
     )
 
 
@@ -1522,8 +1493,8 @@ def q_fuzzy_match(part: DataFrame,
     Scale shape: the groupBy collapses duplicates BEFORE pairing (the
     fixture has 2 000 parts but 64 entities — pairing raw rows would
     square the duplicate count for nothing), one shuffle keys entities
-    by block, and candidate volume is sum_b occ_b² — observable with
-    blocking_stats like every other blocked path. Levenshtein is a
+    by block, and candidate volume is sum_b occ_b², countable from the
+    blocks like every other blocked path. Levenshtein is a
     JVM codegen expression on both engines with identical unit-cost
     semantics.
     """
@@ -2549,8 +2520,8 @@ def simhash_sized_sigs(documents: DataFrame, sig_bits: int,
 def simhash_sized_segments(documents: DataFrame, sig_bits: int,
                            seg_width: int) -> DataFrame:
     """Blocked intermediate of the sized family: (doc_id, segs, q, qh)
-    — one row per (doc, segment), the ``blocking_stats`` input and the
-    equi-join side of ``simhash_neardup``."""
+    — one row per (doc, segment), the equi-join side of
+    ``simhash_neardup``."""
     sigs = simhash_sized_sigs(documents, sig_bits, seg_width)
     return sigs.select(
         "doc_id", "segs",

@@ -240,8 +240,9 @@ def q_merge_events(events: DataFrame) -> DataFrame:
     delete / ts-guarded-update / insert in one statement. Fully
     SQL-expressible (two windowed CTEs + full outer join + CASE), so
     the driver hash-checks the whole MERGE kernel; the IO form
-    (merge_into) adds only partition scoping on top of this exact
-    plan and is pytest-verified byte-for-byte on disk."""
+    (``snapshot_merge``, checked end to end by q_merge_snapshot and
+    q_merge_stream) adds only partition scoping and an atomic
+    manifest commit on top of this exact plan."""
     from movie_rec_spark.sources.merge import merge_frames
 
     cols = ["event_id", "user_id", "event_type", "value", "ts"]

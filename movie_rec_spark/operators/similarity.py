@@ -664,7 +664,8 @@ def lsh_neardup(embeddings: DataFrame, dim: int,
     grown to hold expected recall — so the DECLARED query stays linear
     at 30× without manual configuration (SCALE.md measured the fixed
     b=3 default at 904× candidate blowup).  Passing explicit
-    ``n_bits``/``n_tables`` (as the scale_trend isolation runs do)
+    ``n_bits``/``n_tables`` (as the isolation runs of the retired
+    scale_trend probe did, ``git show d6b2a7b:tools/scale_trend.py``)
     bypasses the count entirely.
 
     Shuffle discipline, default ``verify='bucket'``: each bucket group
@@ -677,7 +678,7 @@ def lsh_neardup(embeddings: DataFrame, dim: int,
     a low threshold (weak per-bit contrast: p≈0.64 for sim 0.42 vs 0.5
     random) is near-quadratic — measured 10.4 s vs 1.5 s at sf0.1.
     Per-task memory is one bucket ≈ occupancy·dim·8 B; size n_bits so
-    occupancy stays bounded (observable via ``blocking_stats``), which
+    occupancy stays bounded (a count per (tbl, bucket) shows it), which
     the recall formula requires anyway. ``verify='join'`` keeps that
     pure-shuffle variant (no per-bucket memory envelope at all);
     ``verify='broadcast'`` is the OPT-IN collect-once fast path for
@@ -1099,7 +1100,7 @@ def portable_cells_centers(embeddings: DataFrame, n_cells: int,
     can never serve a stale-seed answer.
     """
     return memo.lookup(embeddings, ("portable_cells", n_cells, iters),
-                       lambda: _portable_fit(embeddings, n_cells, iters))
+                       lambda: _portable_fit(embeddings, n_cells, iters))[:2]
 
 
 def _portable_fit(embeddings: DataFrame, n_cells: int, iters: int):
@@ -1155,7 +1156,9 @@ def _portable_fit(embeddings: DataFrame, n_cells: int, iters: int):
     assigned = q.mapInPandas(assigner(centers, True),
                              "vec_id bigint, cell int, "
                              "embedding array<double>").persist()
-    return assigned, centers
+    # q rides in the memo entry so releasing it frees q's checkpoint
+    # blocks too, not only the assignment built over them
+    return assigned, centers, q
 
 
 def portable_cells(embeddings: DataFrame, n_cells: int,

@@ -842,7 +842,8 @@ def knn_sparse(flat: DataFrame, query_id: int, k: int,
     rounds to 4dp before the (sim DESC, doc_id) cut).
 
     This replaced the dense path (text_embedding → 64-wide arrays →
-    q_knn_brute) after tools/retrieval_scale.py measured q_chunk_knn
+    q_knn_brute) after the retrieval_scale probe (``git show
+    d6b2a7b:tools/retrieval_scale.py``) measured q_chunk_knn
     at 57.9 s at 30× corpus: chunks carry ≤CHUNK_TOKENS distinct
     positions, so densifying to dim-wide arrays (64 element_at map
     probes per chunk + a dim-length localCheckpoint materialization +
@@ -1042,9 +1043,9 @@ def q_chunk_knn(documents: DataFrame, query_chunk_id: int = 0,
     (chunk, pos) shuffle, and the scoring is the sparse inverted
     kernel (``knn_sparse`` — a chunk carries ≤CHUNK_TOKENS nonzero
     positions, so the former dense-array path paid ~6× the nonzero
-    work; 57.9 → 5.4 s at the 30× retrieval_scale probe) — at corpus
-    scale the chunk vectors go through an IVF index (q_knn_ivf's
-    cell probe) instead of the full scan.
+    work; 57.9 → 5.4 s at the 30× retrieval_scale probe, see
+    ``knn_sparse``) — at corpus scale the chunk vectors go through an
+    IVF index (q_knn_ivf's cell probe) instead of the full scan.
     """
     from movie_rec_spark.operators.dedup import chunk_rows
 

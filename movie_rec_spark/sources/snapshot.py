@@ -1,11 +1,13 @@
-"""Manifest-committed snapshot tables — atomic commits + snapshot
-isolation for the lakehouse write paths, in plain Spark + parquet.
+"""Manifest-committed snapshot tables — the engine's one file-commit
+protocol: atomic commits + snapshot isolation for every lakehouse write
+path (create, merge, append, compact, the CDC stream sink), in plain
+Spark + parquet.
 
-This closes the caveat ``merge.py`` documents: plain dynamic partition
-overwrite replaces directories non-transactionally, so a concurrent
-reader can observe a half-merged table. The fix is the standard
-log-structured table-format protocol (Delta's ``_delta_log``, Iceberg's
-metadata tree, public designs both):
+A plain dynamic partition overwrite replaces directories one at a
+time, so a concurrent reader could observe a half-merged table. This
+module uses the standard log-structured table-format protocol
+instead (Delta's ``_delta_log``, Iceberg's metadata tree, public
+designs both):
 
 - **Data files are immutable and uniquely named.** A commit writes NEW
   files under ``data/c-<uuid>/``; it never modifies or deletes a file a
@@ -397,15 +399,16 @@ def snapshot_merge(spark: SparkSession, path: str, updates: DataFrame,
                    keys: Sequence[str], ts_col: str | None = None,
                    stream_batch_id: int | None = None,
                    schema_evolution: bool = False) -> dict:
-    """MERGE INTO with an atomic snapshot commit — the manifest-routed
-    form of ``merge.merge_into`` (same Delta-style semantics: tombstone
+    """MERGE INTO with an atomic snapshot commit: the
+    ``merge.merge_frames`` kernel (Delta-style semantics: tombstone
     deletes, winning updates replace, unmatched non-deleted rows
-    insert, ``ts_col`` guards out-of-order CDC batches; same batch
-    guards: key-unique, partition key in merge key, non-null partition
-    values).
+    insert, ``ts_col`` guards out-of-order CDC batches) behind the
+    batch guards: key-unique, partition key in merge key, non-null
+    partition values.
 
-    Scale shape mirrors merge_into: only the batch's partitions are
-    read (manifest pruning) and rewritten; untouched partitions carry
+    Scale shape: only the batch's partitions are read (manifest
+    pruning) and rewritten — a 10-row merge into a huge table touches
+    only the partitions those rows live in; untouched partitions carry
     over as SEGMENT references — zero IO, their entry lists are not
     even loaded, let alone rewritten. A
     partition whose every row was deleted simply has no files in the
@@ -415,13 +418,15 @@ def snapshot_merge(spark: SparkSession, path: str, updates: DataFrame,
     and a concurrent writer loses with ``SnapshotConflict`` instead of
     corrupting the table.
 
-    Schema discipline (same stance as merge_into): an update column the
-    table lacks is an ERROR unless ``schema_evolution=True``, which
-    widens the table — resident rows read the new columns as null via
-    parquet by-name resolution (``snapshot_read`` resolves the union
-    schema across file generations). Unlike merge_into, the batch must
-    CARRY every table column (partial-column batches are refused with a
-    clear error rather than silently keeping or nulling).
+    Schema discipline: an update column the table lacks is an ERROR
+    (silently dropping data a producer sent is the worst failure mode
+    of a sink) unless ``schema_evolution=True``, which widens the
+    table — resident rows read the new columns as null via parquet
+    by-name resolution (``snapshot_read`` resolves the union schema
+    across file generations). The batch must CARRY every table column
+    (partial-column batches are refused with a clear error rather than
+    silently keeping or nulling) with the table's types
+    (``_check_types``).
     """
     keys = list(keys)
     base = snapshot_version(path)
@@ -438,8 +443,8 @@ def snapshot_merge(spark: SparkSession, path: str, updates: DataFrame,
     _check_types(man["summary"].get("columns"),
                  updates.drop(DELETED_COL), "snapshot_merge")
     # ONE job for the key-uniqueness gate + touched-partition metadata
-    # + null-partition guard (r12 — same consolidation as merge_into;
-    # collect_set drops nulls, so nulls are counted explicitly)
+    # + null-partition guard (r12; collect_set drops nulls, so nulls
+    # are counted explicitly)
     meta = (updates.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("_mrs_c"))
             .agg(F.max("_mrs_c").alias("maxc"),

@@ -89,9 +89,9 @@ def event_counters_cdc(stream: DataFrame, op_col: str = "op") -> DataFrame:
     row's contribution and counter state always equals the batch recount
     of surviving events (pinned by test). Update output mode, one state
     row per user; a fully-deleted user converges to n_events = 0, the
-    same observable state as a Redis key DECRed back to zero. The
-    production sink is foreachBatch writing each micro-batch's changed
-    rows through the ``kvfile`` data source (sources/kv.py).
+    same observable state as a Redis key DECRed back to zero. A
+    production sink is foreachBatch merging each micro-batch's changed
+    rows into a snapshot table (``lakehouse.merge_stream_snapshot``).
     """
     sign = F.col(op_col).cast("long")
     return stream.groupBy("user_id").agg(

@@ -4,9 +4,10 @@ The ingestion-dedup stage of a training-data pipeline: upstream
 delivery is at-least-once (retries, replayed partitions), downstream
 wants exactly-one row per logical key. State per key is a single
 first-seen marker, so this is the minimal stateful operator: the
-at-scale cost model is |distinct keys| state rows (the
-tools/stream_state_scale.py regime analysis applies verbatim — state
-tracks KEYS, never events).
+at-scale cost model is |distinct keys| state rows (the regime
+analysis of the retired stream_state_scale probe, ``git show
+d6b2a7b:tools/stream_state_scale.py``, applies verbatim — state tracks
+KEYS, never events).
 
 Two implementations of the same processor:
 

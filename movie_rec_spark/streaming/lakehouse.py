@@ -1,21 +1,23 @@
 """CDC stream → lakehouse table: Structured Streaming foreachBatch
-driving ``sources.merge.merge_into``.
+committing each micro-batch to a manifest-committed snapshot table
+(``sources.snapshot.snapshot_merge``).
 
 This is the T-family composition the reference runs as row-at-a-time
 ORM writes (controller.py:124,142-146,170: session.merge / delete per
 request): a change stream lands as micro-batches, each batch is
-collapsed latest-wins per key and MERGEd into the partitioned parquet
-table — update/delete/insert in one statement, touching only the
-partitions present in the batch.
+collapsed latest-wins per key and MERGEd into the table —
+update/delete/insert in one statement, touching only the partitions
+present in the batch, published as one atomic version claim.
 
 Correctness under streaming's failure model:
 - WITHIN a batch: ``upsert_latest`` collapse (newest ts wins, unique
   tiebreak) makes the merge input key-unique and deterministic.
-- ACROSS batches / on REPLAY: the merge runs with ``ts_col``, so a
-  replayed batch or late-arriving older version can never regress a row
-  the table already advanced past (WHEN MATCHED AND s.ts >= t.ts).
-  Re-merging identical rows is a no-op — idempotent by construction,
-  which is exactly what foreachBatch's at-least-once contract requires.
+- ACROSS batches: the merge runs with ``ts_col``, so a re-delivered
+  batch or late-arriving older version can never regress a row the
+  table already advanced past (WHEN MATCHED AND s.ts >= t.ts).
+- On REPLAY of a committed batch id: the manifest's
+  ``last_stream_batch_id`` floor skips it outright — exactly-once
+  commits, not just idempotent re-application.
 - Deletes are CDC tombstones (``_deleted = true``); a tombstone is the
   newest version of its key, so the same ts guard orders it correctly.
 
@@ -32,44 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movie_rec_spark.operators.mutation import upsert_latest
-from movie_rec_spark.sources.merge import DELETED_COL, merge_into
-
-
-def merge_batch(batch: DataFrame, target_path: str, keys: Sequence[str],
-                partition_col: str, ts_col: str,
-                tiebreak_col: str) -> dict:
-    """One micro-batch of the CDC merge — module-level pure function of
-    (batch, current table) so replay idempotency is directly testable
-    (same pattern as ingest._ingest_apply). No isEmpty() pre-probe:
-    merge_into's meta aggregate answers emptiness in the same job that
-    gates key-uniqueness (r13 — one fewer driver-synced job per batch)."""
-    collapsed = upsert_latest(batch, keys=keys, ts_col=ts_col,
-                              tiebreak_col=tiebreak_col)
-    return merge_into(batch.sparkSession, target_path, collapsed,
-                      keys=keys, partition_col=partition_col,
-                      ts_col=ts_col)
-
-
-def merge_stream(spark: SparkSession, stream: DataFrame, target_path: str,
-                 checkpoint_dir: str, keys: Sequence[str],
-                 partition_col: str, ts_col: str = "ts",
-                 tiebreak_col: str = "event_id") -> list[dict]:
-    """Drive the CDC stream into the table with availableNow; returns
-    the per-batch commit summaries. ``stream`` rows carry the target
-    schema plus optional ``_deleted`` tombstone flags."""
-    log: list[dict] = []
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        summary = merge_batch(batch, target_path, keys, partition_col,
-                              ts_col, tiebreak_col)
-        log.append({"batch_id": batch_id, **summary})
-
-    q = (stream.writeStream.foreachBatch(apply)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return log
+from movie_rec_spark.sources.merge import DELETED_COL
+from movie_rec_spark.sources.snapshot import (
+    snapshot_create,
+    snapshot_merge,
+    snapshot_read,
+    snapshot_stream_floor,
+    snapshot_version,
+)
 
 
 def merge_batch_snapshot(batch: DataFrame, table_path: str,
@@ -78,25 +50,21 @@ def merge_batch_snapshot(batch: DataFrame, table_path: str,
     """One micro-batch committed to the MANIFEST table with TRUE
     exactly-once semantics: the snapshot's ``last_stream_batch_id``
     floor (carried through every commit, vacuum-proof) identifies a
-    replayed batch, which is SKIPPED rather than re-applied. That
-    upgrades ``merge_batch``'s at-least-once-plus-ts-idempotence to
-    exactly-once COMMITS — correct even for payload semantics that are
-    not naturally idempotent, and the whole batch is one atomic version
-    claim (a crash mid-commit publishes nothing; the replay then
-    commits cleanly). Assumes one writer stream per table: the floor is
-    keyed to the checkpoint's batch-id lineage, so pointing a FRESH
-    checkpoint (ids restarting at 0) at an existing table requires a
-    new table (same single-writer contract as the plain path)."""
-    from movie_rec_spark.sources.snapshot import (
-        snapshot_merge,
-        snapshot_stream_floor,
-    )
-
+    replayed batch, which is SKIPPED rather than re-applied — correct
+    even for payload semantics that are not naturally idempotent, and
+    the whole batch is one atomic version claim (a crash mid-commit
+    publishes nothing; the replay then commits cleanly). Assumes one
+    writer stream per table: the floor is keyed to the checkpoint's
+    batch-id lineage, so pointing a FRESH checkpoint (ids restarting
+    at 0) at an existing table requires a new table. An empty batch
+    commits nothing and returns ``snapshot_merge``'s summary keys with
+    zero counts at the current version."""
     if batch_id <= snapshot_stream_floor(table_path):
         return {"batch_id": batch_id, "skipped_replay": True}
     if batch.isEmpty():
-        return {"batch_id": batch_id, "partitions": 0, "updated": 0,
-                "deleted": 0, "inserted": 0, "ignored": 0}
+        return {"batch_id": batch_id, "partitions": 0, "files_added": 0,
+                "files_removed": 0,
+                "version": snapshot_version(table_path)}
     collapsed = upsert_latest(batch, keys=keys, ts_col=ts_col,
                               tiebreak_col=tiebreak_col)
     summary = snapshot_merge(batch.sparkSession, table_path, collapsed,
@@ -110,8 +78,9 @@ def merge_stream_snapshot(spark: SparkSession, stream: DataFrame,
                           keys: Sequence[str], ts_col: str = "ts",
                           tiebreak_col: str = "event_id") -> list[dict]:
     """Drive the CDC stream into a snapshot table with exactly-once
-    commits (``merge_batch_snapshot``); returns per-batch summaries
-    including replay skips."""
+    commits (``merge_batch_snapshot``) and availableNow; returns the
+    per-batch summaries including replay skips. ``stream`` rows carry
+    the table schema plus optional ``_deleted`` tombstone flags."""
     log: list[dict] = []
 
     def apply(batch: DataFrame, batch_id: int) -> None:
@@ -142,18 +111,19 @@ def read_change_stream(spark: SparkSession, src_dir: str, schema,
 def q_merge_stream(events: DataFrame) -> DataFrame:
     """The CDC-stream merge sink as a DECLARED query, proven under
     AT-LEAST-ONCE delivery: the q_merge_events scenario (even half =
-    resident table, odd half = CDC with %5 tombstones) arrives as
-    THREE micro-batches of which the first two are THE SAME BATCH
-    twice — the duplicate is the point. foreachBatch applies each
-    batch through the latest-wins collapse + ts-guarded MERGE, and the
-    final table must hash-match the same DuckDB oracle as
-    q_merge_events / q_merge_snapshot: duplicate delivery provably
+    resident snapshot table, odd half = CDC with %5 tombstones) arrives
+    as THREE micro-batches of which the first two are THE SAME BATCH
+    twice — the duplicate is the point. Each batch has its own batch
+    id, so the exactly-once floor does not skip the duplicate:
+    foreachBatch applies it through the latest-wins collapse and the
+    ts-guarded ``snapshot_merge``, and the table read back through its
+    manifest must hash-match the same DuckDB oracle as
+    q_merge_events / q_merge_snapshot. Duplicate delivery provably
     cannot change the result (re-merged rows no-op on the ts guard,
     re-delivered tombstones find nothing to delete and insert
     nothing). Batches are key-disjoint (user parity), so each key's
     versions collapse within one batch exactly as the oracle's
-    windowed CTE does; the docstring claim "idempotent by
-    construction" is now a driver-verified hash, not prose.
+    windowed CTE does.
     """
     import os
     import shutil
@@ -177,29 +147,20 @@ def q_merge_stream(events: DataFrame) -> DataFrame:
     # fall out of both parity filters, so an all-null-id frame would
     # wrongly pass this probe and seed a zero-row table.
     if events.isEmpty():
-        # a bare-parquet table seeded from nothing has no schema to
-        # read back — empty in, empty out (the totality contract)
+        # empty in, empty out (the totality contract)
         return t
     base = scratch_dir("mrs_mstream_")
     try:
         path = os.path.join(base, "tbl")
-        # cluster by the partition column before the partitioned write
-        # (guide §6 / Iceberg write.distribution-mode=hash): one task
-        # per partition value instead of every shuffle partition
-        # spraying a file into every directory — the seeded table's
-        # footer count is what every subsequent merge's mergeSchema
-        # read and scan pays for
-        t.repartition("event_type").write.partitionBy("event_type") \
-            .parquet(path)
+        snapshot_create(spark, path, t, "event_type")
         src = stage_batches(os.path.join(base, "src"), [b1, b1, b2])
-        schema = ("event_id bigint, user_id bigint, event_type string, "
-                  "value double, ts timestamp, _deleted boolean")
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", "1").parquet(src))
-        merge_stream(spark, stream, path, os.path.join(base, "ck"),
-                     keys=["user_id", "event_type"],
-                     partition_col="event_type", ts_col="ts")
-        return (spark.read.parquet(path).select(*cols)
+        # the staged frame's own schema: the table's column types come
+        # from the same frame, and snapshot_merge refuses type drift
+        merge_stream_snapshot(
+            spark, read_change_stream(spark, src, u.schema), path,
+            os.path.join(base, "ck"), keys=["user_id", "event_type"],
+            ts_col="ts")
+        return (snapshot_read(spark, path).select(*cols)
                 .localCheckpoint(eager=True))
     finally:
         shutil.rmtree(base, ignore_errors=True)

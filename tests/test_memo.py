@@ -157,3 +157,14 @@ def test_release_frees_checkpointed_and_cached_values(spark, table):
     _fill(table, memo.MAX_ENTRIES)
     assert ("ckpt",) not in {p for _, p in memo._entries}
     assert _persistent_rdds(spark) == base
+
+    # a fit whose value is built over its own checkpoint frees both
+    from movie_rec_spark.operators.similarity import portable_cells
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i)]) for i in range(8)],
+        "vec_id bigint, embedding array<double>")
+    portable_cells(emb, 2).count()
+    assert _persistent_rdds(spark) == base + 2
+    memo.clear()
+    assert _persistent_rdds(spark) == base

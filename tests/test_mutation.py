@@ -190,7 +190,7 @@ def test_snapshot_diff_classifies_all_four_states(spark):
 
 def test_snapshot_diff_refuses_schema_drift(spark):
     """A column present on one side only would silently hide its
-    changes — the kernel must refuse, like merge_into does."""
+    changes — the kernel must refuse, like snapshot_merge does."""
     import pytest
     from movie_rec_spark.operators.mutation import snapshot_diff
     old = spark.createDataFrame([(1, 10)], "k bigint, v int")

@@ -38,9 +38,7 @@ KEPT = {
     "read_ratings_csv": "paper surface S1-S3: the reference's CSV inputs",
     "read_links_csv": "paper surface S1-S3: the reference's CSV inputs",
     "read_quoted_csv": "paper surface S1-S3: the reference's CSV inputs",
-    "decode_rec_list": "S9-S11 KV serving form; the gold writer is open",
-    "KVFileDataSource": "S9-S11 KV serving form; the gold writer is open",
-    "read_kv_manifested": "S9-S11 KV serving form; the gold writer is open",
+    "decode_rec_list": "S11 decode of the rec_kv value the refresh writes",
     "append_events": "M1/F7 append mutation",
     "evaluate_rmse_mae": "ML3; the RMSE gate uses it",
     "snapshot_append": "the versioned gold publish builds on snapshots",
@@ -48,8 +46,6 @@ KEPT = {
     "snapshot_vacuum": "the versioned gold publish builds on snapshots",
     "manifest_entries": "the versioned gold publish builds on snapshots",
     "snapshot_merge_retry": "the snapshot concurrency tests drive it",
-    "merge_stream_snapshot": "the ratings ingest between refreshes",
-    "read_change_stream": "the ratings ingest between refreshes",
     "write_bucketed": "fixture of the bucketed-join plan tests",
     "write_partitioned": "fixture of the bucketed-join plan tests",
     "text_embedding": ("dense reference that tests compare knn_sparse/"

@@ -2,8 +2,8 @@
 commits, snapshot isolation, optimistic concurrency, time travel,
 vacuum. The load-bearing test is the concurrent one — a reader loop
 running against a merge loop must NEVER observe a half-merged table,
-which is exactly what the plain dynamic-overwrite path cannot promise
-(merge.py's documented caveat, closed here)."""
+which is exactly what a plain dynamic partition overwrite cannot
+promise."""
 
 from __future__ import annotations
 
@@ -104,6 +104,10 @@ def test_snapshot_merge_guards(spark, table):
                                   "id bigint, day bigint, val string")
     with pytest.raises(ValueError, match="NULL"):
         snapshot_merge(spark, table, nullp, keys=["id", "day"])
+    with pytest.raises(ValueError, match="required"):
+        snapshot_merge(spark, table,
+                       spark.createDataFrame([Row(id=3, val="x")]),
+                       keys=["id", "day"])
 
 
 def test_snapshot_ts_guard_ignores_stale_updates(spark, tmp_path):
@@ -118,6 +122,13 @@ def test_snapshot_ts_guard_ignores_stale_updates(spark, tmp_path):
         keys=["id", "day"], ts_col="ts")
     got = snapshot_read(spark, path).collect()
     assert [(r.ts, r.val) for r in got] == [(100, "current")]
+    # an equal ts wins (the guard is >=)
+    snapshot_merge(
+        spark, path,
+        spark.createDataFrame([Row(id=1, day=1, ts=100, val="equal")]),
+        keys=["id", "day"], ts_col="ts")
+    got = snapshot_read(spark, path).collect()
+    assert [(r.ts, r.val) for r in got] == [(100, "equal")]
 
 
 def test_snapshot_concurrent_reader_never_sees_partial_merge(
@@ -218,10 +229,12 @@ def test_snapshot_append_and_compact(spark, table):
 
 def test_snapshot_stream_exactly_once_commits(spark, tmp_path):
     """CDC stream -> snapshot table: every micro-batch is one atomic
-    version claim, and a REPLAYED batch (fresh checkpoint over the same
-    source — ids restart at 0) is skipped entirely via the
-    last_stream_batch_id floor: zero new versions, zero re-application.
-    The floor survives compaction commits in between."""
+    version claim, a stale late update (older ts than the row it
+    targets) leaves that row as it is, and a REPLAYED batch (fresh
+    checkpoint over the same source — ids restart at 0) is skipped
+    entirely via the last_stream_batch_id floor: zero new versions,
+    zero re-application. The floor survives compaction commits in
+    between."""
     from movie_rec_spark.sources.snapshot import snapshot_compact
     from movie_rec_spark.streaming.lakehouse import (
         merge_batch_snapshot,
@@ -243,7 +256,8 @@ def test_snapshot_stream_exactly_once_commits(spark, tmp_path):
 
     b1 = [(1, 1, "a2", 200, 10, False),    # update
           (4, 2, "d", 200, 12, False)]     # insert
-    b2 = [(3, 2, None, 300, 21, True)]     # tombstone
+    b2 = [(3, 2, None, 300, 21, True),     # tombstone
+          (1, 1, "STALE", 150, 20, False)]  # older than b1's 200
     spark.createDataFrame(b1, schema).coalesce(1).write.mode(
         "append").parquet(src)
     spark.createDataFrame(b2, schema).coalesce(1).write.mode(
@@ -282,6 +296,14 @@ def test_snapshot_stream_exactly_once_commits(spark, tmp_path):
     assert not out.get("skipped_replay")
     assert out["last_stream_batch_id"] == 2
     assert state() == {**want, (5, 1): ("e", 400)}
+
+    # an empty batch commits nothing and reports snapshot_merge's keys
+    empty = merge_batch_snapshot(
+        spark.createDataFrame([], schema), table, keys=["id", "day"],
+        ts_col="ts", tiebreak_col="event_id", batch_id=3)
+    assert set(empty) <= set(out), empty
+    assert empty["files_added"] == 0
+    assert empty["version"] == out["version"] == snapshot_version(table)
 
 
 def test_snapshot_schema_evolution(spark, table):

@@ -1,10 +1,6 @@
-"""CSV source + KV sink tests (SURVEY.md §2.1 S1-S3, S9-S11)."""
+"""CSV source + KV value-encoding tests (SURVEY.md §2.1 S1-S3, S9-S11)."""
 
 from __future__ import annotations
-
-import glob
-import json
-import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -101,7 +97,7 @@ def test_table_rewritten_in_place_is_read_afresh(spark, tmp_path, case):
         assert sorted(r.r_comment for r in df.collect()) == ["a", "b", "c"]
 
 
-def test_kv_roundtrip_with_batching(spark, tmp_path):
+def test_kv_roundtrip_with_batching(spark):
     recs = spark.createDataFrame([
         Row(user_id=u, item_id=u * 10 + r, score=5.0 - r, rank=r)
         for u in (1, 2) for r in (1, 2, 3)
@@ -109,15 +105,6 @@ def test_kv_roundtrip_with_batching(spark, tmp_path):
     encoded = KV.encode_rec_list(recs, n=2)
     rows = {r.key: r.value for r in encoded.collect()}
     assert rows == {"u1": "11;12", "u2": "21;22"}
-
-    out_dir = str(tmp_path / "kv")
-    spark.dataSource.register(KV.KVFileDataSource)
-    (encoded.write.format("kvfile").option("path", out_dir)
-     .option("batch_size", 1).mode("append").save())
-    lines = []
-    for f in glob.glob(f"{out_dir}/*.kv"):
-        lines += open(f).read().splitlines()
-    assert sorted(lines) == ["u1\t11;12", "u2\t21;22"]
 
     decoded = KV.decode_rec_list(encoded)
     got = {r.user_id: r.item_ids for r in decoded.collect()}
@@ -200,94 +187,3 @@ def test_write_jdbc_chunked_option_contract(spark):
     assert fake.saved and fake.saved_mode == "overwrite"
     assert fake.options["batchsize"] == "500"
     assert fake.options["isolationLevel"] == "READ_COMMITTED"
-
-
-def test_kvfile_writer_commits_manifest(spark, tmp_path):
-    """The registered writer's commit protocol: staged per-task files
-    publish atomically via one manifest; read-back sees every row."""
-    from movie_rec_spark.sources.kv import (
-        KVFileDataSource,
-        read_kv_manifested,
-    )
-
-    spark.dataSource.register(KVFileDataSource)
-    out = str(tmp_path / "kvout")
-    df = spark.createDataFrame(
-        [(f"u{i}", f"{i};{i+1}") for i in range(100)],
-        "key string, value string").repartition(4)
-    df.write.format("kvfile").option("path", out).mode("append").save()
-    import json
-    import os
-    man = json.load(open(os.path.join(out, "_manifest.json")))
-    assert man["rows"] == 100 and 1 <= len(man["files"]) <= 4
-    back = {r.key: r.value
-            for r in read_kv_manifested(spark, out).collect()}
-    assert len(back) == 100 and back["u7"] == "7;8"
-
-
-def test_kvfile_writer_empty_tasks_publish_nothing(spark, tmp_path):
-    """Tasks that receive no rows stage no file and name none in the
-    manifest, so a manifested read of 1 row over 4 tasks succeeds."""
-    spark.dataSource.register(KV.KVFileDataSource)
-    out = str(tmp_path / "kvsparse")
-    df = spark.createDataFrame([("u1", "1;2")],
-                               "key string, value string").repartition(4)
-    df.write.format("kvfile").option("path", out).mode("append").save()
-    man = json.load(open(os.path.join(out, "_manifest.json")))
-    assert man["rows"] == 1 and len(man["files"]) == 1
-    assert glob.glob(os.path.join(out, "staged-*.kv")) == [
-        os.path.join(out, man["files"][0])]
-    assert [tuple(r) for r in
-            KV.read_kv_manifested(spark, out).collect()] == [("u1", "1;2")]
-
-
-def test_kvfile_writer_append_keeps_and_overwrite_replaces(spark, tmp_path):
-    """mode("append") adds to the published manifest (files and row
-    count); mode("overwrite") publishes only the new job's files."""
-    spark.dataSource.register(KV.KVFileDataSource)
-    out = str(tmp_path / "kvmodes")
-
-    def write(key, mode):
-        (spark.createDataFrame([(key, "1")], "key string, value string")
-         .coalesce(1).write.format("kvfile").option("path", out)
-         .mode(mode).save())
-
-    def state():
-        man = json.load(open(os.path.join(out, "_manifest.json")))
-        keys = sorted(r.key for r in
-                      KV.read_kv_manifested(spark, out).collect())
-        return keys, man["rows"], len(man["files"])
-
-    write("u1", "append")
-    write("u2", "append")
-    assert state() == (["u1", "u2"], 2, 2)
-    write("u3", "overwrite")
-    assert state() == (["u3"], 1, 1)
-
-
-def test_kvfile_writer_abort_leaves_no_manifest(spark, tmp_path):
-    """A failing task aborts the job: no manifest is published, so a
-    manifested read sees NOTHING — partial flushes stay invisible."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from movie_rec_spark.sources.kv import KVFileDataSource
-
-    spark.dataSource.register(KVFileDataSource)
-    out = str(tmp_path / "kvfail")
-    from pyspark.sql.types import StringType
-
-    @F.udf(returnType=StringType())
-    def poison(v):
-        if v == 99:
-            raise RuntimeError("poison row")
-        return str(v)
-
-    df = spark.range(100).select(
-        F.concat(F.lit("u"), "id").alias("key"), poison("id").alias("value"))
-    with pytest.raises(Exception):
-        df.coalesce(1).write.format("kvfile") \
-          .option("path", out).mode("append").save()
-    assert not os.path.exists(os.path.join(out, "_manifest.json"))

@@ -159,21 +159,6 @@ def test_minhash_recall_against_jaccard_oracle(spark, sf_docs):
     assert len(missed) <= max(1, len(truth) // 10), f"missed {missed}"
 
 
-def test_blocking_stats_counts_candidate_pairs(spark, sf_docs):
-    """candidate_pairs from the occupancy rollup must equal the number
-    of raw (pre-dedup) candidate comparisons the bucket self-join makes."""
-    banded = D.minhash_banded(sf_docs)
-    stats = D.blocking_stats(banded, ["band", "bh"]).collect()[0]
-    from pyspark.sql import functions as F
-    a = banded.select(F.col("doc_id").alias("a"), "band", "bh")
-    b = banded.select(F.col("doc_id").alias("b"), "band", "bh")
-    raw_pairs = (a.join(b, ["band", "bh"])
-                 .filter(F.col("a") < F.col("b")).count())
-    assert stats.candidate_pairs == raw_pairs
-    assert stats.n_rows == banded.count()
-    assert stats.max_occ >= stats.p99_occ >= 1
-
-
 def test_simhash_blocking_exact_vs_brute_force(spark, sf_docs):
     """The k+1-segment pigeonhole blocking must find EVERY pair within
     hamming_max bits — verified against brute-force hamming over the
