@@ -8,11 +8,14 @@ A DataFrame with input files is keyed by those files plus its plan's
 the stored source, so a transformed frame over the same files never
 gets another frame's value. A DataFrame with no input files is keyed
 by ``id()`` and pinned by its entry. A tuple of sources is keyed by
-each in turn. At most ``MAX_ENTRIES`` entries are kept (LRU); evicting
-or clearing an entry releases the DataFrames in its value, cached or
-``localCheckpoint``-ed. A released checkpoint cannot be recomputed, so
-a frame built over a memoized checkpoint is collected before later
-lookups can evict it.
+each in turn. At most ``MAX_ENTRIES`` entries are kept, holding at
+most ``MAX_BYTES`` of driver memory in Arrow tables and numpy arrays
+(``nbytes``; a DataFrame's blocks live on the executors and count 0):
+the least recently used entries go first, but never the one just
+added. Evicting or clearing an entry releases the DataFrames in its
+value, cached or ``localCheckpoint``-ed. A released checkpoint cannot
+be recomputed, so a frame built over a memoized checkpoint is
+collected before later lookups can evict it.
 """
 
 from __future__ import annotations
@@ -23,11 +26,16 @@ from collections import OrderedDict
 from typing import Any, Callable
 from urllib.parse import unquote, urlparse
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 MAX_ENTRIES = 64
+MAX_BYTES = 512 << 20
 
-_entries: OrderedDict[tuple, tuple[Any, Any]] = OrderedDict()
+# key -> (value, source, the value's driver bytes)
+_entries: OrderedDict[tuple, tuple[Any, Any, int]] = OrderedDict()
+_held = 0  # sum of the entries' driver bytes
 _lock = threading.Lock()
 
 
@@ -75,6 +83,13 @@ def _release(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
+def _nbytes(value) -> int:
+    """Driver bytes of the Arrow tables and numpy arrays in ``value``."""
+    return sum(v.nbytes for v in (value if isinstance(value, tuple)
+                                  else (value,))
+               if isinstance(v, (pa.Table, np.ndarray)))
+
+
 def _unpersist(values: list) -> None:
     for value in values:
         for v in value if isinstance(value, tuple) else (value,):
@@ -88,6 +103,7 @@ def lookup(source: str | DataFrame | tuple, params: tuple,
     miss builds outside the lock (a fit runs Spark jobs). A key whose
     entry fails the semantic check (a hash collision) is rebuilt and
     replaces that entry."""
+    global _held
     key = (_fingerprint(source), params)
     with _lock:
         entry = _entries.get(key)
@@ -96,6 +112,7 @@ def lookup(source: str | DataFrame | tuple, params: tuple,
     if entry is not None and _same(source, entry[1]):
         return entry[0]
     value = build()
+    size = _nbytes(value)
     dropped = []
     with _lock:
         entry = _entries.get(key)
@@ -106,17 +123,24 @@ def lookup(source: str | DataFrame | tuple, params: tuple,
         else:
             if entry is not None:
                 dropped.append(entry[0])
-            _entries[key] = (value, source)
+                _held -= entry[2]
+            _entries[key] = (value, source, size)
             _entries.move_to_end(key)
-            while len(_entries) > MAX_ENTRIES:
-                dropped.append(_entries.popitem(last=False)[1][0])
+            _held += size
+            while len(_entries) > MAX_ENTRIES or (
+                    _held > MAX_BYTES and len(_entries) > 1):
+                old, _, n = _entries.popitem(last=False)[1]
+                dropped.append(old)
+                _held -= n
     _unpersist(dropped)
     return value
 
 
 def clear() -> None:
     """Drop every entry, releasing the DataFrames it holds."""
+    global _held
     with _lock:
-        dropped = [value for value, _ in _entries.values()]
+        dropped = [value for value, _, _ in _entries.values()]
         _entries.clear()
+        _held = 0
     _unpersist(dropped)

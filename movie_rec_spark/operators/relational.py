@@ -16,6 +16,16 @@ Scale notes baked into every builder:
   LIMIT ordering ends in a unique key so the cut is deterministic across
   engines (SURVEY.md §7.3 item 3).
 
+Serving's reads are the exception: like the reference's refresh job,
+which stores its views in Redis (estimator.py:81-102,
+statistics.py:39-60), ``q_top_movies``, ``q_user_latest_ratings``,
+``q_user_top_ratings`` and ``q_user_rated_movies`` run one whole-table
+plan per version of their inputs (``top_movies_plan``,
+``user_orders_plan``, the rated pairs) and hold its rows in ``memo``
+on the driver, per-user ones as CSR slices keyed by custkey
+(``csr``). A request is a lookup served as a LocalRelation
+and runs no Spark job; a rewritten input changes the memo key.
+
 Reference sites cited per query for parity checking.
 """
 
@@ -23,7 +33,8 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -108,35 +119,96 @@ def q_top_movies(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     return lineitem.sparkSession.createDataFrame(table, schema)
 
 
-def q_user_latest_ratings(orders: DataFrame, customer: DataFrame,
-                          custkey: int = FOCUS_CUSTKEY) -> DataFrame:
-    """User's latest activity: J1 ⋈ P2 → K2 (controller.py:47-58).
+def csr(users: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Keys and offsets of a user-sorted column: user ``keys[i]`` owns
+    rows ``offsets[i]:offsets[i + 1]``. The held per-user answers below
+    and ``pipeline.ServingIndex`` share this layout."""
+    keys, start = np.unique(users, return_index=True)
+    return keys, np.append(start, len(users))
 
-    Equality predicate pushes to both scans; the single-customer dim side
-    is broadcast. ORDER BY date DESC, key DESC LIMIT 20 →
-    TakeOrderedAndProject.
+
+def csr_rows(keys: np.ndarray, offsets: np.ndarray, user_id: int) -> slice:
+    """``user_id``'s rows of a CSR column; empty for an unknown user."""
+    i = int(np.searchsorted(keys, user_id))
+    if i == len(keys) or keys[i] != user_id:
+        return slice(0, 0)
+    return slice(int(offsets[i]), int(offsets[i + 1]))
+
+
+USER_ORDER_COLS = ("o_orderkey", "c_name", "o_totalprice", "o_orderdate")
+
+
+def user_orders_plan(orders: DataFrame, customer: DataFrame,
+                     *order: Column) -> DataFrame:
+    """Every customer's first ``TOP_N`` orders under ``order``: J1 ⋈ P2
+    → K5 grouped top-K, the build side of ``q_user_latest_ratings`` and
+    ``q_user_top_ratings``.
+
+    orders ⋈ broadcast(customer) on custkey, then row_number over
+    (partition by o_custkey order by ``order``) ≤ ``TOP_N`` — one
+    shuffle, and Spark ≥3.5 plans the rank filter as WindowGroupLimit,
+    so no customer's whole order list is sorted or shuffled. Spark
+    orders the rows and places the nulls, exactly as each query's own
+    ORDER BY would. Rows come out in no particular order; ``rn`` is the
+    rank within the customer.
     """
-    o = orders.filter(F.col("o_custkey") == F.lit(custkey))
-    c = customer.filter(F.col("c_custkey") == F.lit(custkey)).select("c_custkey", "c_name")
+    o = orders.select("o_orderkey", "o_custkey", "o_totalprice",
+                      "o_orderdate")
+    c = customer.select("c_custkey", "c_name")
     return (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
-        .select("o_orderkey", "c_name", "o_totalprice", "o_orderdate")
-        .orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
-        .limit(TOP_N)
+        .withColumn("rn", F.row_number().over(
+            Window.partitionBy("o_custkey").orderBy(*order)))
+        .filter(F.col("rn") <= F.lit(TOP_N))
+        .select("o_custkey", "rn", *USER_ORDER_COLS)
     )
+
+
+def _held_user_orders(orders: DataFrame, customer: DataFrame, custkey: int,
+                      name: str, *order: Column) -> DataFrame:
+    """``custkey``'s rows of ``user_orders_plan``, in rank order, from
+    an index built once per version of ``orders`` and ``customer``."""
+    def build():
+        plan = user_orders_plan(orders, customer, *order)
+        table = plan.toArrow()
+        cust = table.column("o_custkey").to_numpy()
+        sort = np.lexsort((table.column("rn").to_numpy(), cust))
+        keys, offsets = csr(cust[sort])
+        return (table.select(list(USER_ORDER_COLS)).take(sort), keys,
+                offsets, plan.select(*USER_ORDER_COLS).schema)
+
+    table, keys, offsets, schema = memo.lookup(
+        (orders, customer), ("user_orders", name), build)
+    rows = csr_rows(keys, offsets, custkey)
+    return orders.sparkSession.createDataFrame(
+        table.slice(rows.start, rows.stop - rows.start), schema)
+
+
+def q_user_latest_ratings(orders: DataFrame, customer: DataFrame,
+                          custkey: int = FOCUS_CUSTKEY) -> DataFrame:
+    """User's latest activity: J1 ⋈ P2 → K2 (controller.py:47-58): the
+    customer's orders joined to their name, ORDER BY date DESC, key
+    DESC LIMIT 20.
+
+    Answered like ``q_top_movies``: ``user_orders_plan`` ranks every
+    customer's orders once per version of the inputs, and the ranked
+    rows are held in ``memo`` as an Arrow table with CSR offsets by
+    custkey (at most ``TOP_N`` rows per customer, whatever the size of
+    ``orders``). A request is a binary search and a slice served as a
+    LocalRelation: no Spark job. An unknown custkey gets no rows.
+    """
+    return _held_user_orders(orders, customer, custkey, "latest",
+                             F.desc("o_orderdate"), F.desc("o_orderkey"))
 
 
 def q_user_top_ratings(orders: DataFrame, customer: DataFrame,
                        custkey: int = FOCUS_CUSTKEY) -> DataFrame:
-    """User's top-valued activity: J1 ⋈ P2 → K3 (controller.py:60-71)."""
-    o = orders.filter(F.col("o_custkey") == F.lit(custkey))
-    c = customer.filter(F.col("c_custkey") == F.lit(custkey)).select("c_custkey", "c_name")
-    return (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
-        .select("o_orderkey", "c_name", "o_totalprice", "o_orderdate")
-        .orderBy(F.desc("o_totalprice"), F.desc("o_orderdate"), F.asc("o_orderkey"))
-        .limit(TOP_N)
-    )
+    """User's top-valued activity: J1 ⋈ P2 → K3 (controller.py:60-71):
+    ORDER BY price DESC, date DESC, key ASC LIMIT 20, held and served
+    as ``q_user_latest_ratings`` is."""
+    return _held_user_orders(orders, customer, custkey, "top",
+                             F.desc("o_totalprice"), F.desc("o_orderdate"),
+                             F.asc("o_orderkey"))
 
 
 def q_movie_stats(lineitem: DataFrame, lower_limit: int = STAT_LOWER_LIMIT) -> DataFrame:
@@ -196,13 +268,40 @@ def user_parts(lineitem: DataFrame, orders: DataFrame,
 def q_user_rated_movies(lineitem: DataFrame, orders: DataFrame, part: DataFrame,
                         custkey: int = FOCUS_CUSTKEY) -> DataFrame:
     """Semi-join J3: parts the customer has ordered, with attributes
-    (controller.py:231, IN-subquery membership — no multiplicity)."""
-    ids = user_parts(lineitem, orders, custkey)
-    return (
-        part.join(
-            F.broadcast(ids), part["p_partkey"] == ids["l_partkey"], "left_semi"
-        ).select("p_partkey", "p_name", "p_brand")
-    )
+    (controller.py:231, IN-subquery membership — no multiplicity).
+
+    Held once per version of the three inputs: the distinct non-null
+    (o_custkey, l_partkey) pairs of lineitem ⋈ orders as CSR int
+    columns, and part's answer columns as an Arrow table keyed by
+    p_partkey (part names are not copied into every pair). A request
+    takes the part rows whose key is in the customer's slice, which
+    keeps the semi-join's answer: each such part row once, and never a
+    row with a null key. It is served as a LocalRelation with no Spark
+    job.
+    """
+    def build():
+        pairs = (
+            lineitem.select("l_orderkey", "l_partkey")
+            .join(orders.select(F.col("o_orderkey").alias("l_orderkey"),
+                                "o_custkey"), "l_orderkey", "inner")
+            .filter(F.col("o_custkey").isNotNull()
+                    & F.col("l_partkey").isNotNull())
+            .select("o_custkey", "l_partkey").distinct()
+            .toArrow())
+        cust, parts = (pairs.column(c).to_numpy()
+                       for c in ("o_custkey", "l_partkey"))
+        sort = np.lexsort((parts, cust))
+        keys, offsets = csr(cust[sort])
+        attrs = part.select("p_partkey", "p_name", "p_brand")
+        held = attrs.filter(F.col("p_partkey").isNotNull()).toArrow()
+        return (keys, offsets, parts[sort], held,
+                held.column("p_partkey").to_numpy(), attrs.schema)
+
+    keys, offsets, parts, held, part_keys, schema = memo.lookup(
+        (lineitem, orders, part), ("user_rated_movies",), build)
+    mine = parts[csr_rows(keys, offsets, custkey)]
+    return lineitem.sparkSession.createDataFrame(
+        held.take(np.flatnonzero(np.isin(part_keys, mine))), schema)
 
 
 def q_avg_recommendations(lineitem: DataFrame, orders: DataFrame,

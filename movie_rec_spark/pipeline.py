@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from movie_rec_spark import ml
 from movie_rec_spark.operators.mutation import upsert_latest
+from movie_rec_spark.operators.relational import csr, csr_rows
 from movie_rec_spark.sources import kv as KV
 
 STAT_LOWER_LIMIT = 5   # web/config.py:27
@@ -55,21 +56,6 @@ class PipelineResult:
             self.movie_stats.select("movie_id", "count_users").toArrow())
 
 
-def _csr(users: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Keys and offsets of a user-sorted column: user ``keys[i]`` owns
-    rows ``offsets[i]:offsets[i + 1]``."""
-    keys, start = np.unique(users, return_index=True)
-    return keys, np.append(start, len(users))
-
-
-def _rows(keys: np.ndarray, offsets: np.ndarray, user_id: int) -> slice:
-    """``user_id``'s rows of a CSR column; empty for an unknown user."""
-    i = int(np.searchsorted(keys, user_id))
-    if i == len(keys) or keys[i] != user_id:
-        return slice(0, 0)
-    return slice(offsets[i], offsets[i + 1])
-
-
 class ServingIndex:
     """One refresh's gold tables held on the driver for serving — the
     views the reference's refresh job materializes in Redis
@@ -90,13 +76,13 @@ class ServingIndex:
         user, movie = (seen.column(c).to_numpy()
                        for c in ("user_id", "movie_id"))
         order = np.argsort(user, kind="stable")
-        self._seen_keys, self._seen_off = _csr(user[order])
+        self._seen_keys, self._seen_off = csr(user[order])
         self._seen = movie[order]
 
         user, item, score = (recs.column(c).to_numpy()
                              for c in ("user_id", "item_id", "score"))
         order = np.lexsort((item, -score, user))
-        self._rec_keys, self._rec_off = _csr(user[order])
+        self._rec_keys, self._rec_off = csr(user[order])
         self._rec_items, self._rec_scores = item[order], score[order]
 
         movie, count = (popularity.column(c).to_numpy()
@@ -127,11 +113,11 @@ class ServingIndex:
         most."""
         if n < 0:
             raise ValueError(f"n must be >= 0, got {n}")
-        seen = self._seen[_rows(self._seen_keys, self._seen_off, user_id)]
+        seen = self._seen[csr_rows(self._seen_keys, self._seen_off, user_id)]
         fresh = self._fresh.get(user_id)
         if fresh is not None:
             seen = np.concatenate([seen, fresh])
-        mine = _rows(self._rec_keys, self._rec_off, user_id)
+        mine = csr_rows(self._rec_keys, self._rec_off, user_id)
         recs = self._rec_items[mine]
         keep = np.flatnonzero(~np.isin(recs, seen))[:n]
         # each excluded item skips at most one popular item

@@ -427,6 +427,9 @@ def snapshot_merge(spark: SparkSession, path: str, updates: DataFrame,
     (partial-column batches are refused with a clear error rather than
     silently keeping or nulling) with the table's types
     (``_check_types``).
+
+    An empty batch commits nothing: it returns the summary counts at 0
+    with the current ``version``.
     """
     keys = list(keys)
     base = snapshot_version(path)
@@ -442,16 +445,20 @@ def snapshot_merge(spark: SparkSession, path: str, updates: DataFrame,
         raise ValueError(f"update batch lacks required columns {missing}")
     _check_types(man["summary"].get("columns"),
                  updates.drop(DELETED_COL), "snapshot_merge")
-    # ONE job for the key-uniqueness gate + touched-partition metadata
-    # + null-partition guard (r12; collect_set drops nulls, so nulls
-    # are counted explicitly)
+    # ONE job for the row count, the key-uniqueness gate,
+    # touched-partition metadata and the null-partition guard
+    # (collect_set drops nulls, so nulls are counted explicitly)
     meta = (updates.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("_mrs_c"))
-            .agg(F.max("_mrs_c").alias("maxc"),
+            .agg(F.sum("_mrs_c").alias("rows"),
+                 F.max("_mrs_c").alias("maxc"),
                  F.collect_set(partition_col).alias("parts"),
                  F.sum(F.col(partition_col).isNull().cast("long"))
                  .alias("nulls"))
             .first())
+    if not meta["rows"]:
+        return {"partitions": 0, "files_added": 0, "files_removed": 0,
+                "version": base}
     if (meta["maxc"] or 0) > 1:
         raise ValueError(
             "update batch is not key-unique; collapse it first "

@@ -40,7 +40,6 @@ from movie_rec_spark.sources.snapshot import (
     snapshot_merge,
     snapshot_read,
     snapshot_stream_floor,
-    snapshot_version,
 )
 
 
@@ -57,14 +56,11 @@ def merge_batch_snapshot(batch: DataFrame, table_path: str,
     writer stream per table: the floor is keyed to the checkpoint's
     batch-id lineage, so pointing a FRESH checkpoint (ids restarting
     at 0) at an existing table requires a new table. An empty batch
-    commits nothing and returns ``snapshot_merge``'s summary keys with
-    zero counts at the current version."""
+    commits nothing: ``snapshot_merge`` finds it empty in the one
+    aggregate it runs anyway and returns zero counts at the current
+    version."""
     if batch_id <= snapshot_stream_floor(table_path):
         return {"batch_id": batch_id, "skipped_replay": True}
-    if batch.isEmpty():
-        return {"batch_id": batch_id, "partitions": 0, "files_added": 0,
-                "files_removed": 0,
-                "version": snapshot_version(table_path)}
     collapsed = upsert_latest(batch, keys=keys, ts_col=ts_col,
                               tiebreak_col=tiebreak_col)
     summary = snapshot_merge(batch.sparkSession, table_path, collapsed,

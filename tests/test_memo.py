@@ -8,6 +8,7 @@ import sys
 import threading
 import weakref
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -38,6 +39,28 @@ def test_size_stays_within_bound(table):
     newest = memo.MAX_ENTRIES + 4
     assert memo.lookup(table, ("fill", newest), lambda: "new") == newest
     assert memo.lookup(table, ("fill", 0), lambda: "rebuilt") == "rebuilt"
+
+
+def test_byte_heavy_entry_evicts_older_ones(table, monkeypatch):
+    monkeypatch.setattr(memo, "MAX_BYTES", 1000)
+    small = np.zeros(10, np.int64)  # 80 bytes
+    for i in range(4):
+        memo.lookup(table, ("small", i), lambda: (small, "meta"))
+    assert memo._held == 4 * 80
+    # 800 bytes of Arrow and numpy: the two oldest entries must go
+    heavy = (pa.table({"a": np.zeros(50, np.int64)}), np.zeros(50, np.int64))
+    assert memo.lookup(table, ("heavy",), lambda: heavy) is heavy
+    assert [p for _, p in memo._entries] == [
+        ("small", 2), ("small", 3), ("heavy",)]
+    assert memo._held == 2 * 80 + 800
+    # an entry over the budget on its own is kept until the next one
+    huge = np.zeros(200, np.int64)
+    assert memo.lookup(table, ("huge",), lambda: huge) is huge
+    assert [p for _, p in memo._entries] == [("huge",)]
+    assert memo.lookup(table, ("small", 0), lambda: "rebuilt") == "rebuilt"
+    assert [p for _, p in memo._entries] == [("small", 0)]
+    memo.clear()
+    assert memo._held == 0
 
 
 def test_eviction_unpersists_the_value(spark, table):

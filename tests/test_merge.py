@@ -19,30 +19,48 @@ def test_merge_matches_reference_model(spark, tmp_path):
     """Property-style sweep: snapshot_merge must match a pure-Python
     reference model of the MERGE semantics (ts guard, tombstones,
     inserts, ignored stale rows) across seeded random scenarios —
-    including all-deleted partitions and new-partition inserts."""
+    including all-deleted partitions and new-partition inserts.
+
+    The seeds share one table: seed ``s`` owns the partitions
+    ``10 * s + 1 .. 10 * s + 4``, so its rows meet no other seed's, and
+    one create, one merge and one read serve all of them."""
     import random
 
-    for seed in range(6):
+    seeds = range(6)
+    targets, batches = {}, {}
+    for seed in seeds:
         rng = random.Random(seed)
-        path = str(tmp_path / f"prop_{seed}")
-        target = {}
+        target = targets[seed] = {}
         for _ in range(rng.randint(1, 12)):
-            k = (rng.randint(1, 5), rng.randint(1, 3))
+            k = (rng.randint(1, 5), 10 * seed + rng.randint(1, 3))
             target[k] = (f"t{rng.randint(0, 9)}", rng.randint(0, 5))
-        batch = {}
+        batch = batches[seed] = {}
         for _ in range(rng.randint(1, 8)):
-            k = (rng.randint(1, 6), rng.randint(1, 4))
+            k = (rng.randint(1, 6), 10 * seed + rng.randint(1, 4))
             batch[k] = (f"u{rng.randint(0, 9)}", rng.randint(0, 5),
                         rng.random() < 0.3)
-        snapshot_create(
-            spark, path,
-            spark.createDataFrame(
-                [(i, d, v, t) for (i, d), (v, t) in target.items()],
-                "id bigint, day bigint, val string, ts bigint"),
-            "day")
 
-        expect = dict(target)
-        for (i, d), (v, t, dele) in batch.items():
+    path = str(tmp_path / "prop")
+    snapshot_create(
+        spark, path,
+        spark.createDataFrame(
+            [(i, d, v, t) for target in targets.values()
+             for (i, d), (v, t) in target.items()],
+            "id bigint, day bigint, val string, ts bigint"),
+        "day")
+    snapshot_merge(
+        spark, path,
+        spark.createDataFrame(
+            [(i, d, v, t, dele) for batch in batches.values()
+             for (i, d), (v, t, dele) in batch.items()],
+            "id bigint, day bigint, val string, ts bigint, "
+            "_deleted boolean"),
+        keys=["id", "day"], ts_col="ts")
+    rows = snapshot_read(spark, path).collect()
+
+    for seed in seeds:
+        expect = dict(targets[seed])
+        for (i, d), (v, t, dele) in batches[seed].items():
             if (i, d) in expect:
                 if t >= expect[(i, d)][1]:
                     if dele:
@@ -51,17 +69,8 @@ def test_merge_matches_reference_model(spark, tmp_path):
                         expect[(i, d)] = (v, t)
             elif not dele:
                 expect[(i, d)] = (v, t)
-
-        snapshot_merge(
-            spark, path,
-            spark.createDataFrame(
-                [(i, d, v, t, dele)
-                 for (i, d), (v, t, dele) in batch.items()],
-                "id bigint, day bigint, val string, ts bigint, "
-                "_deleted boolean"),
-            keys=["id", "day"], ts_col="ts")
         got = {(r.id, r.day): (r.val, r.ts)
-               for r in snapshot_read(spark, path).collect()}
+               for r in rows if 10 * seed < r.day <= 10 * seed + 4}
         assert got == expect, f"seed {seed}"
 
 

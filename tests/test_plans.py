@@ -8,6 +8,8 @@ anti-testset query is the only sanctioned nested-loop join.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from movie_rec_spark import plans as P
 from movie_rec_spark.operators import mutation as M
 from movie_rec_spark.operators import relational as R
@@ -33,11 +35,18 @@ def test_top_movies_plan(spark):
     assert P.count_exchanges(df) == 1
 
 
-def test_user_queries_push_equality_predicate(spark):
-    df = R.q_user_latest_ratings(_t(spark, "orders"), _t(spark, "customer"))
-    assert P.has_pushed_filter(df, "EqualTo(o_custkey,1)")
-    assert P.has_top_k(df)
-    assert P.count_exchanges(df) == 0, "single-user query must not shuffle"
+def test_user_orders_plan_uses_window_group_limit(spark):
+    df = R.user_orders_plan(_t(spark, "orders"), _t(spark, "customer"),
+                            F.desc("o_orderdate"), F.desc("o_orderkey"))
+    assert P.has_window_group_limit(df)
+    assert P.has_broadcast_join(df)
+    assert not P.has_top_k(df)
+    scans = P.scan_read_columns(df)
+    assert {"o_orderkey", "o_custkey", "o_totalprice",
+            "o_orderdate"} in scans, "column pruning regressed"
+    assert {"c_custkey", "c_name"} in scans, "column pruning regressed"
+    # one shuffle (rows to their customer's window); the join adds none
+    assert P.count_exchanges(df) == 1
 
 
 def test_movie_stats_pushdown_and_single_shuffle(spark):

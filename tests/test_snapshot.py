@@ -306,6 +306,27 @@ def test_snapshot_stream_exactly_once_commits(spark, tmp_path):
     assert empty["version"] == out["version"] == snapshot_version(table)
 
 
+def test_merge_batch_snapshot_job_count(spark, tmp_path):
+    """One non-empty micro-batch costs a fixed number of Spark jobs:
+    snapshot_merge's single meta aggregate also counts the rows, so no
+    separate emptiness probe runs first."""
+    from movie_rec_spark.streaming.lakehouse import merge_batch_snapshot
+    from spark_jobs import jobs_launched
+
+    table = str(tmp_path / "t")
+    schema = ("id bigint, day bigint, val string, ts bigint, "
+              "event_id bigint, _deleted boolean")
+    snapshot_create(spark, table, spark.createDataFrame(
+        [(1, 1, "a", 100, 0, False)], schema).drop("_deleted"), "day")
+    batch = spark.createDataFrame(
+        [(1, 1, "a2", 200, 10, False), (4, 2, "d", 200, 12, False)], schema)
+    base = snapshot_version(table)
+    assert jobs_launched(spark, lambda: merge_batch_snapshot(
+        batch, table, keys=["id", "day"], ts_col="ts",
+        tiebreak_col="event_id", batch_id=1)) <= 8
+    assert snapshot_version(table) == base + 1
+
+
 def test_snapshot_schema_evolution(spark, table):
     """Extra update columns are refused by default, widen the table
     with schema_evolution=True, and resident rows read the new column
