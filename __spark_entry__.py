@@ -160,11 +160,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # broadcast probe join
         "q_bloom_audit": lambda s, d: D.q_bloom_audit(
             _t("documents")(s, d)),
-        # auto-sizes signature/segment width from the footer row count
-        # (simhash_sized_params, r11): at test scale the sizer's floor
-        # IS the 56-bit/14-bit oracle-exact form, at 10^9 docs the
-        # segments widen so chance candidates stay linear
-        "q_dedup_simhash": lambda s, d: D.q_dedup_simhash(
+        # simhash_neardup sizes signature/segment width from the
+        # footer row count (simhash_sized_params): at test scale the
+        # sizer's floor IS the 56-bit/14-bit oracle-exact form, at
+        # 10^9 docs the segments widen so chance candidates stay linear
+        "q_dedup_simhash": lambda s, d: D.simhash_neardup(
             _t("documents")(s, d), n_docs=table_rows(d, "documents")),
         # pinned beyond-floor width: proves the sized family's
         # two-limb path (bits 56-111 from md5 hex chars 15-28) in the

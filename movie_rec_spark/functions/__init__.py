@@ -7,8 +7,6 @@ the vector math needed by the similarity operators.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -71,23 +69,3 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     """Distinct k-char shingles of a string column."""
     idx = F.sequence(F.lit(1), F.greatest(F.length(text) - F.lit(k - 1), F.lit(1)))
     return F.array_distinct(F.transform(idx, lambda i: F.substring(text, i, k)))
-
-
-def cosine_batch(a: Column, b: Column) -> Column:
-    """Cosine similarity as an Arrow-batched pandas UDF — the fast path
-    when similarity is evaluated over MANY pairs (expression-fold HOFs
-    like `cosine` are interpreted per element; one numpy einsum per
-    Arrow batch is ~50× faster at 10^5+ pairs). Same math, same
-    rounding behavior as `cosine` — pick per call-site volume."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        ma = np.stack(sa.to_numpy())
-        mb = np.stack(sb.to_numpy())
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        den[den == 0] = 1.0
-        return pd.Series(num / den)
-
-    return _cos(a, b)

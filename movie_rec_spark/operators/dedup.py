@@ -12,7 +12,8 @@ first:
   band → bucket-join. Only candidate pairs sharing a band bucket are
   compared, which is the 100 TB path: cost scales with collisions, not
   with |docs|².
-- SimHash: per-doc 64-bit signature; near-dups differ in few bits.
+- SimHash: per-doc signature (56 bits at test scale, widened with
+  log2 of the corpus size); near-dups differ in few bits.
 
 MinHash/SimHash signatures here are built from md5-derived hashes via
 built-in expressions (no UDF, no MLlib dependency) so the whole pipeline
@@ -496,67 +497,37 @@ def q_dedup_prefix(documents: DataFrame,
 
 
 def minhash_signatures(documents: DataFrame,
-                       num_perms: int = MINHASH_PERMS,
-                       portable: bool = True) -> DataFrame:
-    """Per-doc MinHash signature as array<bigint> of length num_perms.
-
-    Default ``portable=True`` (ORACLE-EXACT since r10): permutation
-    hashes are the universal-hash family over the md5-prefix base hash
-    mod the Mersenne prime 2^31−1 — the q_minhash_eval recipe
-    (``minhash_portable_sigs``), bit-identical in Spark and DuckDB, so
-    the DECLARED q_dedup_minhash / q_minhash_groups pipelines carry
-    driver hash rows. ``portable=False`` keeps the original
-    xxhash64(shingle, seed=p) signatures (one JVM hash per perm
-    instead of one md5 + 64-bit affine maps) for probes that want
-    engine-native speed. min over the doc's shingle set per
-    permutation approximates Jaccard: P[min_a = min_b] = J(a, b).
+                       num_perms: int = MINHASH_PERMS) -> DataFrame:
+    """Per-doc MinHash signature as array<bigint> of length num_perms:
+    the ``minhash_portable_sigs`` columns packed into one array.
+    Permutation hashes are the universal-hash family over the
+    md5-prefix base hash mod the Mersenne prime 2^31−1 (the
+    q_minhash_eval recipe), bit-identical in Spark and DuckDB, so the
+    declared q_dedup_minhash / q_minhash_groups pipelines carry driver
+    hash rows. min over the doc's shingle set per permutation
+    approximates Jaccard: P[min_a = min_b] = J(a, b).
     """
-    if portable:
-        cols = minhash_portable_sigs(documents, num_perms=num_perms)
-        return cols.select(
-            "doc_id",
-            F.array(*[f"h{p}" for p in range(num_perms)]).alias("sig"))
-    sh = _shingle_rows(documents)
-    hashed = sh.select(
+    cols = minhash_portable_sigs(documents, num_perms=num_perms)
+    return cols.select(
         "doc_id",
-        F.array(*[
-            F.xxhash64(F.col("g"), F.lit(p)) for p in range(num_perms)
-        ]).alias("hs"),
-    )
-    mins = [
-        F.min(F.col("hs")[p]).alias(f"h{p}") for p in range(num_perms)
-    ]
-    return (
-        hashed.groupBy("doc_id").agg(*mins)
-        .select("doc_id", F.array(*[f"h{p}" for p in range(num_perms)]).alias("sig"))
-    )
+        F.array(*[f"h{p}" for p in range(num_perms)]).alias("sig"))
 
 
 def minhash_banded(documents: DataFrame,
                    num_perms: int = MINHASH_PERMS,
-                   bands: int = MINHASH_BANDS,
-                   portable: bool = True) -> DataFrame:
+                   bands: int = MINHASH_BANDS) -> DataFrame:
     """Banded MinHash signatures: (doc_id, sig, band, bh) rows — the
     blocked intermediate of q_dedup_minhash, exposed so its bucket
-    occupancy per (band, bh) can be counted. Portable mode
-    (default) keys each band with the ':'-joined signature slice —
-    a deterministic string both engines build identically — instead
-    of an xxhash64 of the slice; the join cost is the same equi-join
-    on a slightly wider key."""
+    occupancy per (band, bh) can be counted. Each band is keyed by the
+    ':'-joined signature slice, a deterministic string both engines
+    build identically."""
     rows_per_band = num_perms // bands
-    sig = minhash_signatures(documents, num_perms, portable=portable)
-    if portable:
-        bb = [F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(":", *[F.col("sig")[b * rows_per_band + r]
-                               for r in range(rows_per_band)])
-            .alias("bh")) for b in range(bands)]
-    else:
-        bb = [F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                         for r in range(rows_per_band)])
-            .cast("string").alias("bh")) for b in range(bands)]
+    sig = minhash_signatures(documents, num_perms)
+    bb = [F.struct(
+        F.lit(b).alias("band"),
+        F.concat_ws(":", *[F.col("sig")[b * rows_per_band + r]
+                           for r in range(rows_per_band)])
+        .alias("bh")) for b in range(bands)]
     return sig.select(
         "doc_id", "sig",
         F.explode(F.array(*bb)).alias("bb"),
@@ -567,8 +538,7 @@ def minhash_banded(documents: DataFrame,
 def q_dedup_minhash(documents: DataFrame,
                     threshold: float = JACCARD_THRESHOLD,
                     num_perms: int = MINHASH_PERMS,
-                    bands: int = MINHASH_BANDS,
-                    portable: bool = True) -> DataFrame:
+                    bands: int = MINHASH_BANDS) -> DataFrame:
     """MinHash + LSH banding near-dup candidates, verified by estimated
     Jaccard (signature agreement rate).
 
@@ -577,15 +547,13 @@ def q_dedup_minhash(documents: DataFrame,
     100 TB it's a plain shuffle-hash join whose cost tracks true
     near-dup density instead of |docs|².
 
-    ORACLE-EXACT since r10: signatures default to the portable
-    universal-hash family of q_minhash_eval (md5 base hash mod 2^31−1
-    + affine permutations — one md5 per shingle replacing 32 xxhash64
-    calls, same one-doc-keyed-shuffle plan), so the full declared
+    ORACLE-EXACT: signatures are the portable universal-hash family of
+    q_minhash_eval (md5 base hash mod 2^31−1 + affine permutations,
+    one doc-keyed shuffle), so the full declared
     shingle→signature→band→candidate→estimate pipeline reproduces in
     DuckDB and carries a driver hash row.
     """
-    banded = minhash_banded(documents, num_perms, bands,
-                            portable=portable)
+    banded = minhash_banded(documents, num_perms, bands)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -601,122 +569,6 @@ def q_dedup_minhash(documents: DataFrame,
     return (
         cand.select("doc_a", "doc_b", est.alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= F.lit(threshold))
-    )
-
-
-def simhash_signatures(documents: DataFrame,
-                       portable: bool = True) -> DataFrame:
-    """Per-doc SimHash signature as (doc_id, sig bigint).
-
-    Per bit position: +1 vote if the token-hash bit is set else -1;
-    positive vote total sets the signature bit; one shuffle on doc_id
-    either way. Default ``portable=True`` (ORACLE-EXACT since r10):
-    the 56-bit md5-prefix form of q_simhash_eval
-    (``simhash_portable_sigs``), bit-identical in DuckDB, so the
-    declared q_dedup_simhash carries a driver hash row.
-    ``portable=False`` keeps the original 64-bit xxhash64 signatures.
-    """
-    if portable:
-        return simhash_portable_sigs(documents)
-    toks = fanout_scan(documents.select("doc_id", "text")).select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("t")
-    )
-    hashed = toks.select("doc_id", F.xxhash64("t").alias("h"))
-    # one F.expr per vote — same parsed plan, ~5× fewer py4j calls
-    # than the Column-chain form (see simhash_sized_sigs)
-    bit_votes = [
-        F.expr(f"sum(CASE WHEN ((h >> {i}) & 1) = 1 "
-               f"THEN 1 ELSE -1 END) AS v{i}")
-        for i in range(64)
-    ]
-    return hashed.groupBy("doc_id").agg(*bit_votes).select(
-        "doc_id",
-        F.expr(" + ".join(
-            f"(CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            if i < 63 else
-            f"(CASE WHEN v{i} > 0 THEN CAST(-9223372036854775808 AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            for i in range(64)
-        )).alias("sig"),
-    )
-
-
-def simhash_segments(documents: DataFrame, hamming_max: int = 3,
-                     portable: bool = True) -> DataFrame:
-    """Segmented SimHash signatures: (doc_id, sig, q, qh) rows over
-    ``hamming_max + 1`` contiguous bit segments — the blocked
-    intermediate of q_dedup_simhash, exposed so its per-(q, qh)
-    occupancy can be counted.
-    Segment widths split the signature's ACTUAL bit width (56
-    portable / 64 xxhash), so the pigeonhole guarantee is exact in
-    both modes."""
-    sig = simhash_signatures(documents, portable=portable)
-    n_blocks = hamming_max + 1
-    base, rem = divmod(SHP_BITS if portable else 64, n_blocks)
-    widths = [base + 1 if q < rem else base for q in range(n_blocks)]
-    offsets = [sum(widths[:q]) for q in range(n_blocks)]
-    return sig.select(
-        "doc_id", "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(q).alias("q"),
-                # mask after the arithmetic shift so sign extension from
-                # the top bit never leaks into a segment value
-                F.expr(f"(sig >> {offsets[q]}) & {(1 << widths[q]) - 1}")
-                .alias("qh"))
-            for q in range(n_blocks)
-        ])).alias("qq"),
-    ).select("doc_id", "sig", F.col("qq.q").alias("q"),
-             F.col("qq.qh").alias("qh"))
-
-
-def q_dedup_simhash(documents: DataFrame, hamming_max: int = 3,
-                    portable: bool = True,
-                    n_docs: int | None = None) -> DataFrame:
-    """SimHash near-dup pairs: signature per doc (56-bit portable
-    md5 by default — ORACLE-EXACT since r10, the q_simhash_eval
-    recipe, so the declared query hash-checks; 64-bit xxhash64 via
-    ``portable=False``); pairs within ``hamming_max`` bits. The
-    oracle states the SEMANTICS (all-pairs hamming filter) — the
-    pigeonhole blocking below provably returns the identical set, so
-    the hash match also certifies the blocking's exactness.
-
-    Pair generation blocks on ``hamming_max + 1`` contiguous bit
-    segments: a pair differing in ≤ ``hamming_max`` bits cannot touch
-    every segment (pigeonhole), so it shares at least one identical
-    segment — the guarantee is EXACT for any ``hamming_max``, and the
-    candidate join stays an equi-join. Cost note: chance collisions
-    grow (k+1)·n²/2^(w+1) at fixed segment width w — quadratic in
-    corpus size (measured 11.8× candidates at a 10× corpus, SCALE.md
-    §Round 10). Since r11 the OPERATOR DEFAULT sizes itself: pass
-    ``n_docs`` (parquet-footer count, the q_neardup_lsh discipline)
-    and ``simhash_sized_params`` widens signature/segments with
-    log2(n) so the chance term stays linear; below the sizer's
-    2^SHP_SEG_MIN-doc floor it returns exactly the 56-bit/14-bit
-    declared form, so the driver hash row is unchanged at test scale.
-    """
-    # sizing applies at ANY radius (simhash_sized_params takes
-    # hamming_max) — gating on the default radius would silently drop
-    # non-default callers back onto the fixed-width quadratic path
-    if portable and n_docs is not None:
-        return simhash_neardup(documents, hamming_max, n_docs=n_docs)
-    segments = simhash_segments(documents, hamming_max,
-                                portable=portable)
-    a, b = segments.alias("a"), segments.alias("b")
-    ham = F.expr("bit_count(asig ^ bsig)")
-    # Filter BEFORE the cross-segment dedup: the hamming test is a
-    # row-local expression over the joined row, so applying it first
-    # means the dropDuplicates exchange carries only true near-dup
-    # pairs (~10³ rows at sf0.1) instead of every segment collision
-    # (~1.5×10⁶ on this degenerate-vocabulary corpus) — same final
-    # set, the dedup shuffle shrinks by the candidate:match ratio.
-    return (
-        a.join(b, (F.col("a.q") == F.col("b.q")) & (F.col("a.qh") == F.col("b.qh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                F.col("a.sig").alias("asig"), F.col("b.sig").alias("bsig"))
-        .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= F.lit(hamming_max))
-        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
@@ -1026,7 +878,7 @@ def q_dedup_groups(documents: DataFrame) -> DataFrame:
 
 
 def q_minhash_groups(documents: DataFrame) -> DataFrame:
-    """Declared query (ORACLE-EXACT since r10, with q_dedup_minhash's
+    """Declared query (ORACLE-EXACT, with q_dedup_minhash's
     portable signatures): the FULL approximate dedup pipeline composed
     end-to-end — MinHash banding candidates → signature-verified
     pairs → connected components → (doc_id, comp).
@@ -2099,9 +1951,9 @@ def q_label_prop(documents: DataFrame) -> DataFrame:
 # mod P. Everything stays below 2^62 (a_p, h < 2^31 so the product
 # fits a BIGINT on both engines, no overflow under ANSI), and every
 # step — md5 prefix, integer mod, min — is bit-identical in Spark and
-# DuckDB, which is the point — and since r10 this portable family
-# IS q_dedup_minhash's default signature kernel, so the declared
-# pipeline is hash-checkable end to end too. 16 perms / 2 bands of 8 rows: a
+# DuckDB, which is the point — and this portable family IS
+# q_dedup_minhash's signature kernel, so the declared pipeline is
+# hash-checkable end to end too. 16 perms / 2 bands of 8 rows: a
 # deliberately precision-tight config — collision prob J^8 per band
 # (J=0.9 → 43%/band, ~68% over 2 bands; J=0.5 → 0.4%) — so the audit
 # has REAL misses to count (a 4-row-band config finds every sf0.01
@@ -2128,11 +1980,11 @@ def minhash_portable_sigs(documents: DataFrame,
                           sh: DataFrame | None = None,
                           num_perms: int = MHP_PERMS) -> DataFrame:
     """(doc_id, h0..h{num_perms-1}) portable minhash signatures — the
-    cross-engine-deterministic twin of the xxhash64 form (and, since
-    r10, the DEFAULT signature kernel of minhash_signatures). Pass a
-    prepared (doc_id, g) frame via ``sh`` to share one shingle scan
-    with other pipeline stages (q_minhash_eval's pattern). a_p·h+b_p
-    stays < 2^62 (both factors < 2^31), so the mins are int64-exact.
+    cross-engine-deterministic signature kernel of minhash_signatures
+    and q_minhash_eval. Pass a prepared (doc_id, g) frame via ``sh``
+    to share one shingle scan with other pipeline stages
+    (q_minhash_eval's pattern). a_p·h+b_p stays < 2^62 (both factors
+    < 2^31), so the mins are int64-exact.
     """
     if sh is None:
         sh = _shingle_rows(documents)
@@ -2170,9 +2022,8 @@ def q_minhash_eval(documents: DataFrame,
     The signature pipeline is the PORTABLE integer minhash
     (minhash_portable_sigs): md5-prefix base hash + universal-hash
     permutations mod the Mersenne prime 2^31-1 — bit-identical in
-    Spark and DuckDB — and, since r10, also q_dedup_minhash's
-    default kernel — so
-    the full shingle->signature->band->candidate path is oracle-exact.
+    Spark and DuckDB — and also q_dedup_minhash's kernel — so the
+    full shingle->signature->band->candidate path is oracle-exact.
 
     Scale shape: signatures are ONE doc-keyed shuffle (16 mins in one
     agg); banding candidates are an equi-join on the 4-value band key;
@@ -2277,8 +2128,7 @@ def q_minhash_eval(documents: DataFrame,
 # Portable simhash (q_simhash_eval): 56-bit signatures whose token
 # hashes come from the shared md5 recipe, so the vote sums, the
 # signature bits, and every pairwise hamming distance are bit-identical
-# in Spark and DuckDB — unlike q_dedup_simhash's xxhash64 signatures
-# (rows-only checked). 56 bits — the full entropy of the 14-hex md5
+# in Spark and DuckDB. 56 bits — the full entropy of the 14-hex md5
 # prefix (a 32-bit variant measured 18 897 candidate pairs at sf0.01,
 # ~15% of all pairs: on a degenerate 31-word vocabulary narrow
 # signatures collide constantly; 56 bits restores the standard
@@ -2340,7 +2190,7 @@ def q_simhash_eval(documents: DataFrame,
     runs on a stable_bucket sample, same posture as q_minhash_eval.
 
     Reference analogue: none; the evaluation member of the simhash
-    family next to q_dedup_simhash.
+    family next to simhash_neardup (the declared q_dedup_simhash).
     """
     sigs = simhash_portable_sigs(documents)
     n_seg = hamming_max + 1
@@ -2438,9 +2288,9 @@ def q_simhash_eval(documents: DataFrame,
 # guarantee), the signature itself widens to (k+1)·w bits. Wider
 # signatures are semantically a strictly TIGHTER near-dup proxy (more
 # independent hash bits per hamming budget), so the sized family trades
-# no correctness — the declared q_dedup_simhash keeps the 56-bit/14-bit
-# oracle-exact form at test scale because the sizer's floor IS that
-# form below 2^SHP_SEG_MIN documents.
+# no correctness — the declared q_dedup_simhash (simhash_neardup with
+# n_docs) keeps the 56-bit/14-bit oracle-exact form at test scale
+# because the sizer's floor IS that form below 2^SHP_SEG_MIN documents.
 SHP_SEG_MIN = 14        # floor: the declared 4x14 = 56-bit test-scale form
 SHP_LIMB_HEX = 14       # md5 limb width: 14 hex chars = 56 bits per limb
 SHP_MAX_BITS = 112      # two limbs of the 32-hex md5 — the entropy ceiling
@@ -2534,16 +2384,25 @@ def simhash_neardup(documents: DataFrame,
                     sig_bits: int | None = None,
                     seg_width: int | None = None) -> DataFrame:
     """SimHash near-dup pairs (doc_a, doc_b, hamming) under the SIZED
-    portable family — the at-scale default of q_dedup_simhash.
+    portable family — the declared q_dedup_simhash (with ``n_docs``)
+    and q_simhash_sized (pinned 96/24). The oracle states the
+    SEMANTICS (all-pairs hamming filter); the pigeonhole blocking
+    below provably returns the identical set, so the hash match also
+    certifies the blocking's exactness.
 
     Params resolve as: explicit (sig_bits, seg_width) > sized from
-    ``n_docs`` (``simhash_sized_params``) > the pinned 56/14 declared
-    form. The pigeonhole guarantee is width-independent (a pair within
-    hamming_max cannot differ in every one of the hamming_max+1
-    segments), so the candidate equi-join returns the exact
-    hamming-filter set at every size. Same plan shape as the fixed
-    form: one vote aggregate, one segment equi-join, hamming filtered
-    BEFORE the cross-segment dedup exchange.
+    ``n_docs`` (``simhash_sized_params``, a parquet-footer count) >
+    hamming_max+1 segments of ⌊56/(hamming_max+1)⌋ bits (56/14, the
+    declared test-scale form, at the default radius). The pigeonhole
+    guarantee is width-independent (a pair within hamming_max cannot
+    differ in every one of the hamming_max+1 segments), so the
+    candidate equi-join returns the exact hamming-filter set at every
+    size. Cost note: chance collisions grow (k+1)·n²/2^(w+1) at fixed
+    segment width w — quadratic in corpus size (measured 11.8×
+    candidates at a 10× corpus, SCALE.md §Round 10) — which is why the
+    declared query passes ``n_docs``. Plan: one vote aggregate, one
+    segment equi-join, hamming filtered BEFORE the cross-segment dedup
+    exchange, so that exchange carries only true near-dup pairs.
     """
     if sig_bits is None or seg_width is None:
         if n_docs is None:

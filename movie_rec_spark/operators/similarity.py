@@ -5,8 +5,9 @@ query side is small (scoring is a broadcast nested-loop with pure-JVM
 vector math, no shuffle of the big side).
 
 Scale paths:
-- random-hyperplane LSH: bucket on sign bits of projections onto seeded
-  pseudo-random planes; candidate pairs share a bucket → equi-join.
+- random-hyperplane LSH: bucket on sign bits of projections onto
+  md5-derived integer planes; candidates share a bucket and are
+  scored per bucket.
 - IVF (inverted file): coarse-quantize to k centroids (seeded KMeans),
   probe only the nearest `nprobe` cells.
 
@@ -18,7 +19,6 @@ list_cosine_similarity so the brute-force path is oracle-checkable.
 from __future__ import annotations
 
 import math
-import random
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -461,17 +461,6 @@ def q_kmeans(embeddings: DataFrame, k: int = KMEANS_K,
                     .cast("long").alias("n_vectors")))
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (driver-side tiny)."""
-    rng = random.Random(seed)
-    planes = []
-    for _ in range(n_planes):
-        v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
-        norm = math.sqrt(sum(x * x for x in v)) or 1.0
-        planes.append([x / norm for x in v])
-    return planes
-
-
 def portable_planes(dim: int, n_tables: int, n_bits: int):
     """The md5-derived integer hyperplanes of the q_hyperlsh_eval
     doctrine as a dense numpy matrix: w(t,b,pos) = first 32 md5 bits of
@@ -493,43 +482,31 @@ def portable_planes(dim: int, n_tables: int, n_bits: int):
 
 
 def lsh_bucketed(embeddings: DataFrame, dim: int, n_tables: int = 8,
-                 n_bits: int = 3, seed: int = 42,
-                 carry_vectors: bool = False,
-                 portable: bool = True) -> DataFrame:
+                 n_bits: int = 3) -> DataFrame:
     """Multi-table random-hyperplane LSH (OR-amplification).
 
     Each of ``n_tables`` tables hashes a vector to an ``n_bits`` sign-bit
     bucket. P[one bit agrees] = 1 − angle(u,v)/π, so recall for a pair
     with bit-agreement p is 1 − (1 − p^b)^L. Output is exploded skinny
-    (vec_id, table, bucket) rows; with ``carry_vectors`` each row also
-    carries its embedding so a downstream per-bucket verifier needs no
-    re-join — shuffle volume is n_tables·|corpus| vector rows, linear in
-    the corpus (the id-pair alternative ships O(candidate pairs)).
+    (vec_id, tbl, bucket, embedding) rows: each row carries its
+    embedding so the per-bucket verifier needs no re-join — shuffle
+    volume is n_tables·|corpus| vector rows, linear in the corpus (the
+    id-pair alternative ships O(candidate pairs)).
 
-    Default ``portable=True``: plane weights are the md5-derived
-    integers of ``portable_planes`` and the sign test runs on the
-    HLE_SCALE integer grid — quantization happens SPARK-SIDE
-    (``F.round``, the established cross-engine HALF_UP) so every
-    bucket key is bit-identical to what the DuckDB oracle computes;
-    the projections are still ONE int64 numpy matmul per Arrow batch
-    (exact: |dot| ≤ dim·2·HLE_SCALE·2^31 ≈ 2^48+ « 2^63).
-    ``portable=False`` keeps the seeded float-numpy planes for
-    isolation probes that sweep seeds.
-
-    All n_tables·n_bits projections happen in ONE numpy matmul per Arrow
-    batch (mapInPandas). The expression-fold formulation (24 interpreted
+    Plane weights are the md5-derived integers of ``portable_planes``
+    and the sign test runs on the HLE_SCALE integer grid —
+    quantization happens SPARK-SIDE (``F.round``, the established
+    cross-engine HALF_UP) so every bucket key is bit-identical to what
+    the DuckDB oracle computes; the projections are ONE int64 numpy
+    matmul per Arrow batch (exact: |dot| ≤ dim·2·HLE_SCALE·2^31 ≈
+    2^48+ « 2^63). The expression-fold formulation (24 interpreted
     aggregate() folds per row) measured ~50× slower — dense linear
     algebra is exactly the sanctioned Pandas-UDF case.
     """
     import numpy as np
     import pandas as pd
 
-    if portable:
-        planes = portable_planes(dim, n_tables, n_bits)  # (L*b, d) int64
-        vcol = "qv"
-    else:
-        planes = np.array(_hyperplanes(dim, n_tables * n_bits, seed))
-        vcol = "embedding"
+    planes = portable_planes(dim, n_tables, n_bits)  # (L*b, d) int64
     powers = 1 << np.arange(n_bits)
 
     def fn(batches):
@@ -538,35 +515,28 @@ def lsh_bucketed(embeddings: DataFrame, dim: int, n_tables: int = 8,
                 continue
             ids = pdf["vec_id"].to_numpy()
             mat = np.stack([np.asarray(v, dtype=planes.dtype)
-                            for v in pdf[vcol]])
+                            for v in pdf["qv"]])
             bits = (mat @ planes.T) >= 0            # (n, L*b)
             n = len(ids)
             bkt = np.empty((n, n_tables), dtype=np.int64)
             for t in range(n_tables):
                 bkt[:, t] = bits[:, t * n_bits:(t + 1) * n_bits] @ powers
-            cols = {
+            yield pd.DataFrame({
                 "vec_id": np.repeat(ids, n_tables),
                 "tbl": np.tile(np.arange(n_tables, dtype=np.int32), n),
                 "bucket": bkt.reshape(-1),
-            }
-            if carry_vectors:
-                cols["embedding"] = pdf["embedding"].iloc[
-                    np.repeat(np.arange(n), n_tables)].to_numpy()
-            yield pd.DataFrame(cols)
+                "embedding": pdf["embedding"].iloc[
+                    np.repeat(np.arange(n), n_tables)].to_numpy(),
+            })
 
-    schema = "vec_id bigint, tbl int, bucket bigint"
-    if carry_vectors:
-        schema += ", embedding array<double>"
-    sel = [F.col("vec_id")]
-    if portable:
-        sel.append(F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * HLE_SCALE, 0)
-            .cast("long")).alias("qv"))
-    if (not portable) or carry_vectors:
-        sel.append(F.col("embedding").cast("array<double>")
-                   .alias("embedding"))
-    return embeddings.select(*sel).mapInPandas(fn, schema)
+    return embeddings.select(
+        "vec_id",
+        F.transform(F.col("embedding"),
+                    lambda x: F.round(x.cast("double") * HLE_SCALE, 0)
+                    .cast("long")).alias("qv"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    ).mapInPandas(fn, "vec_id bigint, tbl int, bucket bigint, "
+                      "embedding array<double>")
 
 
 LSH_OCC_TARGET = 64     # occupancy pin when recall forces the table clamp
@@ -580,10 +550,7 @@ LSH_MAX_OCC = 4096       # per-task memory bound: occ·dim·8 B ≈ 2 MB at dim 
 LSH_SHUFFLE_COST = 128
 
 
-def lsh_sized_params(n_vecs: int, threshold: float,
-                     occ_target: int = LSH_OCC_TARGET,
-                     target_recall: float = LSH_TARGET_RECALL
-                     ) -> tuple[int, int]:
+def lsh_sized_params(n_vecs: int, threshold: float) -> tuple[int, int]:
     """The measured SCALE.md sizing rule as the operator default.
 
     Chance collisions put ~n/2^b vectors in every bucket, so candidate
@@ -593,7 +560,8 @@ def lsh_sized_params(n_vecs: int, threshold: float,
     agreement probability of a pair AT the threshold, so holding recall
     needs L ≈ ln(1/(1−recall))/p^b tables (OR-amplification).
 
-    The anchor is the occupancy-pinned config: b_occ = log2(n/occ_target)
+    The anchor is the occupancy-pinned config: b_occ =
+    log2(n/LSH_OCC_TARGET)
     keeps per-table candidate volume LINEAR in n (the whole point; the
     recall-strict alternative costs n^{1+ρ} with ρ = −log2 p — at this
     corpus's threshold 0.4, ρ ≈ 0.66, which re-grows toward the
@@ -613,12 +581,12 @@ def lsh_sized_params(n_vecs: int, threshold: float,
 
     n = max(n_vecs, 1)
     p = 1.0 - math.acos(max(min(threshold, 1.0), -1.0)) / math.pi
-    need = math.log(1.0 / (1.0 - target_recall))
+    need = math.log(1.0 / (1.0 - LSH_TARGET_RECALL))
 
     def tables(b: int) -> int:
         return min(math.ceil(need / max(p ** b, 1e-12)), LSH_MAX_TABLES)
 
-    b_occ = max(3, math.ceil(math.log2(n / occ_target)))
+    b_occ = max(3, math.ceil(math.log2(n / LSH_OCC_TARGET)))
     v_anchor = tables(b_occ) * n * (n / (1 << b_occ)) / 2.0
     best: tuple[float, int, int] | None = None
     for b in range(3, b_occ + 1):
@@ -637,10 +605,7 @@ def lsh_sized_params(n_vecs: int, threshold: float,
 
 def lsh_neardup(embeddings: DataFrame, dim: int,
                 threshold: float = NEARDUP_THRESHOLD,
-                n_tables: int | None = None, n_bits: int | None = None,
-                seed: int = 42, verify: str = "bucket",
-                n_vecs: int | None = None,
-                portable: bool = True) -> DataFrame:
+                n_vecs: int | None = None) -> DataFrame:
     """Near-dup pairs via LSH blocking: group on (table, bucket), exact
     cosine verify inside buckets, dedup across tables.
 
@@ -648,132 +613,63 @@ def lsh_neardup(embeddings: DataFrame, dim: int,
     q_embed_neardup ground truth). Cost scales with bucket occupancy,
     not |corpus|² — the 100 TB path.
 
-    ORACLE-EXACT since r10: with the default ``portable=True`` the
-    buckets come from md5-derived integer hyperplanes over the
-    HLE_SCALE grid (``lsh_bucketed`` portable mode) and the verify
-    cosine is the 4-dp-rounded float GEMM already hash-proven by
-    q_embed_neardup — so the ENTIRE declared pipeline (blocking +
-    verify) reproduces in DuckDB and carries a driver hash row. The
-    seeded float-plane form stays available via ``portable=False``
-    for seed-sweep isolation probes.
+    ORACLE-EXACT: the buckets come from md5-derived integer
+    hyperplanes over the HLE_SCALE grid (``lsh_bucketed``) and the
+    verify cosine is the 4-dp-rounded float GEMM already hash-proven
+    by q_embed_neardup — so the ENTIRE declared pipeline (blocking +
+    verify) reproduces in DuckDB and carries a driver hash row.
 
-    By default (``n_bits=None``) the operator AUTO-SIZES itself with
-    ``lsh_sized_params``: one O(1)-bytes ``count()`` driver sync (same
-    sanctioned pattern as dedup_components' convergence probe) fetches
-    the corpus size, then n_bits pins bucket occupancy and n_tables is
-    grown to hold expected recall — so the DECLARED query stays linear
-    at 30× without manual configuration (SCALE.md measured the fixed
-    b=3 default at 904× candidate blowup).  Passing explicit
-    ``n_bits``/``n_tables`` (as the isolation runs of the retired
-    scale_trend probe did, ``git show d6b2a7b:tools/scale_trend.py``)
-    bypasses the count entirely.
+    The operator AUTO-SIZES itself with ``lsh_sized_params``: n_bits
+    pins bucket occupancy and n_tables is grown to hold expected
+    recall — so the DECLARED query stays linear at 30× without manual
+    configuration (SCALE.md measured the fixed b=3 default at 904×
+    candidate blowup). ``n_vecs`` is the corpus size; without it one
+    O(1)-bytes ``count()`` driver sync (same sanctioned pattern as
+    dedup_components' convergence probe) fetches it.
 
-    Shuffle discipline, default ``verify='bucket'``: each bucket group
-    scores ALL its within-bucket pairs in one numpy gemm (same
-    sanctioned dense-linear-algebra pattern as q_embed_neardup), so the
-    only data moved is n_tables·|corpus| vector rows — LINEAR in the
-    corpus — and the cross-table dedup shuffles only pairs that already
-    passed the threshold. The alternative of shipping candidate id-pairs
-    and re-joining vectors moves O(candidate pairs)·2·dim·8 B, which at
-    a low threshold (weak per-bit contrast: p≈0.64 for sim 0.42 vs 0.5
+    Shuffle discipline: each bucket group scores ALL its within-bucket
+    pairs in one numpy gemm (same sanctioned dense-linear-algebra
+    pattern as q_embed_neardup), so the only data moved is
+    n_tables·|corpus| vector rows — LINEAR in the corpus — and the
+    cross-table dedup shuffles only pairs that already passed the
+    threshold. The alternative of shipping candidate id-pairs and
+    re-joining vectors moves O(candidate pairs)·2·dim·8 B, which at a
+    low threshold (weak per-bit contrast: p≈0.64 for sim 0.42 vs 0.5
     random) is near-quadratic — measured 10.4 s vs 1.5 s at sf0.1.
-    Per-task memory is one bucket ≈ occupancy·dim·8 B; size n_bits so
-    occupancy stays bounded (a count per (tbl, bucket) shows it), which
-    the recall formula requires anyway. ``verify='join'`` keeps that
-    pure-shuffle variant (no per-bucket memory envelope at all);
-    ``verify='broadcast'`` is the OPT-IN collect-once fast path for
-    corpora known to fit one executor (~5 GB at 10M×64).
+    Per-task memory is one bucket ≈ occupancy·dim·8 B, which the sizer
+    bounds (LSH_MAX_OCC).
     """
     import numpy as np
     import pandas as pd
 
-    from movie_rec_spark.functions import cosine_batch
+    # ``n_vecs`` lets callers that KNOW the corpus size (parquet footer
+    # metadata via catalog.table_rows, a maintained catalog stat) skip
+    # the sizing count() scan on the query path
+    n_tables, n_bits = lsh_sized_params(
+        embeddings.count() if n_vecs is None else n_vecs, threshold)
+    buck = lsh_bucketed(embeddings, dim, n_tables, n_bits)
 
-    if n_bits is None:
-        # ``n_vecs`` lets callers that KNOW the corpus size (parquet
-        # footer metadata via catalog.table_rows, a maintained catalog
-        # stat) skip the sizing count() scan on the query path
-        sized_tables, n_bits = lsh_sized_params(
-            embeddings.count() if n_vecs is None else n_vecs, threshold)
-        if n_tables is None:
-            n_tables = sized_tables
-    elif n_tables is None:
-        n_tables = 8
+    def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        m = np.stack([np.asarray(v, dtype=np.float64)
+                      for v in pdf["embedding"]])
+        nrm = np.linalg.norm(m, axis=1)
+        nrm[nrm == 0] = 1.0
+        # dot-then-divide, matching the oracle's accumulation order
+        # (see q_embed_neardup) so 4-decimal rounding is identical
+        sims = np.round((m @ m.T) / np.outer(nrm, nrm), 4)
+        mask = (ids[:, None] < ids[None, :]) & (sims >= threshold)
+        ai, bj = np.nonzero(mask)
+        return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bj],
+                             "sim": sims[ai, bj]})
 
-    if verify == "bucket":
-        buck = lsh_bucketed(embeddings, dim, n_tables, n_bits, seed,
-                            carry_vectors=True, portable=portable)
-
-        def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["embedding"]])
-            nrm = np.linalg.norm(m, axis=1)
-            nrm[nrm == 0] = 1.0
-            # dot-then-divide, matching the oracle's accumulation order
-            # (see q_embed_neardup) so 4-decimal rounding is identical
-            sims = np.round((m @ m.T) / np.outer(nrm, nrm), 4)
-            mask = (ids[:, None] < ids[None, :]) & (sims >= threshold)
-            ai, bj = np.nonzero(mask)
-            return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bj],
-                                 "sim": sims[ai, bj]})
-
-        return (
-            buck.groupBy("tbl", "bucket")
-            .applyInPandas(gemm, "vec_a bigint, vec_b bigint, sim double")
-            # sims are deterministic (identical rounded gemm in every
-            # table), so cross-table dedup on the id pair alone is exact
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
-
-    buck = lsh_bucketed(embeddings, dim, n_tables, n_bits, seed,
-                        portable=portable)
-    a = buck.select(F.col("vec_id").alias("vec_a"), "tbl", "bucket")
-    b = buck.select(F.col("vec_id").alias("vec_b"), "tbl", "bucket")
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
+    return (
+        buck.groupBy("tbl", "bucket")
+        .applyInPandas(gemm, "vec_a bigint, vec_b bigint, sim double")
+        # sims are deterministic (identical rounded gemm in every
+        # table), so cross-table dedup on the id pair alone is exact
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    if verify == "join":
-        e = _as_double(embeddings).select("vec_id", "embedding")
-        withv = (
-            pairs
-            .join(e.select(F.col("vec_id").alias("vec_a"),
-                           F.col("embedding").alias("va")), "vec_a")
-            .join(e.select(F.col("vec_id").alias("vec_b"),
-                           F.col("embedding").alias("vb")), "vec_b")
-        )
-        sim = F.round(cosine_batch(F.col("va"), F.col("vb")), 4)
-        return (
-            withv.select("vec_a", "vec_b", sim.alias("sim"))
-            .filter(F.col("sim") >= F.lit(threshold))
-        )
-
-    spark = embeddings.sparkSession
-    local = embeddings.select("vec_id", "embedding").orderBy("vec_id").collect()
-    ids = np.array([r.vec_id for r in local], dtype=np.int64)
-    mat = np.array([r.embedding for r in local], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1), 1e-300)[:, None]
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def score(batches):
-        all_ids, unit = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ia = np.searchsorted(all_ids, pdf["vec_a"].to_numpy())
-            ib = np.searchsorted(all_ids, pdf["vec_b"].to_numpy())
-            sims = np.round(np.einsum("ij,ij->i", unit[ia], unit[ib]), 4)
-            keep = sims >= threshold
-            yield pd.DataFrame({
-                "vec_a": pdf["vec_a"].to_numpy()[keep],
-                "vec_b": pdf["vec_b"].to_numpy()[keep],
-                "sim": sims[keep],
-            })
-
-    return pairs.mapInPandas(score, "vec_a bigint, vec_b bigint, sim double")
 
 
 # Portable hyperplane LSH (q_hyperlsh_eval): points snap to the
@@ -812,8 +708,9 @@ def q_hyperlsh_eval(embeddings: DataFrame,
                     sample_n: int = HLE_AUDIT_N) -> DataFrame:
     """Hyperplane-LSH configuration audit — q_minhash_eval's sibling
     for the EMBEDDING near-dup family (the declared q_neardup_lsh
-    pipeline uses float numpy hyperplanes and stays rows-only; this
-    portable integer twin is the measurement). One hash-checked
+    pipeline buckets on the same md5 integer planes at auto-sized
+    (n_tables, n_bits); this audit measures a fixed recall-tight
+    config on a fixed sample). One hash-checked
     all-integer table over the UNION of LSH candidate pairs and
     exact-cosine true pairs, so both failure modes are rows:
 

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's library, wherever the checkout lives
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from movie_rec_spark.session import get_spark
 

@@ -77,9 +77,7 @@ PORTABLE = sorted([
 
 @pytest.fixture(scope="module")
 def entry(spark):
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as E
+    import __spark_entry__ as E  # the checkout root is on sys.path (conftest)
 
     from movie_rec_spark.sources.catalog import Catalog
     Catalog(spark, SF).register_views()

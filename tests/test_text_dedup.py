@@ -142,7 +142,7 @@ def test_simhash_exact_dup_distance_zero(spark):
         "completely different words entirely unrelated corpus here now",
     ]
     out = {(r.doc_a, r.doc_b): r.hamming
-           for r in D.q_dedup_simhash(_docs(spark, texts)).collect()}
+           for r in D.simhash_neardup(_docs(spark, texts)).collect()}
     assert out.get((0, 1)) == 0
     assert (0, 2) not in out or out[(0, 2)] > 0
 
@@ -162,21 +162,26 @@ def test_minhash_recall_against_jaccard_oracle(spark, sf_docs):
 def test_simhash_blocking_exact_vs_brute_force(spark, sf_docs):
     """The k+1-segment pigeonhole blocking must find EVERY pair within
     hamming_max bits — verified against brute-force hamming over the
-    collected signatures, at both the default radius and a wide one
+    collected signatures at the same width (k+1 segments of
+    56 // (k+1) bits), at both the default radius and a wide one
     (the wide case needs >4 blocks; 4 quarters only guarantee <=3)."""
-    sigs = {r.doc_id: r.sig
-            for r in D.simhash_signatures(sf_docs).collect()}
-    ids = sorted(sigs)
     for hamming_max in (3, 8):
-        truth = {
-            (a, b): bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
-            for i, a in enumerate(ids) for b in ids[i + 1:]
-            if bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
-            <= hamming_max
-        }
+        n_seg = hamming_max + 1
+        w = D.SHP_BITS // n_seg
+        sigs = {r.doc_id: list(r.segs)
+                for r in D.simhash_sized_sigs(
+                    sf_docs, n_seg * w, w).collect()}
+        ids = sorted(sigs)
+        truth = {}
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                h = sum(bin(x ^ y).count("1")
+                        for x, y in zip(sigs[a], sigs[b]))
+                if h <= hamming_max:
+                    truth[(a, b)] = h
         got = {(r.doc_a, r.doc_b): r.hamming
-               for r in D.q_dedup_simhash(sf_docs, hamming_max).collect()}
-        assert got == truth
+               for r in D.simhash_neardup(sf_docs, hamming_max).collect()}
+        assert got == truth and truth
 
 
 def test_dedup_components_warns_when_not_converged(spark):
@@ -1411,14 +1416,29 @@ def test_simhash_sized_params_floor_growth_cap():
 
 def test_simhash_sized_collapses_to_declared_form(spark, sf_docs):
     """Below the sizer floor the sized operator (the n_docs route the
-    entry point now declares) must return EXACTLY the 56-bit/14-bit
+    entry point declares) must return EXACTLY the 56-bit/14-bit
     result set — the driver-hash-invariance claim."""
-    legacy = {(r.doc_a, r.doc_b): r.hamming
-              for r in D.q_dedup_simhash(sf_docs).collect()}
+    n = sf_docs.count()
+    assert D.simhash_sized_params(n) == (56, 14)
+    floor = {(r.doc_a, r.doc_b): r.hamming
+             for r in D.simhash_neardup(sf_docs).collect()}
     sized = {(r.doc_a, r.doc_b): r.hamming
-             for r in D.q_dedup_simhash(
-                 sf_docs, n_docs=sf_docs.count()).collect()}
-    assert sized == legacy and len(sized) > 0
+             for r in D.simhash_neardup(sf_docs, n_docs=n).collect()}
+    assert sized == floor and len(sized) > 0
+
+
+def test_simhash_sized_segments_are_scalar_sig_slices(spark, sf_docs):
+    """At (56, 14) every segment of the sized signature equals the
+    matching 14-bit slice ``(sig >> 14q) & 0x3FFF`` of the scalar
+    56-bit ``simhash_portable_sigs`` — the bit identity the declared
+    q_dedup_simhash oracle and q_simhash_eval both rest on."""
+    segs = {r.doc_id: list(r.segs)
+            for r in D.simhash_sized_sigs(sf_docs, 56, 14).collect()}
+    sigs = {r.doc_id: r.sig
+            for r in D.simhash_portable_sigs(sf_docs).collect()}
+    assert segs.keys() == sigs.keys() and segs
+    for d, sig in sigs.items():
+        assert segs[d] == [(sig >> (14 * q)) & 0x3FFF for q in range(4)], d
 
 
 def test_simhash_sized_sigs_python_mirror(spark):
@@ -1469,19 +1489,19 @@ def test_simhash_sized_blocking_exact_vs_brute_force(spark, sf_docs):
 
 
 def test_simhash_sized_keeps_exchange_budget(spark, sf_docs):
-    """The sized route must keep the declared form's plan shape (vote
+    """The sized route must keep the 56/14 floor form's plan shape (vote
     aggregate + cross-segment dedup) — widening signatures may not add
     shuffles. Since r12 the kernel also fans the single-task test-scale
     scan out before the per-token md5 (skew.fanout_scan, +2 tiny
     (doc_id, text) repartitions shared across the self-join sides,
     absent at production partition counts) — the invariant stays a
-    comparison against the UNSIZED declared form, so a sized-route
+    comparison against the unsized floor form, so a sized-route
     regression still fails."""
     from movie_rec_spark.plans import count_exchanges
 
-    sized = D.q_dedup_simhash(sf_docs, n_docs=10**9)
-    declared = D.q_dedup_simhash(sf_docs)
-    assert count_exchanges(sized) == count_exchanges(declared) == 4
+    sized = D.simhash_neardup(sf_docs, n_docs=10**9)
+    floor = D.simhash_neardup(sf_docs)
+    assert count_exchanges(sized) == count_exchanges(floor) == 4
 
 
 def test_pipeline_llm_builds_without_driver_collect(spark, sf_docs,

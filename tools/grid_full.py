@@ -19,8 +19,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from movie_rec_spark import ml as M  # noqa: E402
 from movie_rec_spark.session import get_spark  # noqa: E402

@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 # Queries whose sf0.01 oracle comparison is vacuous (both sides empty):
 # re-checked additionally at the given sf and recorded as name@sf.
@@ -42,7 +43,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
 from movie_rec_spark.session import get_spark  # noqa: E402
