@@ -1,8 +1,9 @@
 """The library's one memo, for parquet schemas and row counts, the
-persisted IVF and SemDeDup fits, and serving's user-independent
-answers. A key is the source's fingerprint plus a params tuple naming
-the call site. A table path is fingerprinted by each file's local
-(path, size, mtime_ns), so a table rewritten in place is read afresh.
+persisted IVF and SemDeDup fits, and serving's held answers and
+per-user indexes. A key is the source's fingerprint plus a params
+tuple naming the call site. A table path is fingerprinted by each
+file's local (path, size, mtime_ns), so a table rewritten in place is
+read afresh.
 A DataFrame with input files is keyed by those files plus its plan's
 ``semanticHash()``, and a hit must also pass ``sameSemantics`` against
 the stored source, so a transformed frame over the same files never

@@ -269,7 +269,7 @@ def q_als_recs(lineitem: DataFrame, orders: DataFrame,
 
 
 # The T4 serving-semantics query lives in operators/relational.py
-# (q_recommend / serve_overlay): serving must not fit a model in-query —
+# (q_recommend): serving must not fit a model in-query —
 # pipeline.serve_recommendations applies the same overlay rules to this
 # module's PRECOMPUTED ALS recs (run_pipeline's gold table), loaded once
 # into a driver-side ServingIndex.

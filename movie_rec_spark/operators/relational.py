@@ -25,6 +25,11 @@ plan per version of their inputs (``top_movies_plan``,
 on the driver, per-user ones as CSR slices keyed by custkey
 (``csr``). A request is a lookup served as a LocalRelation
 and runs no Spark job; a rewritten input changes the memo key.
+``q_recommend`` stays a Spark query, the measured floor of Spark
+serving: one filter → sort → limit over the popularity aggregate it
+holds as a checkpoint, with the user's held seen set and the held
+slate as array literals, so a request runs one job and compiles no
+code for its user.
 
 Reference sites cited per query for parity checking.
 """
@@ -265,20 +270,13 @@ def user_parts(lineitem: DataFrame, orders: DataFrame,
     )
 
 
-def q_user_rated_movies(lineitem: DataFrame, orders: DataFrame, part: DataFrame,
-                        custkey: int = FOCUS_CUSTKEY) -> DataFrame:
-    """Semi-join J3: parts the customer has ordered, with attributes
-    (controller.py:231, IN-subquery membership — no multiplicity).
-
-    Held once per version of the three inputs: the distinct non-null
-    (o_custkey, l_partkey) pairs of lineitem ⋈ orders as CSR int
-    columns, and part's answer columns as an Arrow table keyed by
-    p_partkey (part names are not copied into every pair). A request
-    takes the part rows whose key is in the customer's slice, which
-    keeps the semi-join's answer: each such part row once, and never a
-    row with a null key. It is served as a LocalRelation with no Spark
-    job.
-    """
+def _seen_parts(lineitem: DataFrame, orders: DataFrame,
+                custkey: int) -> np.ndarray:
+    """The distinct non-null part keys of ``custkey``'s order lines,
+    sorted. The distinct non-null (o_custkey, l_partkey) pairs of
+    lineitem ⋈ orders are held once per version of the two inputs as
+    CSR int columns; ``q_user_rated_movies`` and ``q_recommend`` share
+    them."""
     def build():
         pairs = (
             lineitem.select("l_orderkey", "l_partkey")
@@ -291,15 +289,33 @@ def q_user_rated_movies(lineitem: DataFrame, orders: DataFrame, part: DataFrame,
         cust, parts = (pairs.column(c).to_numpy()
                        for c in ("o_custkey", "l_partkey"))
         sort = np.lexsort((parts, cust))
-        keys, offsets = csr(cust[sort])
+        return (*csr(cust[sort]), parts[sort])
+
+    keys, offsets, parts = memo.lookup(
+        (lineitem, orders), ("seen_parts",), build)
+    return parts[csr_rows(keys, offsets, custkey)]
+
+
+def q_user_rated_movies(lineitem: DataFrame, orders: DataFrame, part: DataFrame,
+                        custkey: int = FOCUS_CUSTKEY) -> DataFrame:
+    """Semi-join J3: parts the customer has ordered, with attributes
+    (controller.py:231, IN-subquery membership — no multiplicity).
+
+    The customer's seen part keys come from the held pairs
+    (``_seen_parts``); part's answer columns are held on their own, once
+    per version of ``part``, as an Arrow table keyed by p_partkey (part
+    names are not copied into every pair). A request takes the part
+    rows whose key is in the customer's slice, which keeps the
+    semi-join's answer: each such part row once, and never a row with a
+    null key. It is served as a LocalRelation with no Spark job.
+    """
+    def build():
         attrs = part.select("p_partkey", "p_name", "p_brand")
         held = attrs.filter(F.col("p_partkey").isNotNull()).toArrow()
-        return (keys, offsets, parts[sort], held,
-                held.column("p_partkey").to_numpy(), attrs.schema)
+        return held, held.column("p_partkey").to_numpy(), attrs.schema
 
-    keys, offsets, parts, held, part_keys, schema = memo.lookup(
-        (lineitem, orders, part), ("user_rated_movies",), build)
-    mine = parts[csr_rows(keys, offsets, custkey)]
+    mine = _seen_parts(lineitem, orders, custkey)
+    held, part_keys, schema = memo.lookup(part, ("part_attrs",), build)
     return lineitem.sparkSession.createDataFrame(
         held.take(np.flatnonzero(np.isin(part_keys, mine))), schema)
 
@@ -322,72 +338,69 @@ def q_avg_recommendations(lineitem: DataFrame, orders: DataFrame,
     )
 
 
-def serve_overlay(recs: DataFrame, seen: DataFrame, popularity: DataFrame,
-                  n: int = REC_LIMIT) -> DataFrame:
-    """T4 serving overlay (controller.py:180-314, README.md:42-44): keep
-    the user's precomputed recs that are still unseen, back-fill from
-    the popularity ranking excluding both seen and already-recommended,
-    serve precomputed-before-popular. Pure relational over a FIXED
-    ``recs`` input: the oracle-checked declared query (q_recommend)
-    composes it, and it is the reference the ALS serving path
-    (pipeline.serve_recommendations, array lookups in a driver-side
-    index) is tested against.
-
-    Inputs: recs(item_id, score, rec_source), seen(item_id),
-    popularity(item_id, score). recs/seen are one user's rows → tiny →
-    broadcast into the anti-joins; popularity is the large side.
-    """
-    fresh = recs.join(F.broadcast(seen), "item_id", "left_anti")
-    backfill = (
-        popularity
-        .join(F.broadcast(seen), "item_id", "left_anti")
-        .join(F.broadcast(fresh.select("item_id")), "item_id", "left_anti")
-        .orderBy(F.desc("score"), F.asc("item_id"))
-        .limit(n)
-        .withColumn("rec_source", F.lit("popular"))
-    )
-    ranked = fresh.withColumn("_prio", F.lit(0)).unionByName(
-        backfill.withColumn("_prio", F.lit(1)))
-    return (
-        ranked.orderBy(F.asc("_prio"), F.desc("score"), F.asc("item_id"))
-        .limit(n)
-        .drop("_prio")
-    )
-
-
 def q_recommend(lineitem: DataFrame, orders: DataFrame,
                 custkey: int = FOCUS_CUSTKEY, n: int = REC_LIMIT) -> DataFrame:
     """Declared T4 query, oracle-checkable: the serving overlay over a
-    FIXED deterministic precomputed-recs input.
+    FIXED deterministic precomputed-recs input. The overlay keeps the
+    user's precomputed recs that are still unseen, back-fills from the
+    popularity ranking without seen or already-recommended items, and
+    serves precomputed before popular (controller.py:180-314,
+    README.md:42-44).
 
-    The model path applies the same overlay rules to ALS output
+    The model path applies the same rules to ALS output
     (pipeline.serve_recommendations, by lookups in an index of the
     pipeline's precomputed recs table); here "last cycle's precomputed
-    table" is stood in by the popularity top-N — the reference's own
-    cold-start fallback (controller.py:262-310) — which makes every
-    overlay step (seen-filter, double-anti-join back-fill, priority
-    order) SQL-expressible and hash-checked by the driver at sf0.01.
+    table" is stood in by the popularity top-``n`` — the reference's
+    own cold-start fallback (controller.py:262-310) — which makes the
+    overlay SQL-expressible and hash-checked by the driver at sf0.01.
 
-    The popularity aggregate feeds both overlay inputs (the precomputed
-    slate and the back-fill source) and depends on no user. It
-    is computed once per version of ``lineitem`` and held in ``memo``
-    as a ``localCheckpoint``: its |parts| rows stay on the executors,
-    and a request plans only its own user's rows against them.
+    Because the slate ``P`` is drawn from the popularity ranking
+    ``pop`` itself, the fresh recs ``P∖S`` and the back-fill
+    ``pop∖S∖P`` (``S`` the seen set) are one ranking of ``pop∖S``:
+    slate items first, then score desc, item_id asc, cut at ``n``.
+    Only the seen set depends on the user. The popularity aggregate is
+    computed once per version of ``lineitem`` and held in ``memo`` as a
+    ``localCheckpoint`` (|parts| rows on the executors), the slate's
+    ids once per version and ``n``, and the seen set comes from the
+    pairs ``q_user_rated_movies`` holds. A request is one
+    filter → sort → limit over the checkpoint: one Spark job. Both id
+    sets enter the plan as typed ``array<bigint>`` literals, which
+    generated code reads as reference objects, so no request compiles
+    code for its user. A null item is never seen (as in an anti-join)
+    and is served at most once.
     """
-    pop = memo.lookup(lineitem, ("recommend_popularity",),
-                      lambda: part_popularity(lineitem).select(
-                          F.col("l_partkey").alias("item_id"),
-                          F.col("cnt_orders").cast("double").alias("score"),
-                          "avg_price",
-                      ).localCheckpoint())
-    prerecs = (
-        pop.orderBy(F.desc("score"), F.desc("avg_price"), F.asc("item_id"))
+    def build():
+        ids = (_popularity(lineitem)
+               .orderBy(F.desc("score"), F.desc("avg_price"), F.asc("item_id"))
+               .limit(n).select("item_id").toArrow().column(0))
+        return ids.drop_null().to_numpy(), ids.null_count > 0
+
+    seen = _seen_parts(lineitem, orders, custkey)
+    # the slate's non-null ids, and whether a null id is among them
+    slate, slate_null = memo.lookup(lineitem, ("recommend_slate", n), build)
+    pop = _popularity(lineitem)
+    item = F.col("item_id")
+    source = F.when(
+        F.coalesce(F.array_contains(F.lit(slate), item), F.lit(slate_null)),
+        "precomputed").otherwise("popular")
+    return (
+        pop.filter(item.isNull() | ~F.array_contains(F.lit(seen), item))
+        .select("item_id", "score", source.alias("rec_source"))
+        .orderBy(F.col("rec_source") != "precomputed", F.desc("score"),
+                 F.asc("item_id"))
         .limit(n)
-        .select("item_id", "score", F.lit("precomputed").alias("rec_source"))
     )
-    seen = user_parts(lineitem, orders, custkey).select(
-        F.col("l_partkey").alias("item_id"))
-    return serve_overlay(prerecs, seen, pop.select("item_id", "score"), n)
+
+
+def _popularity(lineitem: DataFrame) -> DataFrame:
+    """``part_popularity`` as (item_id, score, avg_price), held once per
+    version of ``lineitem`` as a ``localCheckpoint``."""
+    return memo.lookup(lineitem, ("recommend_popularity",),
+                       lambda: part_popularity(lineitem).select(
+                           F.col("l_partkey").alias("item_id"),
+                           F.col("cnt_orders").cast("double").alias("score"),
+                           "avg_price",
+                       ).localCheckpoint())
 
 
 def q_distinct_users(orders: DataFrame) -> DataFrame:

@@ -107,10 +107,11 @@ class ServingIndex:
                 self._fresh.get(user_id, ids[:0]), ids)
 
     def recommend(self, user_id: int, n: int) -> pa.Table:
-        """``relational.serve_overlay`` by array lookups: the user's
-        unseen recs (score desc, item_id asc), then the popularity
-        back-fill without seen or recommended items, ``n`` rows at
-        most."""
+        """The serving overlay by array lookups: the user's unseen
+        recs (score desc, item_id asc), then the popularity back-fill
+        without seen or recommended items, ``n`` rows at most.
+        ``tests/overlay.py`` holds the overlay as Spark joins, the
+        reference this index is tested against."""
         if n < 0:
             raise ValueError(f"n must be >= 0, got {n}")
         seen = self._seen[csr_rows(self._seen_keys, self._seen_off, user_id)]
@@ -186,8 +187,8 @@ def serve_recommendations(result: PipelineResult, user_id: int,
                           n: int = 10) -> DataFrame:
     """T4 read path: PRECOMPUTED recs (the pipeline's gold table — no
     model fit at serve time) minus the user's ratings, back-filled from
-    the popularity ranking (README.md:42-44), under exactly the rules
-    of ``relational.serve_overlay``. Answered from
+    the popularity ranking (README.md:42-44), under exactly the
+    overlay rules ``relational.q_recommend`` serves. Answered from
     ``result.serving_index`` by array lookups; the answer is a
     DataFrame over an Arrow table (a ``LocalRelation``), so planning
     and collecting it run no Spark job."""

@@ -1,4 +1,5 @@
-"""Count the Spark jobs a piece of test code launches."""
+"""Count the Spark jobs a piece of test code launches, and the classes
+Spark's code generator compiles for it."""
 
 from __future__ import annotations
 
@@ -17,3 +18,15 @@ def jobs_launched(spark, fn) -> int:
     # job-start events reach the status store asynchronously
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def classes_compiled(spark, fn) -> int:
+    """Classes Spark's code generator compiles while ``fn`` runs: the
+    count delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``, one
+    sample per compilation that missed the generator's cache. The
+    metric is JVM-wide, so nothing else may run Spark meanwhile."""
+    metric = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+              .METRIC_COMPILATION_TIME())
+    before = metric.getCount()
+    fn()
+    return metric.getCount() - before

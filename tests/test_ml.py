@@ -137,7 +137,7 @@ def test_serve_overlay_both_branches(spark):
     """Crafted fixture where BOTH overlay branches contribute: seen
     knocks items out of the precomputed recs AND the back-fill must skip
     seen and already-recommended items before topping up to n."""
-    from movie_rec_spark.operators.relational import serve_overlay
+    from overlay import serve_overlay
 
     recs = spark.createDataFrame(
         [(10, 5.0, "als"), (11, 4.0, "als"), (12, 3.0, "als")],

@@ -17,11 +17,11 @@ from hypothesis import example, given
 from hypothesis import strategies as st
 
 from hyp import SLOW
+from overlay import serve_overlay
 from spark_jobs import jobs_launched
 from pyspark.sql import functions as F
 
 from movie_rec_spark import schemas
-from movie_rec_spark.operators.relational import serve_overlay
 from movie_rec_spark.pipeline import (
     PipelineResult,
     ServingIndex,
@@ -36,7 +36,7 @@ T0 = dt.datetime(2024, 1, 1)
 
 def overlay_reference(result, user_id, n):
     """The Spark overlay the serving index must reproduce:
-    relational.serve_overlay composed over the result's frames."""
+    serve_overlay composed over the result's frames."""
     seen = (
         result.ratings.filter(F.col("user_id") == user_id)
         .select(F.col("movie_id").alias("item_id"))
