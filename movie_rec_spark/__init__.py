@@ -3,9 +3,9 @@
 A from-scratch re-expression of the query & data-processing capabilities of
 the reference movie-recommendation service (anskarl/movie_rec) as an
 idiomatic Spark library: DataFrame/SQL relational core, MLlib ALS for the
-latent-factor recommender, Structured Streaming for live counters, plus
-large-scale training-data-pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing).
+latent-factor recommender, Structured Streaming for stateful event-stream
+operators, plus large-scale training-data-pipeline operators (dedup,
+similarity search, text analysis, multimodal plumbing).
 
 Design stance (SURVEY.md §7.0): one SparkSession-backed library; serving
 semantics become queries/views; everything declarative so Catalyst gets

@@ -954,11 +954,10 @@ def q_json_encode(part: DataFrame) -> DataFrame:
 
 
 def q_event_counters(events: DataFrame) -> DataFrame:
-    """Batch analogue of the T3 live counters (streaming/counters.py
-    event_counters — identical agg, so batch output is the streaming
-    query's final state; tested equal in tests/test_streaming.py).
-    round(sum, 2) is safe: 2-decimal inputs sum to 2-decimal totals, so
-    no cross-engine rounding ties exist."""
+    """Per-user event counters — the batch form of the reference's live
+    Redis counters (T3/M4, controller.py:127-128). round(sum, 2) is
+    safe: 2-decimal inputs sum to 2-decimal totals, so no cross-engine
+    rounding ties exist."""
     return events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
@@ -966,10 +965,9 @@ def q_event_counters(events: DataFrame) -> DataFrame:
 
 
 def q_event_windowed(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour window counts per event type — the batch form of
-    streaming/counters.py windowed_counters (same F.window operator
-    Structured Streaming uses; epoch-aligned, so window.start equals
-    date_trunc('hour') in the oracle)."""
+    """Tumbling 1-hour window counts per event type (the F.window
+    operator Structured Streaming uses; epoch-aligned, so window.start
+    equals date_trunc('hour') in the oracle)."""
     return (
         events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))

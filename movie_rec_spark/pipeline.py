@@ -10,8 +10,8 @@ Reference flow (SURVEY.md §3.3/§3.4):
      by array lookups in a ``ServingIndex`` of the gold tables
 
 Here each stage is a pure transform over gold parquet tables; the
-15/30-minute cadence is an external trigger (cron/Structured Streaming
-``trigger(processingTime=...)`` — streaming/counters.py) re-running
+15/30-minute cadence is an external trigger (cron, or a Structured
+Streaming ``trigger(processingTime=...)``) re-running
 ``run_pipeline``. The refresh never collects to the driver; serving
 reads the gold tables into the driver once per ``PipelineResult``
 (three Arrow reads, the reference's Redis views) and runs no Spark job

@@ -34,8 +34,6 @@ TABLES = (
 # Dimension tables small enough to broadcast at any realistic scale factor.
 DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count of a catalog table from parquet FOOTER metadata —
@@ -59,19 +57,23 @@ def _ship_package(spark: SparkSession) -> None:
     fine when the driver runs from the repo, broken anywhere else. Zip
     the package once per SparkContext and addPyFile it: workers unpack
     onto their sys.path and every by-reference pickle resolves,
-    regardless of where the consuming driver was launched.
+    regardless of where the consuming driver was launched. The zip's
+    temp dir is removed when the interpreter exits.
     """
     sc = spark.sparkContext
     if getattr(sc, "_movie_rec_spark_shipped", False):
         return
+    import atexit
+    import shutil
     import tempfile
     import zipfile
 
     import movie_rec_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(movie_rec_spark.__file__))
-    zpath = os.path.join(tempfile.mkdtemp(prefix="mrs_pkg_"),
-                         "movie_rec_spark.zip")
+    tmp = tempfile.mkdtemp(prefix="mrs_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    zpath = os.path.join(tmp, "movie_rec_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:
@@ -124,24 +126,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ts_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
-
-
-class Catalog:
-    """Lazy table accessor bound to one scale-factor directory."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name in TABLES:
-            return load_table(self.spark, self.sf_dir, name)
-        raise AttributeError(name)
-
-    def table(self, name: str) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, name)
-
-    def register_views(self) -> None:
-        """Register every table as a temp view for spark.sql() use."""
-        for name in TABLES:
-            self.table(name).createOrReplaceTempView(name)

@@ -6,35 +6,29 @@ prior-only RANGE frame; serving that same alert online means carrying
 each user's trailing window as STATE and scoring events as they
 arrive. No built-in streaming window does prior-only per-event scoring
 (stream aggregations emit per-window rows, not per-event flags), so
-this is exactly the sanctioned ``applyInPandasWithState`` case — same
-operator family as streaming/sessions.stateful_sessions.
+this is exactly the sanctioned ``applyInPandasWithState`` case.
 
 Semantics parity with the batch kernel, tested (test_streaming):
 - baseline = the user's events in ``[t − window, t − 1]`` unix seconds
   — PRIOR-ONLY, same-second ties excluded from each other's baselines
-  (events in a micro-batch process in ascending second groups, each
-  group scoring against state before the group inserts);
+  (events of one second score together against state before any of
+  them inserts);
 - guards identical: fewer than ``min_n`` baseline points or zero
   variance → NULL z, never a flag; z rounds to 2dp BEFORE the
   threshold compare.
 
-Two variants, trading latency for ordering tolerance:
-- ``anomaly_stream`` scores IMMEDIATELY on arrival (lowest latency);
-  an event arriving late — after a younger event of the same user was
-  scored — sees a baseline containing its future. In-order delivery
-  per key (the Kafka-partition-per-user norm) gives bit-equal flags
-  to the batch kernel; the parity test drives exactly that.
-- ``anomaly_stream_eventtime`` removes the ordering assumption: events
-  park in per-user state until the WATERMARK seals their second, then
-  score in strict event-time order — batch-exact under ANY arrival
-  order within the lateness bound, at the cost of watermark-delay
-  alert latency. The out-of-order parity test drives a late event
-  around younger ones and still gets the batch kernel's rows.
+``anomaly_stream_eventtime`` makes no ordering assumption: events park
+in per-user state until the WATERMARK seals their second, then score in
+strict event-time order — batch-exact under ANY arrival order within
+the lateness bound, at the cost of watermark-delay alert latency. The
+out-of-order parity test drives a late event around younger ones and
+still gets the batch kernel's rows.
 
-State is one row per user: (ts_secs array<long>, vals array<double>),
-evicted below ``max_seen − window`` each batch, so state size is
-bounded by each user's event rate × window — observable via the usual
-state-store metrics.
+State is one row per user: the parked buffer plus the scored trailing
+window (ts_secs array<long>, vals array<double>), evicted below
+``max_seen − window`` each batch, so state size is bounded by each
+user's event rate × window — observable via the usual state-store
+metrics.
 """
 
 from __future__ import annotations
@@ -76,96 +70,8 @@ ANOMALY_OUTPUT = StructType([
     StructField("is_anomaly", BooleanType()),
 ])
 
-ANOMALY_STATE = StructType([
-    StructField("ts_secs", ArrayType(LongType())),
-    StructField("vals", ArrayType(DoubleType())),
-])
-
-
-def _score_group(key: tuple, pdfs: Iterable[pd.DataFrame],
-                 state: Any) -> Iterator[pd.DataFrame]:
-    import math
-
-    (user_id,) = key
-    if state.hasTimedOut:  # no timeout configured; defensive only
-        return
-    events = pd.concat(list(pdfs), ignore_index=True)
-    events = events.sort_values(["ts", "event_id"], kind="mergesort")
-    secs = (events["ts"].astype("int64") // 1_000_000_000).to_numpy()
-
-    if state.exists:
-        ts_secs, vals = state.get
-        ts_secs, vals = list(ts_secs), list(vals)
-    else:
-        ts_secs, vals = [], []
-
-    out: dict[str, list] = {f.name: [] for f in ANOMALY_OUTPUT.fields}
-    i = 0
-    rows = events.to_dict("records")
-    while i < len(rows):
-        sec = int(secs[i])
-        j = i
-        while j < len(rows) and int(secs[j]) == sec:
-            j += 1
-        # score ALL events at this second against state BEFORE any of
-        # them inserts — same-second ties never see each other (RANGE
-        # ... AND 1 PRECEDING parity)
-        base = [v for t, v in zip(ts_secs, vals)
-                if sec - ROLLING_WINDOW_SEC <= t <= sec - 1]
-        n = len(base)
-        z_ok, mu, sd = False, 0.0, 0.0
-        if n >= ANOMALY_MIN_N:
-            mu = sum(base) / n
-            sd = math.sqrt(sum((x - mu) ** 2 for x in base) / n)
-            z_ok = sd > 0
-        for k in range(i, j):
-            r = rows[k]
-            # + 0.0 IEEE-normalizes Python round()'s -0.0 to +0.0 —
-            # Spark's HALF_UP round never emits -0.0, and the driver's
-            # value hash is representation-sensitive
-            zk = (round((float(r["value"]) - mu) / sd, 2) + 0.0
-                  if z_ok else None)
-            out["event_id"].append(int(r["event_id"]))
-            out["user_id"].append(int(user_id))
-            out["ts"].append(r["ts"])
-            out["value"].append(float(r["value"]))
-            out["n_win"].append(n)
-            out["zscore"].append(zk)
-            out["is_anomaly"].append(
-                zk is not None and abs(zk) >= ANOMALY_Z_CUT)
-        for k in range(i, j):
-            ts_secs.append(sec)
-            vals.append(float(rows[k]["value"]))
-        i = j
-
-    # evict beyond the window behind the newest second seen
-    if ts_secs:
-        floor = max(ts_secs) - ROLLING_WINDOW_SEC
-        kept = [(t, v) for t, v in zip(ts_secs, vals) if t >= floor]
-        ts_secs = [t for t, _ in kept]
-        vals = [v for _, v in kept]
-    state.update((ts_secs, vals))
-    yield pd.DataFrame(out)
-
-
-def anomaly_stream(stream: DataFrame) -> DataFrame:
-    """Score a (event_id, user_id, ts, value) stream online; one
-    output row PER EVENT with the same columns as batch q_anomaly."""
-    return (
-        stream.select("event_id", "user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _score_group,
-            outputStructType=ANOMALY_OUTPUT,
-            stateStructType=ANOMALY_STATE,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
-    )
-
-
-# event-time variant: per-user state = the UNSCORED buffer (events the
-# watermark has not yet sealed) + the scored trailing window
+# per-user state = the UNSCORED buffer (events the watermark has not
+# yet sealed) + the scored trailing window
 ANOMALY_ET_STATE = StructType([
     StructField("buf_ids", ArrayType(LongType())),
     StructField("buf_us", ArrayType(LongType())),
@@ -180,12 +86,11 @@ def _score_group_eventtime(key: tuple, pdfs: Iterable[pd.DataFrame],
     """Buffer-then-score: arriving events park in per-user state until
     the WATERMARK passes their second (no earlier event can still
     arrive inside the lateness bound), then score in strict ts order
-    against the prior-only window — removing anomaly_stream's in-order
-    delivery assumption entirely; any arrival order within the
-    watermark yields the batch kernel's exact output. The timeout
-    timestamp re-arms to just past the oldest buffered second, so a
-    user whose stream goes quiet still flushes when the global
-    watermark advances past their buffer."""
+    against the prior-only window — no in-order delivery assumption;
+    any arrival order within the watermark yields the batch kernel's
+    exact output. The timeout timestamp re-arms to just past the oldest
+    buffered second, so a user whose stream goes quiet still flushes
+    when the global watermark advances past their buffer."""
     import math
     from bisect import bisect_left
 
@@ -247,7 +152,9 @@ def _score_group_eventtime(key: tuple, pdfs: Iterable[pd.DataFrame],
             z_ok = sd > 0
         for k in range(i, j):
             _s, us, eid, v = ripe[k]
-            # + 0.0: see _score_group — never emit IEEE -0.0
+            # + 0.0 IEEE-normalizes Python round()'s -0.0 to +0.0 —
+            # Spark's HALF_UP round never emits -0.0, and the driver's
+            # value hash is representation-sensitive
             zk = round((v - mu) / sd, 2) + 0.0 if z_ok else None
             out["event_id"].append(eid)
             out["ts"].append(us)

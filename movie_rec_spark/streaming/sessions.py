@@ -1,68 +1,32 @@
-"""Custom stateful streaming operator: gap-based sessionization.
+"""Streaming gap-based sessionization.
 
-Two implementations of the same semantics as the batch
+``session_windows_stream`` has the semantics of the batch
 ``operators.temporal.q_sessionize`` (session = run of one user's events
 with consecutive gaps <= 30 min; a gap strictly over the threshold
-splits, matching ``session_window``):
-
-1. ``session_windows_stream`` — declarative: ``session_window`` +
-   watermark. Spark's native session aggregation; state merge/cleanup
-   is the engine's job. Prefer this at any scale.
-2. ``stateful_sessions`` — ``applyInPandasWithState``: the template for
-   operators Spark has NO built-in for (the custom-stateful path the
-   engine exposes). Per-user GroupState holds the open session
-   (start/last/count/sum); a closed session is emitted as soon as a
-   later event proves the gap, and event-time timeout flushes sessions
-   the stream never extends.
+splits): ``session_window`` + watermark, Spark's native session
+aggregation, so state merge and cleanup are the engine's job.
+``q_sessionize_stream`` replays the events table through it out of
+order as a declared, oracle-backed query.
 
 State sizing at 100 TB: one open-session row per active user; the
-watermark/timeout bounds it to users active within the horizon —
-identical asymptotics to the built-in session_window state store.
+watermark bounds it to users active within the horizon.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from movie_rec_spark.localdf import local_df
 
 SESSION_GAP = "30 minutes"
-GAP_US = 30 * 60 * 1_000_000  # microseconds
-
-SESSION_OUTPUT = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
-
-# open session: (start_us, last_us, n_events, total_value)
-SESSION_STATE = StructType([
-    StructField("start_us", LongType()),
-    StructField("last_us", LongType()),
-    StructField("n_events", LongType()),
-    StructField("total_value", DoubleType()),
-])
 
 
 def session_windows_stream(stream: DataFrame,
                            gap: str = SESSION_GAP,
                            watermark: str = "1 hour") -> DataFrame:
-    """Declarative path: watermarked session-window aggregation.
-    Append mode emits a session once the watermark passes its close."""
+    """Watermarked session-window aggregation. Append mode emits a
+    session once the watermark passes its close."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap))
@@ -74,78 +38,6 @@ def session_windows_stream(stream: DataFrame,
         )
         .select("user_id", "session_start", "session_end",
                 "n_events", "total_value")
-    )
-
-
-def _sessionize_group(key: tuple, pdfs: Iterable[pd.DataFrame],
-                      state: Any) -> Iterator[pd.DataFrame]:
-    """Walk one user's micro-batch events in ts order, carrying the open
-    session in GroupState; yield sessions closed by an observed gap."""
-    (user_id,) = key
-
-    if state.hasTimedOut:
-        if state.exists:
-            start_us, last_us, n, tot = state.get
-            state.remove()
-            yield _emit(user_id, start_us, last_us, n, tot)
-        return
-
-    events = pd.concat(list(pdfs), ignore_index=True)
-    events = events.sort_values("ts", kind="mergesort")
-    ts_us = events["ts"].astype("int64")  # ns -> int64 ns; convert below
-    ts_us = ts_us // 1000  # microseconds
-    vals = events["value"].fillna(0.0)
-
-    if state.exists:
-        start_us, last_us, n, tot = state.get
-    else:
-        start_us, last_us, n, tot = None, None, 0, 0.0
-
-    closed: list[tuple] = []
-    for t, v in zip(ts_us, vals):
-        t = int(t)
-        if start_us is None:
-            start_us, last_us, n, tot = t, t, 1, float(v)
-        elif t - last_us <= GAP_US:  # gap == 30 min merges (session_window parity)
-            last_us, n, tot = t, n + 1, tot + float(v)
-        else:
-            closed.append((user_id, start_us, last_us, n, tot))
-            start_us, last_us, n, tot = t, t, 1, float(v)
-
-    state.update((start_us, last_us, n, tot))
-    # flush if the stream goes quiet past the gap (event-time timeout)
-    state.setTimeoutTimestamp(last_us // 1000 + GAP_US // 1000)
-
-    for row in closed:
-        yield _emit(*row)
-
-
-def _emit(user_id: int, start_us: int, last_us: int, n: int,
-          tot: float) -> pd.DataFrame:
-    return pd.DataFrame({
-        "user_id": [user_id],
-        "session_start": [pd.Timestamp(start_us, unit="us")],
-        "session_end": [pd.Timestamp(last_us, unit="us")],
-        "n_events": [n],
-        "total_value": [round(tot, 2)],
-    })
-
-
-def stateful_sessions(stream: DataFrame,
-                      watermark: str = "1 hour") -> DataFrame:
-    """Custom-stateful path: one GroupState row per user. Emits each
-    session when a later event closes it, or when event-time timeout
-    (watermark past last event + gap) flushes it."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group,
-            outputStructType=SESSION_OUTPUT,
-            stateStructType=SESSION_STATE,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
     )
 
 

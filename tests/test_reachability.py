@@ -1,15 +1,22 @@
-"""Every public library entry point has a caller outside the tests,
+"""Every public library entry point is reached from a non-test caller,
 and the library reads no environment variable beyond its deployment
 settings.
 
-A pure-AST scan, no Spark session: each public top-level ``def`` or
-``class`` in ``movie_rec_spark/`` must be referenced (as a name, an
-attribute or an import alias) from some non-test ``.py`` file of the
-repo, outside its own definition. Code that only tests reach is either
-given a caller on a measured or declared path, deleted, or listed in
-``KEPT`` with the reason it stays. Every ``os.environ`` / ``os.getenv``
-read in ``movie_rec_spark/`` must name a variable in ``ENV_SETTINGS``,
-so tuning knobs that nothing sets cannot grow back unnoticed.
+A pure-AST scan, no Spark session. The roots are every statement of the
+non-test ``.py`` files outside ``movie_rec_spark/`` (``__spark_entry__``,
+``bench.py``, ``perfbench/``, ``tools/``) and the package's own
+module-level statements other than imports, so a re-export in a package
+``__init__`` reaches nothing. A top-level ``def`` or ``class`` of the
+package reaches every name its body references (as a name, an attribute
+or an import alias), and a name reaches every package def of that name.
+Each public def must be reached from the roots through that graph: a
+reference from a def that is itself unreached does not count. Code that
+only tests reach is either given a caller on a measured or declared
+path, deleted, or listed in ``KEPT`` with the reason it stays; what a
+``KEPT`` def reaches is exempt with it. Every ``os.environ`` /
+``os.getenv`` read in ``movie_rec_spark/`` must name a variable in
+``ENV_SETTINGS``, so tuning knobs that nothing sets cannot grow back
+unnoticed.
 """
 
 from __future__ import annotations
@@ -63,11 +70,7 @@ def _py_files(root: Path):
         yield path
 
 
-def _public_defs(tree: ast.Module) -> list[ast.AST]:
-    return [n for n in tree.body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
-                              ast.ClassDef))
-            and not n.name.startswith("_")]
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _names_used(node: ast.AST) -> set[str]:
@@ -83,31 +86,54 @@ def _names_used(node: ast.AST) -> set[str]:
 
 
 @functools.cache
-def unreferenced() -> dict[str, str]:
-    """Public library defs no non-test file references, name -> module."""
-    trees = {p: ast.parse(p.read_text(), str(p)) for p in _py_files(ROOT)}
-    used: set[str] = set()
-    defined: dict[str, str] = {}
-    for path, tree in trees.items():
-        own = set()
-        if path.is_relative_to(PACKAGE) and not any(
-                path.is_relative_to(m) for m in EXEMPT_MODULES):
-            for d in _public_defs(tree):
-                defined[d.name] = str(path.relative_to(ROOT))
-                own.add(id(d))
+def _call_graph() -> tuple[frozenset, dict[str, set[str]], dict[str, str]]:
+    """(names the roots reference, names each package def references,
+    public package def -> module)."""
+    roots: set[str] = set()
+    refs: dict[str, set[str]] = {}
+    public: dict[str, str] = {}
+    for path in _py_files(ROOT):
+        tree = ast.parse(path.read_text(), str(path))
+        if not path.is_relative_to(PACKAGE):
+            roots |= _names_used(tree)
+            continue
+        exempt = any(path.is_relative_to(m) for m in EXEMPT_MODULES)
         for node in tree.body:
-            if id(node) in own:
-                # references from inside a def count for every other name
-                used |= _names_used(node) - {node.name}
-            else:
-                used |= _names_used(node)
-    return {n: m for n, m in defined.items() if n not in used}
+            if isinstance(node, DEFS):
+                refs.setdefault(node.name, set()).update(_names_used(node))
+                if not exempt and not node.name.startswith("_"):
+                    public[node.name] = str(path.relative_to(ROOT))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots |= _names_used(node)
+    return frozenset(roots), refs, public
+
+
+def reached(seeds) -> set[str]:
+    """Every name the ``seeds`` reach through the package's defs."""
+    _, refs, _ = _call_graph()
+    seen: set[str] = set()
+    todo = list(seeds)
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo.extend(refs.get(name, ()))
+    return seen
+
+
+@functools.cache
+def unreferenced() -> dict[str, str]:
+    """Public library defs no root reaches, name -> module."""
+    roots, _, public = _call_graph()
+    live = reached(roots)
+    return {n: m for n, m in public.items() if n not in live}
 
 
 def test_every_public_library_def_has_a_non_test_caller():
-    missing = {n: m for n, m in unreferenced().items() if n not in KEPT}
+    kept = reached(KEPT)
+    missing = {n: m for n, m in unreferenced().items() if n not in kept}
     assert not missing, (
-        "public defs reached from no non-test file (give them a caller, "
+        "public defs reached from no non-test root (give them a caller, "
         f"delete them, or list them in KEPT): {sorted(missing.items())}")
 
 

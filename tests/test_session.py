@@ -34,11 +34,15 @@ CHILD = textwrap.dedent("""
     import json, os, sys
     sys.path.insert(0, {repo!r})
     from movie_rec_spark.session import get_spark
+    from movie_rec_spark.sources.catalog import load_table
     sys.path.insert(0, {tests!r})
     from test_session import vm_option
     spark = get_spark("session-test", shuffle_partitions=1)
     sc = spark.sparkContext
+    load_table(spark, {sf!r}, "region")
     print(json.dumps({{
+        "pkg": [p for p in os.listdir(os.environ["TMPDIR"])
+                if p.startswith("mrs_pkg_")],
         "tmpdir": spark._jvm.java.lang.System.getProperty("java.io.tmpdir"),
         "invocation": vm_option(spark, "Tier4InvocationThreshold"),
         "compile": vm_option(spark, "Tier4CompileThreshold"),
@@ -51,7 +55,8 @@ CHILD = textwrap.dedent("""
 def test_caller_options_win_and_process_exits_clean(tmp_path):
     """One fresh JVM: the caller's --driver-java-options come after the
     library's, the task-thread default follows the CPUs this process
-    may use, and the checkpoint dir `get_spark` made is gone at exit."""
+    may use, and the checkpoint dir `get_spark` made and the package
+    zip dir `load_table` made are gone at exit."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     env = {k: v for k, v in os.environ.items()
@@ -64,7 +69,8 @@ def test_caller_options_win_and_process_exits_clean(tmp_path):
             f"'-Djava.io.tmpdir={tmp} -XX:Tier4InvocationThreshold=5000' "
             "pyspark-shell"),
     })
-    script = CHILD.format(repo=REPO, tests=os.path.join(REPO, "tests"))
+    script = CHILD.format(repo=REPO, tests=os.path.join(REPO, "tests"),
+                          sf="/root/testdata/sf0.001")
     out = subprocess.run([sys.executable, "-c", script], env=env,
                          capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
@@ -79,3 +85,5 @@ def test_caller_options_win_and_process_exits_clean(tmp_path):
     assert os.path.dirname(os.path.dirname(ckpt)) == str(tmp)
     assert not os.path.exists(os.path.dirname(ckpt))
     assert not any(p.name.startswith("mrs_ckpt_") for p in tmp.iterdir())
+    assert len(got["pkg"]) == 1
+    assert not any(p.name.startswith("mrs_pkg_") for p in tmp.iterdir())

@@ -1,22 +1,18 @@
 """Sessionization: batch session_window vs first-principles expectation,
-and the two streaming paths (declarative session_window + custom
-applyInPandasWithState) against the batch result."""
+and the streaming session_window path against the batch result."""
 
 from __future__ import annotations
 
 import datetime as dt
 import shutil
 
-from pyspark.sql import functions as F
-
 from movie_rec_spark.operators.temporal import q_sessionize
 from movie_rec_spark.sources.catalog import load_table
-from movie_rec_spark.streaming.sessions import (
-    session_windows_stream,
-    stateful_sessions,
-)
+from movie_rec_spark.streaming.sessions import session_windows_stream
 
 SF = "/root/testdata/sf0.001"
+EVENTS_DDL = ("event_id bigint, ts timestamp, user_id bigint, "
+              "event_type string, value double, props string")
 
 
 def _mk_events(spark, rows):
@@ -64,8 +60,7 @@ def _stage(spark, tmp_path, n_files=3):
 
 
 def _read_stream(spark, src):
-    from movie_rec_spark.streaming.counters import read_event_stream
-    return read_event_stream(spark, src)
+    return spark.readStream.schema(EVENTS_DDL).parquet(src)
 
 
 def test_streaming_session_window_subset_of_batch(spark, tmp_path):
@@ -91,24 +86,3 @@ def test_streaming_session_window_subset_of_batch(spark, tmp_path):
     assert set(got).issubset(set(want))
     assert all(got[k] == want[k] for k in got)
 
-
-def test_stateful_sessions_match_batch(spark, tmp_path):
-    src = _stage(spark, tmp_path)
-    q = (
-        stateful_sessions(_read_stream(spark, src))
-        .writeStream.outputMode("append")
-        .format("memory").queryName("t_sess_state")
-        .option("checkpointLocation", str(tmp_path / "ck_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.session_end):
-            (r.n_events, round(r.total_value, 2))
-        for r in spark.sql("SELECT * FROM t_sess_state").collect()
-    }
-    want = _batch_sessions(spark)
-    assert got, "no sessions emitted"
-    assert set(got).issubset(set(want))
-    assert all(got[k] == want[k] for k in got)

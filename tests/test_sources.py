@@ -110,80 +110,3 @@ def test_kv_roundtrip_with_batching(spark):
     got = {r.user_id: r.item_ids for r in decoded.collect()}
     assert got == {1: [11, 12], 2: [21, 22]}
 
-
-class _FakeJdbcReader:
-    """Captures the DataFrameReader option-chain; load() returns a marker."""
-
-    def __init__(self):
-        self.options: dict[str, str] = {}
-        self.fmt = None
-
-    def format(self, f):
-        self.fmt = f
-        return self
-
-    def option(self, k, v):
-        self.options[k] = v
-        return self
-
-    def load(self):
-        return ("loaded", self.fmt, dict(self.options))
-
-
-class _FakeJdbcWriter(_FakeJdbcReader):
-    def __init__(self):
-        super().__init__()
-        self.saved_mode = None
-
-    def mode(self, m):
-        self.saved_mode = m
-        return self
-
-    def save(self):
-        self.saved = True
-
-
-def test_read_jdbc_partitioned_option_contract(spark):
-    from movie_rec_spark.sources.jdbc import read_jdbc
-
-    fake = _FakeJdbcReader()
-    out = read_jdbc(
-        spark, "jdbc:postgresql://db/movies", "ratings",
-        user="u", driver="org.postgresql.Driver",
-        partition_column="id", lower_bound=1, upper_bound=1_000_000,
-        num_partitions=16, reader=fake)
-    marker, fmt, opts = out
-    assert marker == "loaded" and fmt == "jdbc"
-    assert opts["url"] == "jdbc:postgresql://db/movies"
-    assert opts["dbtable"] == "ratings"
-    assert opts["partitionColumn"] == "id"
-    assert (opts["lowerBound"], opts["upperBound"]) == ("1", "1000000")
-    assert opts["numPartitions"] == "16"
-
-
-def test_read_jdbc_unbounded_warns_and_bounds_require_all(spark):
-    import warnings
-
-    import pytest
-
-    from movie_rec_spark.sources.jdbc import read_jdbc
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        read_jdbc(spark, "jdbc:x", "t", reader=_FakeJdbcReader())
-    assert any("single-task scan" in str(x.message) for x in w)
-    with pytest.raises(ValueError, match="partition_column requires"):
-        read_jdbc(spark, "jdbc:x", "t", partition_column="id",
-                  reader=_FakeJdbcReader())
-
-
-def test_write_jdbc_chunked_option_contract(spark):
-    from movie_rec_spark.sources.jdbc import write_jdbc
-
-    df = spark.range(10)
-    fake = _FakeJdbcWriter()
-    write_jdbc(df, "jdbc:postgresql://db/movies", "ratings",
-               mode="overwrite", batchsize=500, writer=fake)
-    assert fake.saved and fake.saved_mode == "overwrite"
-    assert fake.options["batchsize"] == "500"
-    assert fake.options["isolationLevel"] == "READ_COMMITTED"

@@ -1,6 +1,6 @@
 """Spark SQL front door: the engine's tables register as views
-(`Catalog.register_views`) and ANSI-portable queries run through
-``spark.sql`` with results IDENTICAL to the DataFrame API.
+(``load_table(...).createOrReplaceTempView``) and ANSI-portable queries
+run through ``spark.sql`` with results IDENTICAL to the DataFrame API.
 
 The strongest form available for free: the DuckDB oracle strings from
 ``__spark_entry__.oracle_sql()`` are fed VERBATIM to Spark SQL. The
@@ -79,8 +79,9 @@ PORTABLE = sorted([
 def entry(spark):
     import __spark_entry__ as E  # the checkout root is on sys.path (conftest)
 
-    from movie_rec_spark.sources.catalog import Catalog
-    Catalog(spark, SF).register_views()
+    from movie_rec_spark.sources.catalog import TABLES, load_table
+    for name in TABLES:
+        load_table(spark, SF, name).createOrReplaceTempView(name)
     return E
 
 

@@ -5,15 +5,11 @@ from __future__ import annotations
 
 import shutil
 
-from movie_rec_spark.operators.relational import q_event_counters
 from movie_rec_spark.sources.catalog import load_table
-from movie_rec_spark.streaming import (
-    read_event_stream,
-    run_counters_batchwise,
-    windowed_counters,
-)
 
 SF = "/root/testdata/sf0.001"
+EVENTS_DDL = ("event_id bigint, ts timestamp, user_id bigint, "
+              "event_type string, value double, props string")
 
 
 def _stage_events(spark, tmp_path, n_files=3):
@@ -26,53 +22,6 @@ def _stage_events(spark, tmp_path, n_files=3):
     return src
 
 
-def test_streaming_counters_equal_batch(spark, tmp_path):
-    src = _stage_events(spark, tmp_path)
-    run_counters_batchwise(
-        spark, src, str(tmp_path / "ckpt"), sink_table="t_counters")
-    got = {
-        (r.user_id): (r.n_events, round(r.total_value, 2))
-        for r in spark.sql("SELECT * FROM t_counters").collect()
-    }
-    want = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in q_event_counters(load_table(spark, SF, "events")).collect()
-    }
-    assert got == want
-
-
-def test_windowed_counters_with_watermark(spark, tmp_path):
-    src = _stage_events(spark, tmp_path)
-    q = (
-        windowed_counters(read_event_stream(spark, src))
-        .writeStream.outputMode("append")
-        .format("memory").queryName("t_windowed")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM t_windowed").collect()
-    # append mode emits only watermark-closed windows; with availableNow
-    # the final watermark closes all but the last window(s).
-    assert rows, "no closed windows emitted"
-    assert all(r.n_events > 0 for r in rows)
-
-
-def test_foreach_batch_applies(spark, tmp_path):
-    from movie_rec_spark.streaming.counters import run_with_foreach_batch
-
-    src = _stage_events(spark, tmp_path)
-    out_dir = str(tmp_path / "gold")
-
-    def apply_fn(df, batch_id):
-        df.groupBy("event_type").count().write.mode("overwrite").parquet(out_dir)
-
-    run_with_foreach_batch(spark, src, str(tmp_path / "ckpt3"), apply_fn)
-    gold = spark.read.parquet(out_dir)
-    assert gold.count() == 5  # five event types
-
-
 def test_stream_stream_join_equals_batch_range_join(spark, tmp_path):
     from movie_rec_spark.operators.temporal import q_range_join
     from movie_rec_spark.streaming.joins import (
@@ -81,7 +30,8 @@ def test_stream_stream_join_equals_batch_range_join(spark, tmp_path):
     )
 
     src = _stage_events(spark, tmp_path)
-    views, purchases = split_typed_streams(read_event_stream(spark, src))
+    views, purchases = split_typed_streams(
+        spark.readStream.schema(EVENTS_DDL).parquet(src))
     q = (
         attribution_join(views, purchases)
         .writeStream.outputMode("append")
@@ -105,109 +55,12 @@ def test_stream_stream_join_equals_batch_range_join(spark, tmp_path):
     assert got, "no attributed views in test data"
 
 
-def test_cdc_counters_retract_deletes_to_batch_recount(spark, tmp_path):
-    """M4 DECR path: adds then delete-tombstones; final counter state
-    must equal a batch recount over the surviving events."""
-    from pyspark.sql import functions as F
-
-    from movie_rec_spark.streaming import event_counters_cdc, read_cdc_stream
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "cdc_src")
-    # batch 1: every event as an insert
-    ev.withColumn("op", F.lit(1).cast("long")) \
-        .repartition(2).write.mode("overwrite").parquet(src)
-    # batch 2: tombstones retracting every 'error' event
-    ev.filter(F.col("event_type") == "error") \
-        .withColumn("op", F.lit(-1).cast("long")) \
-        .repartition(1).write.mode("append").parquet(src)
-    q = (
-        event_counters_cdc(read_cdc_stream(spark, src))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("t_cdc")
-        .option("checkpointLocation", str(tmp_path / "ck_cdc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: (r.n_events, round(r.total_value or 0.0, 2))
-        for r in spark.sql("SELECT * FROM t_cdc").collect()
-        if r.n_events != 0  # fully-deleted user == absent from recount
-    }
-    survivors = ev.filter(F.col("event_type") != "error")
-    want = {
-        r.user_id: (r.n_events, round(r.total_value, 2))
-        for r in q_event_counters(survivors).collect()
-    }
-    assert got == want
-    # sanity: the tombstones actually changed somebody's counter
-    assert ev.filter(F.col("event_type") == "error").count() > 0
-
-
-def test_streaming_anomaly_matches_batch_kernel(spark, tmp_path):
-    """Batch/stream parity for the anomaly detector: the stateful
-    online scorer over in-order micro-batches produces the SAME
-    per-event (n_win, zscore, is_anomaly) as batch q_anomaly on the
-    union of the batches — including the spike flag, cold-start NULLs,
-    and zero-variance NULLs — with the window state carried ACROSS the
-    batch boundary."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from movie_rec_spark.operators.temporal import q_anomaly
-    from movie_rec_spark.streaming.anomaly import anomaly_stream
-
-    def rows(recs):
-        return [(eid, u, dt.datetime(2024, 1, d, 12, 0, 0), v)
-                for eid, u, d, v in recs]
-
-    schema = "event_id bigint, user_id bigint, ts timestamp, value double"
-    batch1 = rows([
-        (0, 1, 1, 1.0), (1, 1, 2, 1.2), (2, 1, 3, 0.8), (3, 1, 4, 1.1),
-        (10, 3, 1, 5.0), (11, 3, 2, 5.0), (12, 3, 3, 5.0),
-    ])
-    batch2 = rows([
-        (4, 1, 5, 0.9), (5, 1, 6, 100.0),        # spike in batch 2:
-        # its 5-point baseline spans BOTH batches (state carry-over)
-        (13, 3, 4, 5.0), (14, 3, 5, 5.0), (15, 3, 6, 5.0),
-    ])
-    src = str(tmp_path / "an_src")
-    spark.createDataFrame(batch1, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    spark.createDataFrame(batch2, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (anomaly_stream(stream)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("t_anom")
-         .option("checkpointLocation", str(tmp_path / "an_ck"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    got = {r.event_id: (r.n_win, r.zscore, r.is_anomaly)
-           for r in spark.sql("SELECT * FROM t_anom").collect()}
-
-    batch_df = spark.createDataFrame(batch1 + batch2, schema)
-    want = {r.event_id: (r.n_win, r.zscore, r.is_anomaly)
-            for r in q_anomaly(batch_df).collect()}
-    assert got == want, {k: (got.get(k), want.get(k))
-                         for k in set(got) | set(want)
-                         if got.get(k) != want.get(k)}
-    assert got[5][2] is True            # the spike flags
-    assert all(got[e][1] is None for e in (10, 11, 12, 13, 14, 15))
-
-
 def test_streaming_anomaly_eventtime_tolerates_out_of_order(spark, tmp_path):
-    """The watermarked variant: a LATE event (day 3 arriving after
+    """The watermarked scorer: a LATE event (day 3 arriving after
     days 4-6 were seen) still lands in its correct event-time position
-    — per-event output equals batch q_anomaly on the union, which the
-    immediate-scoring variant cannot promise under this arrival order.
-    A far-future sentinel advances the global watermark so every real
-    event flushes."""
+    — per-event output equals batch q_anomaly on the union. A far-future
+    sentinel advances the global watermark so every real event
+    flushes."""
     import datetime as dt
 
     from movie_rec_spark.operators.temporal import q_anomaly
@@ -256,11 +109,12 @@ def test_stateful_anomaly_runs_on_rocksdb_state_store(spark, tmp_path):
     local disk with incremental checkpointing — the default any
     large-state production stream should run. The stateful scorer must
     produce IDENTICAL output under it; pinned here so the kernels never
-    grow a heap-provider dependency."""
+    grow a heap-provider dependency. A far-future sentinel file
+    advances the watermark so every parked event scores."""
     import datetime as dt
 
     from movie_rec_spark.operators.temporal import q_anomaly
-    from movie_rec_spark.streaming.anomaly import anomaly_stream
+    from movie_rec_spark.streaming.anomaly import anomaly_stream_eventtime
 
     key = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(key)
@@ -273,11 +127,15 @@ def test_stateful_anomaly_runs_on_rocksdb_state_store(spark, tmp_path):
         rows = [(i, 1, dt.datetime(2024, 1, 1 + i, 12, 0, 0),
                  100.0 if i == 5 else 1.0 + (i % 3) * 0.1)
                 for i in range(7)]
+        sentinel = [(99, 9, dt.datetime(2024, 1, 30, 12, 0, 0), 0.0)]
         src = str(tmp_path / "rdb_src")
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(src)
-        q = (anomaly_stream(
-                spark.readStream.schema(schema).parquet(src))
+        for b in (rows, sentinel):
+            spark.createDataFrame(b, schema).coalesce(1) \
+                .write.mode("append").parquet(src)
+        q = (anomaly_stream_eventtime(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1").parquet(src),
+                watermark="1 day")
              .writeStream.outputMode("append")
              .format("memory").queryName("t_rocks")
              .option("checkpointLocation", str(tmp_path / "rdb_ck"))
@@ -285,7 +143,8 @@ def test_stateful_anomaly_runs_on_rocksdb_state_store(spark, tmp_path):
              .start())
         q.awaitTermination()
         got = {r.event_id: (r.n_win, r.zscore, r.is_anomaly)
-               for r in spark.sql("SELECT * FROM t_rocks").collect()}
+               for r in spark.sql(
+                   "SELECT * FROM t_rocks WHERE user_id != 9").collect()}
         want = {r.event_id: (r.n_win, r.zscore, r.is_anomaly)
                 for r in q_anomaly(
                     spark.createDataFrame(rows, schema)).collect()}
