@@ -1,13 +1,17 @@
-"""The library's one memo, for parquet schemas and row counts, the
-persisted IVF and SemDeDup fits, and serving's held answers and
-per-user indexes. A key is the source's fingerprint plus a params
+"""The library's one memo, for the catalog's table frames and row
+counts, the persisted IVF and SemDeDup fits, and serving's held answers
+and per-user indexes. A key is the source's fingerprint plus a params
 tuple naming the call site. A table path is fingerprinted by each
 file's local (path, size, mtime_ns), so a table rewritten in place is
 read afresh.
 A DataFrame with input files is keyed by those files plus its plan's
 ``semanticHash()``, and a hit must also pass ``sameSemantics`` against
-the stored source, so a transformed frame over the same files never
-gets another frame's value. A DataFrame with no input files is keyed
+the stored source (skipped when it is the stored object), so a
+transformed frame over the same files never gets another frame's
+value. Both are fixed when the frame is built, so the (files, hash)
+pair is computed over Py4J once per frame object and kept in its
+``__dict__``: a later lookup with the same object costs an ``os.stat``
+per file. A DataFrame with no input files is keyed
 by ``id()`` and pinned by its entry. A tuple of sources is keyed by
 each in turn. At most ``MAX_ENTRIES`` entries are kept, holding at
 most ``MAX_BYTES`` of driver memory in Arrow tables and numpy arrays
@@ -54,10 +58,15 @@ def _fingerprint(source) -> tuple:
         return tuple(_fingerprint(s) for s in source)
     plan = ()
     if isinstance(source, DataFrame):
-        files = [unquote(urlparse(u).path) for u in source.inputFiles()]
+        # __dict__: DataFrame.__getattr__ resolves column names over Py4J
+        known = source.__dict__.get("_memo_files_plan")
+        if known is None:
+            files = [unquote(urlparse(u).path) for u in source.inputFiles()]
+            known = (files, (source.semanticHash(),) if files else ())
+            source.__dict__["_memo_files_plan"] = known
+        files, plan = known
         if not files:
             return ("obj", id(source))
-        plan = (source.semanticHash(),)
     else:
         # an empty table directory is keyed by the directory itself
         files = part_files(source) or [source]

@@ -41,15 +41,6 @@ def scan_read_columns(df: DataFrame) -> list[set[str]]:
     return out
 
 
-def partition_filters(df: DataFrame) -> list[str]:
-    """The PartitionFilters lists of each file scan — non-empty entries
-    mean the scan prunes whole partition directories (the at-rest
-    index/pruning contract)."""
-    plan = physical_plan(df)
-    return [m.group(1).strip()
-            for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", plan)]
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 

@@ -86,22 +86,26 @@ def _ship_package(spark: SparkSession) -> None:
     sc._movie_rec_spark_shipped = True
 
 
-def _read_schema(spark: SparkSession, path: str):
-    """(analyzed Spark schema, TIMESTAMP(NANOS) columns) of a table;
-    the ns columns come from the first part file's footer (parquet
-    tables are schema-uniform by contract)."""
+def _read_table(spark: SparkSession, path: str):
+    """(frame, TIMESTAMP(NANOS) columns) of a table; the ns columns come
+    from the first part file's footer (parquet tables are schema-uniform
+    by contract)."""
     parts = memo.part_files(path)
     ts_cols = tuple(
         f.name for f in (pq.read_schema(parts[0]) if parts else ())
         if str(f.type).startswith("timestamp[ns"))
     if ts_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema, ts_cols
+    df = spark.read.parquet(path)
+    for c in ts_cols:
+        df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+    return df, ts_cols
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Column pruning / predicate pushdown happen at the
-    caller's ``select``/``filter`` — never pre-collect or cache here.
+    caller's ``select``/``filter``; the frame is a plan, never
+    pre-collected, cached or checkpointed here.
 
     The driver-generated parquet stores timestamps at nanosecond
     precision; Spark's reader rejects TIMESTAMP(NANOS), so those columns
@@ -109,20 +113,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     floor-truncated to microseconds (``ts div 1000`` — integer division;
     a double division would lose precision at 1e18 ns). DuckDB performs
     the same floor-truncation when reading ns parquet, so values match.
+    That setting is session conf, so every call sets it.
 
-    The analyzed schema is memoized per table fingerprint (``memo``),
-    so a rewritten table is re-inferred; a schema-supplied read skips
-    the ~80 ms footer-inference pass of ``spark.read.parquet``.
+    One frame is held per table fingerprint and ``SparkSession``
+    (``memo``) and handed to every call. It holds a plan, no data. A
+    warm call costs an ``os.stat`` per file instead of the listing and
+    analysis of ``spark.read.parquet`` (7-8 ms a table on a warm
+    session, about 65 ms with the schema inference of a first read),
+    and ``memo`` keys the frame without Py4J. Spark fixes a frame's
+    file listing when it builds the frame, so a table rewritten in place
+    gets a new frame. A frame of another session is never handed out.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ship_package(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema, ts_cols = memo.lookup(path, ("schema",),
-                                  lambda: _read_schema(spark, path))
+    # the held frame pins its session, so id(spark) is not reused
+    df, ts_cols = memo.lookup(path, ("frame", id(spark)),
+                              lambda: _read_table(spark, path))
     if ts_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.schema(schema).parquet(path)
-    for c in ts_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df

@@ -149,6 +149,27 @@ def test_transformed_frame_over_the_same_files_gets_its_own_value(spark):
     memo.clear()
 
 
+def test_known_frame_is_keyed_without_py4j(spark, table, monkeypatch):
+    df = spark.read.parquet(table)
+    assert memo.lookup(df, ("v",), lambda: 1) == 1
+    calls = []
+    for name in ("inputFiles", "semanticHash", "sameSemantics"):
+        real = getattr(type(df), name)
+        monkeypatch.setattr(type(df), name,
+                            lambda self, *a, real=real, name=name:
+                            calls.append(name) or real(self, *a))
+    assert memo.lookup(df, ("v",), lambda: 2) == 1
+    assert memo.lookup(df, ("w",), lambda: 3) == 3
+    assert calls == []
+    # a frame derived from it is fingerprinted afresh
+    assert memo.lookup(df.filter("a > 1"), ("v",), lambda: 4) == 4
+    assert calls == ["inputFiles", "semanticHash"]
+    # the remembered files are still stat'ed: a rewrite changes the key
+    pq.write_table(pa.table({"a": [1, 2, 3]}), table)
+    assert memo.lookup(df, ("v",), lambda: 5) == 5
+    assert calls == ["inputFiles", "semanticHash"]
+
+
 def test_hash_collision_is_rebuilt_not_served(spark, table, monkeypatch):
     a = spark.read.parquet(table)
     b = a.filter("a > 1")

@@ -1,11 +1,16 @@
-"""CSV source + KV value-encoding tests (SURVEY.md §2.1 S1-S3, S9-S11)."""
+"""CSV source, catalog table and KV value-encoding tests (SURVEY.md §2.1
+S1-S3, S9-S11)."""
 
 from __future__ import annotations
+
+import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
+from pyspark.sql.readwriter import DataFrameReader
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -13,6 +18,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from movie_rec_spark import memo
 from movie_rec_spark.sources import csv as C
 from movie_rec_spark.sources import kv as KV
 from movie_rec_spark.sources.catalog import load_table, table_rows
@@ -95,6 +101,84 @@ def test_table_rewritten_in_place_is_read_afresh(spark, tmp_path, case):
     else:
         assert df.columns == list(new)
         assert sorted(r.r_comment for r in df.collect()) == ["a", "b", "c"]
+
+
+@pytest.fixture
+def region(spark, tmp_path, monkeypatch):
+    """(sf_dir, path, parquet reads) over a fresh two-row ``region``."""
+    sf_dir, path = str(tmp_path), str(tmp_path / "region.parquet")
+    os.makedirs(path)
+    pq.write_table(pa.table({"r_regionkey": [0, 1],
+                             "r_comment": pa.array(NS[:2], pa.timestamp("ns"))}),
+                   f"{path}/part-0.parquet")
+    reads = []
+    real = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        lambda self, *p, **kw: reads.append(p)
+                        or real(self, *p, **kw))
+    memo.clear()
+    yield sf_dir, path, reads
+    memo.clear()
+
+
+def _micros(df):
+    return [r[0] for r in df.orderBy("r_regionkey").selectExpr(
+        "unix_micros(r_comment)").collect()]
+
+
+def test_unchanged_table_is_one_held_frame(spark, region):
+    sf_dir, path, reads = region
+    first = load_table(spark, sf_dir, "region")
+    assert reads == [(path,)]
+    assert load_table(spark, sf_dir, "region") is first
+    assert reads == [(path,)]
+    assert _micros(first) == [n // 1000 for n in NS[:2]]
+
+
+def test_rewritten_table_gets_a_new_frame_over_its_new_files(spark, region):
+    sf_dir, path, reads = region
+    first = load_table(spark, sf_dir, "region")
+    old_files = set(first.inputFiles())
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2],
+                             "r_comment": pa.array(NS, pa.timestamp("ns"))}),
+                   f"{path}/part-1.parquet")
+    again = load_table(spark, sf_dir, "region")
+    assert again is not first and len(reads) == 2
+    assert set(again.inputFiles()) > old_files
+    assert again.count() == 5
+    # the frame handed out before keeps its own listing
+    assert first.count() == 2
+    assert load_table(spark, sf_dir, "region") is again
+
+
+def test_other_session_gets_its_own_frame(spark, region):
+    sf_dir, _, _ = region
+    mine = load_table(spark, sf_dir, "region")
+    other = spark.newSession()
+    theirs = load_table(other, sf_dir, "region")
+    assert theirs is not mine
+    assert theirs.sparkSession is other and mine.sparkSession is spark
+    # nanosAsLong is session conf: the new session reads the ns column
+    assert _micros(theirs) == [n // 1000 for n in NS[:2]]
+    assert load_table(other, sf_dir, "region") is theirs
+
+
+def test_concurrent_first_loads_share_one_frame(spark, region):
+    sf_dir, _, _ = region
+    with ThreadPoolExecutor(8) as pool:
+        frames = list(pool.map(lambda _: load_table(spark, sf_dir, "region"),
+                               range(16), timeout=120))
+    assert all(f is frames[0] for f in frames)
+    assert load_table(spark, sf_dir, "region") is frames[0]
+
+
+def test_memo_clear_drops_held_frames(spark, region):
+    sf_dir, _, reads = region
+    first = load_table(spark, sf_dir, "region")
+    memo.clear()
+    assert not memo._entries
+    assert load_table(spark, sf_dir, "region") is not first
+    assert len(reads) == 2
 
 
 def test_kv_roundtrip_with_batching(spark):
