@@ -451,12 +451,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle chains the stage oracles as CTEs, so the hash match
         # certifies every inter-stage handoff
         # r12: + near-dedup stage (greedy smaller-partner simhash over
-        # the scrubbed text, oracle CTEs chained in) and the durable
-        # stage_dir= staging mode; declared at the pinned 56/14 nd
-        # width (the oracle's form — n_docs= is the at-scale sizing
-        # knob, measured in SCALE.md §Round 12)
+        # the scrubbed text, oracle CTEs chained in). The footer row
+        # count sizes the nd width like q_dedup_simhash: below the
+        # sizer's 2^14-doc floor it is the oracle's 56/14 form, above
+        # it chance candidates stay linear (SCALE.md §Round 12)
         "q_pipeline_llm": lambda s, d: T.q_pipeline_llm(
-            _t("documents")(s, d)),
+            _t("documents")(s, d), n_docs=table_rows(d, "documents")),
         "q_unigram_logprob": lambda s, d: T.q_unigram_logprob(
             _t("documents")(s, d)),
         "q_bigram_logprob": lambda s, d: T.q_bigram_logprob(

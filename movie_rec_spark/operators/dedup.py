@@ -589,10 +589,6 @@ CC_ROUNDS: dict[str, int] = {}
 CC_LOCAL_EDGE_CAP = 2_000_000
 
 
-def _cc_effective_cap(local_edge_cap: int | None) -> int:
-    return CC_LOCAL_EDGE_CAP if local_edge_cap is None else local_edge_cap
-
-
 def _cc_local_labels(edges: DataFrame, a: str, b: str) -> DataFrame | None:
     """Single-task connected components for edge sets under the local
     cap: min-label propagation with pointer jumping, vectorized in
@@ -648,8 +644,7 @@ def _cc_local_labels(edges: DataFrame, a: str, b: str) -> DataFrame | None:
             .mapInPandas(comp_fn, out_schema))
 
 
-def dedup_components(pairs: DataFrame, max_iter: int = 20,
-                     local_edge_cap: int | None = None) -> DataFrame:
+def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs — the step that turns
     pairwise matches into dedup GROUPS (keep one canonical doc per
     component). Iterative min-label propagation: every node repeatedly
@@ -678,8 +673,7 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20,
     # CC): count the checkpointed edges — one cheap job over blocks the
     # iteration would materialize anyway — and label small graphs in a
     # single vectorized task. CC_ROUNDS = 0 marks the local path.
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and edges.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and edges.count() <= CC_LOCAL_EDGE_CAP:
         local = _cc_local_labels(edges, "doc_a", "doc_b")
         if local is not None:
             CC_ROUNDS["minlabel"] = 0
@@ -787,8 +781,7 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20,
     return labels
 
 
-def dedup_components_star(pairs: DataFrame, max_iter: int = 30,
-                          local_edge_cap: int | None = None) -> DataFrame:
+def dedup_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components by alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the O(log n)-round alternative to ``dedup_components``' min-label
@@ -811,8 +804,7 @@ def dedup_components_star(pairs: DataFrame, max_iter: int = 30,
         .localCheckpoint(eager=True)
     # Same size-adaptive route as dedup_components: small graphs label
     # in one vectorized task (identical fixpoint), large graphs iterate.
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and edges.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and edges.count() <= CC_LOCAL_EDGE_CAP:
         local = _cc_local_labels(edges, "u", "v")
         if local is not None:
             CC_ROUNDS["star"] = 0
@@ -1102,6 +1094,8 @@ def pagerank(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
              .union(edges.select(F.col("doc_b"))).distinct()
              .localCheckpoint(eager=False))
     n = nodes.count()
+    if n == 0:  # no edges: nothing to rank (the SQL oracle agrees)
+        return nodes.withColumn("rank", F.lit(0.0))
     base = (1.0 - damping) / n
     outdeg = edges.groupBy("doc_a").agg(F.count(F.lit(1)).alias("outdeg"))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
@@ -1224,6 +1218,8 @@ def pagerank_exact(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
              .union(edges.select(F.col("doc_b"))).distinct()
              .localCheckpoint(eager=False))
     n = nodes.count()
+    if n == 0:  # no edges: nothing to rank (the SQL oracle agrees)
+        return nodes.withColumn("r", F.lit(0).cast("long"))
     if 17 * n * lcm_out * scale >= 2 ** 63:
         raise ValueError(
             f"pagerank_exact int64 budget exceeded: 17·N·lcm_out·scale"
@@ -1374,8 +1370,7 @@ def q_fuzzy_match(part: DataFrame,
 KHOP_K = 3   # neighborhood radius
 
 
-def khop_counts(edges: DataFrame, k: int = KHOP_K,
-                local_edge_cap: int | None = None) -> DataFrame:
+def khop_counts(edges: DataFrame, k: int = KHOP_K) -> DataFrame:
     """Exact ≤k-hop reachability counts per source node — the
     neighborhood-size feature (influence radius, crawl frontier
     sizing, graph embedding context windows) on a directed graph
@@ -1404,10 +1399,10 @@ def khop_counts(edges: DataFrame, k: int = KHOP_K,
     # is the same set either way). Large graphs take the unchanged
     # iterative path.
     ecp = edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and all(ecp.schema[c].dataType.simpleString() == "bigint"
-                   for c in ("doc_a", "doc_b")) and \
-            ecp.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and all(
+            ecp.schema[c].dataType.simpleString() == "bigint"
+            for c in ("doc_a", "doc_b")) and \
+            ecp.count() <= CC_LOCAL_EDGE_CAP:
         def khop_fn(batches):
             import pandas as pd
 
@@ -1488,8 +1483,7 @@ def triangle_edges(documents: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame,
-                   local_edge_cap: int | None = None) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle support (how many triangles each node sits
     in) via DEGREE-ORDERED edge orientation — the standard
     at-scale algorithm (Suri & Vassilvitskii's MapReduce formulation;
@@ -1525,9 +1519,9 @@ def triangle_count(edges: DataFrame,
     # int64 like the JVM, and triangle support is an exact integer, so
     # the per-node counts are identical by uniqueness of the triangle
     # set). Large graphs take the unchanged distributed joins.
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and all(e.schema[c].dataType.simpleString() == "bigint"
-                   for c in ("a", "b")) and e.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and all(
+            e.schema[c].dataType.simpleString() == "bigint"
+            for c in ("a", "b")) and e.count() <= CC_LOCAL_EDGE_CAP:
         def tri_fn(batches):
             import numpy as np
             import pandas as pd
@@ -1678,8 +1672,7 @@ KCORE_K = 5  # keeps the clique blocks of core_edges, peels the paths
 
 
 def kcore(edges: DataFrame, k: int = KCORE_K,
-          max_rounds: int = 100,
-          local_edge_cap: int | None = None) -> DataFrame:
+          max_rounds: int = 100) -> DataFrame:
     """k-core decomposition by ITERATIVE PEELING (Matula–Beck): drop
     every node with degree < k, recompute degrees on the induced
     subgraph, repeat until stable. The surviving subgraph is the
@@ -1719,8 +1712,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K,
     # in-core degrees are identical. Counting the already-materialized
     # checkpoint is one cheap job; large graphs take the unchanged
     # iterative rounds.
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and e.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and e.count() <= CC_LOCAL_EDGE_CAP:
         def peel_fn(batches):
             import numpy as np
             import pandas as pd
@@ -1842,8 +1834,7 @@ LABELPROP_ITERS = 4  # fixed synchronous rounds (deterministic cut)
 
 
 def label_propagation(edges: DataFrame,
-                      iters: int = LABELPROP_ITERS,
-                      local_edge_cap: int | None = None) -> DataFrame:
+                      iters: int = LABELPROP_ITERS) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan
     et al. 2007) with a deterministic tie rule: each round, every node
     adopts the most frequent label among its NEIGHBORS, ties broken by
@@ -1869,8 +1860,7 @@ def label_propagation(edges: DataFrame,
     # pure function of the edge set, so the vectorized single-task
     # kernel below computes the identical label assignment; large
     # graphs run the unchanged per-round joins/aggs.
-    cap = _cc_effective_cap(local_edge_cap)
-    if cap and sym.count() <= cap:
+    if CC_LOCAL_EDGE_CAP and sym.count() <= CC_LOCAL_EDGE_CAP:
         n_iters = iters
 
         def lpa_fn(batches):

@@ -1197,9 +1197,7 @@ def q_pipeline_media(documents: DataFrame,
                      hamming_max: int = PHASH_HMAX,
                      audio_hmax: int = AFP_HMAX,
                      n_docs: int | None = None,
-                     n_shards: int = MEDIA_SHARDS,
-                     stage_dir: str | None = None,
-                     resume: bool = False) -> DataFrame:
+                     n_shards: int = MEDIA_SHARDS) -> DataFrame:
     """Declared query (r12): the COMPOSED multimodal curation
     pipeline — q_pipeline_llm's sibling for the codec families. Every
     stage is an already-declared operator, chained as ONE lazy plan,
@@ -1247,43 +1245,27 @@ def q_pipeline_media(documents: DataFrame,
     widths — ``image_sized_grid`` for the dHash grid and
     ``audio_sized_frames`` for the fingerprint window; the declared
     56-bit forms below the 16k-doc floors); video — the heaviest
-    per-doc stage — sees only survivors. Multiply-referenced handoffs (each pair set feeds
-    its hamming agg + the drop union; kept feeds video, layout, and
-    the output joins) are cut via ``stage_dir`` parquet staging
-    (durable, resumable) or ``localCheckpoint`` (test-scale default)
-    — the q_pipeline_llm staging contract, same trade documented
-    there.
+    per-doc stage — sees only survivors. Multiply-referenced handoffs
+    (each pair set feeds its hamming agg + the drop union; kept feeds
+    video, layout, and the output joins) are cut with
+    ``localCheckpoint(eager=False)``, the same trade q_pipeline_llm
+    documents.
 
     Reference analogue: prepare_dataset.py:88-160 chains clean →
     transform → load for ratings; this is that composition for the
     multimodal corpus."""
     from movie_rec_spark.functions import stable_bucket
-    from movie_rec_spark.operators.staging import make_stage
 
-    # ``resume=True`` (staged mode only) restarts a failed composed
-    # run from its last completed stage — operators/staging.py has
-    # the fingerprint/stale-marker contract.
-    # n_shards is omitted from the fingerprint: it shapes only the
-    # final (never-staged) layout, so a resume may legitimately
-    # re-shard the same staged survivor set
-    _stage = make_stage(stage_dir, resume=resume,
-                        params={"pipeline": "media",
-                                "hamming_max": hamming_max,
-                                "audio_hmax": audio_hmax,
-                                "n_docs": n_docs})
-
-    ip = _stage(q_image_neardup(documents, hamming_max,
-                                n_docs=n_docs, sort=False),
-                "image_pairs")
-    ap = _stage(q_audio_neardup(documents, audio_hmax,
-                                n_docs=n_docs, sort=False),
-                "audio_pairs")
+    ip = q_image_neardup(documents, hamming_max, n_docs=n_docs,
+                         sort=False).localCheckpoint(eager=False)
+    ap = q_audio_neardup(documents, audio_hmax, n_docs=n_docs,
+                         sort=False).localCheckpoint(eager=False)
     dropped = (ip.select(F.col("doc_b").alias("doc_id"))
                .union(ap.select(F.col("doc_b").alias("doc_id")))
                .distinct())
-    kept = _stage(
-        documents.select("doc_id").join(dropped, "doc_id", "left_anti"),
-        "kept")
+    kept = (documents.select("doc_id")
+            .join(dropped, "doc_id", "left_anti")
+            .localCheckpoint(eager=False))
     img = ip.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.sum("hamming").cast("int").alias("img_ham"))
     aud = ap.groupBy(F.col("doc_a").alias("doc_id")).agg(

@@ -1542,7 +1542,6 @@ def _pq_local_kernel(pts_ck: DataFrame, seed_ids: list[int],
 
 def _pq_train_encode(pts: DataFrame, seeds: DataFrame, iters: int,
                      n_pts: int | None = None,
-                     local_point_cap: int | None = None,
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(codebook, codes, points) with a size-adaptive route: point
     sets ≤ the local cap (``n_pts`` is the caller's cheap row-count
@@ -1552,9 +1551,8 @@ def _pq_train_encode(pts: DataFrame, seeds: DataFrame, iters: int,
     distributed rounds, so the 100 TB shape is untouched. The returned
     points frame is the materialized checkpoint on the local route —
     callers reuse it so the explode subtree runs once."""
-    cap = (PQ_LOCAL_POINT_CAP if local_point_cap is None
-           else local_point_cap)
-    if cap and n_pts is not None and n_pts <= cap:
+    if PQ_LOCAL_POINT_CAP and n_pts is not None \
+            and n_pts <= PQ_LOCAL_POINT_CAP:
         pts_ck = pts.localCheckpoint(eager=True)
         seed_ids = [r[0] for r in seeds.collect()]   # bounded: k rows
         both = _pq_local_kernel(pts_ck, seed_ids, iters) \

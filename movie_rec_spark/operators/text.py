@@ -1261,8 +1261,7 @@ BPE_ROUNDS = 6  # unrolled merge rounds (the oracle unrolls the same 6)
 
 
 def q_bpe_merges(documents: DataFrame,
-                 rounds: int = BPE_ROUNDS,
-                 local_word_cap: int | None = None) -> DataFrame:
+                 rounds: int = BPE_ROUNDS) -> DataFrame:
     """BPE merge induction — the core step of tokenizer TRAINING
     (Sennrich et al. 2016): repeatedly find the most frequent adjacent
     symbol pair in the corpus and fuse it into a new symbol. Output:
@@ -1278,7 +1277,7 @@ def q_bpe_merges(documents: DataFrame,
     convergence-scalar discipline), and one row-local string replace
     applying the merge. Rounds eager-checkpoint so plans stay flat.
     Size-adaptive (r12, the CC_LOCAL_EDGE_CAP doctrine): dicts under
-    ``local_word_cap`` (default BPE_LOCAL_WORD_CAP; 0 disables) run
+    BPE_LOCAL_WORD_CAP distinct words (0 disables the route) run
     the whole induction in ONE single-task pass over the materialized
     dict — identical argmax/replace semantics (see ``_bpe_local``) —
     instead of ``rounds`` driver-synchronized job batches; larger
@@ -1300,8 +1299,7 @@ def q_bpe_merges(documents: DataFrame,
     q_token_counts / q_vocab_coverage / q_unigram_logprob.
     """
     cur = _bpe_word_dict(documents)
-    cap = _bpe_effective_cap(local_word_cap)
-    if cap and cur.count() <= cap:
+    if BPE_LOCAL_WORD_CAP and cur.count() <= BPE_LOCAL_WORD_CAP:
         return _bpe_local(cur, rounds, emit="merges")
     merges, _ = _bpe_train_iter(cur, rounds)
     schema = ("merge_round int, left_sym string, right_sym string, "
@@ -1321,10 +1319,6 @@ def q_bpe_merges(documents: DataFrame,
 # the dict. A corpus whose SPLIT dict exceeds the cap takes the
 # unchanged distributed loop.
 BPE_LOCAL_WORD_CAP = 2_000_000
-
-
-def _bpe_effective_cap(local_word_cap: int | None) -> int:
-    return BPE_LOCAL_WORD_CAP if local_word_cap is None else local_word_cap
 
 
 def _bpe_word_dict(documents: DataFrame) -> DataFrame:
@@ -1446,8 +1440,7 @@ def _bpe_train_iter(cur: DataFrame,
 
 
 def q_bpe_encode(documents: DataFrame,
-                 rounds: int = BPE_ROUNDS,
-                 local_word_cap: int | None = None) -> DataFrame:
+                 rounds: int = BPE_ROUNDS) -> DataFrame:
     """The ENCODE half of the tokenizer story: the vocabulary after
     applying the learned merges — each distinct word with its corpus
     frequency, its post-merge segmentation, and its token count before
@@ -1463,8 +1456,7 @@ def q_bpe_encode(documents: DataFrame,
     row-local, whole-stage codegen, no Python.
     """
     cur = _bpe_word_dict(documents)
-    cap = _bpe_effective_cap(local_word_cap)
-    if cap and cur.count() <= cap:
+    if BPE_LOCAL_WORD_CAP and cur.count() <= BPE_LOCAL_WORD_CAP:
         dict_df = _bpe_local(cur, rounds, emit="dict")
     else:
         _, dict_df = _bpe_train_iter(cur, rounds)
@@ -1870,9 +1862,7 @@ def q_curriculum_order(documents: DataFrame,
 
 
 def q_pipeline_llm(documents: DataFrame,
-                   stage_dir: str | None = None,
-                   n_docs: int | None = None,
-                   resume: bool = False) -> DataFrame:
+                   n_docs: int | None = None) -> DataFrame:
     """Declared query (r11; near-dedup stage added r12): the COMPOSED
     LLM-data pipeline — every stage an already-declared operator,
     chained as ONE lazy plan, so the hash row proves the operators
@@ -1920,27 +1910,13 @@ def q_pipeline_llm(documents: DataFrame,
     anti-join; docs2nd feeds decontaminate + the train filter; docs3
     feeds weights + packing + the final join) is cut — without the
     cuts Catalyst re-executes clean→scrub→decontam once per branch
-    (measured 17–21 s vs 8–9 s at sf0.1). Two staging modes:
-
-    - ``stage_dir=None`` (default): ``localCheckpoint(eager=False)``.
-      Executor-side materialization, nothing to the driver — but the
-      blocks are EXECUTOR-LOCAL and non-replicated, and on Spark 4.1
-      even ``eager=False`` runs the materialization jobs at builder
-      time. Right for tests/benches; at cluster scale one lost
-      executor makes the checkpointed blocks unrecoverable and fails
-      the whole composed run.
-    - ``stage_dir=<path>``: each handoff is written once as parquet
-      under ``stage_dir/<stage>`` and read back — durable staging on
-      whatever storage the path lives on (HDFS/S3 in production), so
-      executor loss costs one stage recompute at most, and every
-      stage output is independently inspectable/resumable. Costs one
-      fs round-trip per handoff; hash-equality with the checkpointed
-      mode is pytest-pinned (test_text_dedup.py). ``resume=True``
-      additionally makes the staged run RESTARTABLE: completed stages
-      (parquet ``_SUCCESS`` + matching parameter-fingerprint marker)
-      are read back instead of recomputed, so a mid-pipeline failure
-      costs only the missing suffix (operators/staging.py documents
-      the fingerprint and stale-input contract).
+    (measured 17–21 s vs 8–9 s at sf0.1). Each cut is a
+    ``localCheckpoint(eager=False)``: executor-side materialization,
+    nothing to the driver. The blocks are executor-local and
+    non-replicated, so a lost executor fails the composed run, which
+    then reruns from scratch (as the reference retrain does,
+    trainer.py:45-66); on Spark 4.1 even ``eager=False`` runs the
+    materialization jobs at builder time.
 
     ``n_docs`` (parquet-footer corpus count) sizes the near-dedup
     signatures via ``simhash_sized_params`` so chance candidates stay
@@ -1958,13 +1934,6 @@ def q_pipeline_llm(documents: DataFrame,
                                                  q_decontaminate,
                                                  q_substring_prune,
                                                  simhash_neardup)
-    from movie_rec_spark.operators.staging import make_stage
-
-    # ``resume=True`` (staged mode only) restarts a failed composed
-    # run from its last completed stage — see operators/staging.py
-    # for the fingerprint/stale-marker contract.
-    _stage = make_stage(stage_dir, resume=resume,
-                        params={"pipeline": "llm", "n_docs": n_docs})
 
     # 1. clean (q_corpus_clean's gates, text carried forward). The
     # quality/lang regex chain + fp md5 is per-row-heavy and otherwise
@@ -1978,22 +1947,20 @@ def q_pipeline_llm(documents: DataFrame,
                      F.md5(F.col("text").cast("binary")).alias("fp"))
              .filter((score >= 0.75)
                      & (_guessed_lang(F.col("text")) == "en")))
-    kept = _stage(
-        gated
-        .withColumn("_mi", F.min("doc_id").over(
-            Window.partitionBy("fp")))
-        .filter(F.col("doc_id") == F.col("_mi"))
-        .select("doc_id", "source", "text"),
-        "clean")
+    kept = (gated
+            .withColumn("_mi", F.min("doc_id").over(
+                Window.partitionBy("fp")))
+            .filter(F.col("doc_id") == F.col("_mi"))
+            .select("doc_id", "source", "text")
+            .localCheckpoint(eager=False))
     # 2. scrub: the ExactSubstr prune's cleaned_text is the working
     # text from here on (the pipeline audits what it ships)
     scrub = q_substring_prune(kept)
-    docs2 = _stage(
-        scrub
-        .join(kept.select("doc_id", "source"), "doc_id")
-        .select("doc_id", F.col("cleaned_text").alias("text"),
-                "source"),
-        "scrub")
+    docs2 = (scrub
+             .join(kept.select("doc_id", "source"), "doc_id")
+             .select("doc_id", F.col("cleaned_text").alias("text"),
+                     "source")
+             .localCheckpoint(eager=False))
     # 3. near-dedup on the scrubbed text: a doc with ANY smaller-id
     # survivor within the hamming radius is dropped, so every
     # within-radius pair loses its larger member and the shipped set
@@ -2001,20 +1968,20 @@ def q_pipeline_llm(documents: DataFrame,
     # (simhash_neardup) — cost tracks near-dup density, never |docs|².
     dups = (simhash_neardup(docs2, n_docs=n_docs)
             .select(F.col("doc_b").alias("doc_id")).distinct())
-    docs2nd = _stage(docs2.join(dups, "doc_id", "left_anti"),
-                     "neardup")
+    docs2nd = (docs2.join(dups, "doc_id", "left_anti")
+               .localCheckpoint(eager=False))
     # 4. decontaminate: drop flagged train docs, ship the train split
     contam = (q_decontaminate(docs2nd)
               .select(F.col("train_doc").alias("doc_id")).distinct())
-    train = _stage(
-        docs2nd
-        .filter(stable_bucket(F.col("doc_id")) < TRAIN_MAX_BUCKET)
-        .join(contam, "doc_id", "left_anti"),
-        "train")
+    train = (docs2nd
+             .filter(stable_bucket(F.col("doc_id")) < TRAIN_MAX_BUCKET)
+             .join(contam, "doc_id", "left_anti")
+             .localCheckpoint(eager=False))
     # 5. DSIR threshold selection (map-side keep/drop, no global rank)
     sel = (q_importance_threshold(train)
            .filter(F.col("selected") == 1).select("doc_id"))
-    docs3 = _stage(train.join(sel, "doc_id", "left_semi"), "select")
+    docs3 = (train.join(sel, "doc_id", "left_semi")
+             .localCheckpoint(eager=False))
     # 6. mixture weights + packing manifest over the shipped set
     weights = q_mixture_weights(docs3).select("source", "weight_ppm")
     packed = q_pack_sequences(docs3)

@@ -646,26 +646,6 @@ def test_pipeline_media_matches_pure_python_mirror(spark):
             assert getattr(got, col) == val, (d, col, getattr(got, col), val)
 
 
-def test_pipeline_media_staged_equals_checkpointed(spark, tmp_path):
-    """stage_dir= parquet staging (the durable cluster-scale handoff
-    mode, q_pipeline_llm's contract) is a pure execution-strategy
-    choice: identical rows, every stage independently inspectable."""
-    import os
-
-    from pyspark.sql import Row
-
-    from movie_rec_spark.operators import multimodal as MM
-
-    docs = spark.createDataFrame([Row(doc_id=i) for i in range(32)])
-    base = [tuple(r) for r in MM.q_pipeline_media(docs).collect()]
-    staged_dir = str(tmp_path / "media_stages")
-    staged = [tuple(r) for r in MM.q_pipeline_media(
-        docs, stage_dir=staged_dir).collect()]
-    assert staged == base
-    for stage in ("image_pairs", "audio_pairs", "kept"):
-        assert os.path.isdir(os.path.join(staged_dir, stage)), stage
-
-
 def test_pipeline_media_builds_without_driver_collect(spark, monkeypatch):
     """No driver action during build — the composed plan stays lazy
     (localCheckpoint materializations are executor-side)."""

@@ -120,47 +120,46 @@ def test_q_label_prop_matches_pure_mirror(spark, sf_docs):
     assert len(sizes) > 2                           # chains fragmented
 
 
-def test_graph_local_routes_match_iterative(spark, sf_docs):
+def test_graph_local_routes_match_iterative(spark, sf_docs, monkeypatch):
     """The r12 single-task kernels for kcore and label_propagation
     are pinned against the unchanged iterative paths
-    (local_edge_cap=0 forces the per-round joins/aggs): identical
+    (CC_LOCAL_EDGE_CAP = 0 forces the per-round joins/aggs): identical
     survivors+degrees and identical label assignments on the real
     community graph."""
     edges = D.core_edges(sf_docs)
     loc_kc = {(r.doc_id, r.deg)
               for r in D.kcore(edges, D.KCORE_K).collect()}
-    it_kc = {(r.doc_id, r.deg)
-             for r in D.kcore(edges, D.KCORE_K,
-                              local_edge_cap=0).collect()}
-    assert loc_kc == it_kc
     loc_lp = {(r.doc_id, r.label)
               for r in D.label_propagation(
                   edges, D.LABELPROP_ITERS).collect()}
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
+    it_kc = {(r.doc_id, r.deg)
+             for r in D.kcore(edges, D.KCORE_K).collect()}
+    assert loc_kc == it_kc
     it_lp = {(r.doc_id, r.label)
              for r in D.label_propagation(
-                 edges, D.LABELPROP_ITERS,
-                 local_edge_cap=0).collect()}
+                 edges, D.LABELPROP_ITERS).collect()}
     assert loc_lp == it_lp
 
 
-def test_khop_triangles_local_routes_match_iterative(spark, sf_docs):
+def test_khop_triangles_local_routes_match_iterative(spark, sf_docs,
+                                                     monkeypatch):
     """The r12 single-task kernels for khop_counts and triangle_count
     are pinned against the unchanged distributed joins
-    (local_edge_cap=0): identical reach counts on the directed
+    (CC_LOCAL_EDGE_CAP = 0): identical reach counts on the directed
     general graph and identical triangle support on the offset graph."""
     gedges = D.general_edges(sf_docs)
     loc_kh = {(r.doc_id, r.n_reachable)
               for r in D.khop_counts(gedges, D.KHOP_K).collect()}
-    it_kh = {(r.doc_id, r.n_reachable)
-             for r in D.khop_counts(gedges, D.KHOP_K,
-                                    local_edge_cap=0).collect()}
-    assert loc_kh == it_kh and loc_kh
     tedges = D.triangle_edges(sf_docs)
     loc_tr = {(r.doc_id, r.n_triangles)
               for r in D.triangle_count(tedges).collect()}
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
+    it_kh = {(r.doc_id, r.n_reachable)
+             for r in D.khop_counts(gedges, D.KHOP_K).collect()}
+    assert loc_kh == it_kh and loc_kh
     it_tr = {(r.doc_id, r.n_triangles)
-             for r in D.triangle_count(
-                 tedges, local_edge_cap=0).collect()}
+             for r in D.triangle_count(tedges).collect()}
     assert loc_tr == it_tr and loc_tr
 
 
@@ -392,9 +391,9 @@ def test_bpe_empty_corpus_returns_schema(spark):
                            "pair_freq"]
 
 
-def test_bpe_local_route_matches_distributed(spark):
+def test_bpe_local_route_matches_distributed(spark, monkeypatch):
     """The single-task local induction (dict under BPE_LOCAL_WORD_CAP)
-    equals the distributed loop (pinned via local_word_cap=0) row for
+    equals the distributed loop (pinned via BPE_LOCAL_WORD_CAP = 0) row for
     row — merge table AND final encode dict — on a corpus exercising
     the tricky shapes: back-to-back runs ('aaaa'), compounding merges
     ('low'/'lower'), a tie broken by (left ASC, right ASC), and a
@@ -409,16 +408,17 @@ def test_bpe_local_route_matches_distributed(spark):
     m_local = sorted(
         (r.merge_round, r.left_sym, r.right_sym, r.pair_freq)
         for r in T.q_bpe_merges(docs).collect())
-    m_dist = sorted(
-        (r.merge_round, r.left_sym, r.right_sym, r.pair_freq)
-        for r in T.q_bpe_merges(docs, local_word_cap=0).collect())
-    assert m_local == m_dist and len(m_local) == T.BPE_ROUNDS
     e_local = sorted(
         (r.word, r.freq, r.encoded, r.n_tokens, r.n_chars)
         for r in T.q_bpe_encode(docs).collect())
+    monkeypatch.setattr(T, "BPE_LOCAL_WORD_CAP", 0)
+    m_dist = sorted(
+        (r.merge_round, r.left_sym, r.right_sym, r.pair_freq)
+        for r in T.q_bpe_merges(docs).collect())
+    assert m_local == m_dist and len(m_local) == T.BPE_ROUNDS
     e_dist = sorted(
         (r.word, r.freq, r.encoded, r.n_tokens, r.n_chars)
-        for r in T.q_bpe_encode(docs, local_word_cap=0).collect())
+        for r in T.q_bpe_encode(docs).collect())
     assert e_local == e_dist and len(e_local) > 0
 
 

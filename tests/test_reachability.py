@@ -16,7 +16,9 @@ path, deleted, or listed in ``KEPT`` with the reason it stays; what a
 ``KEPT`` def reaches is exempt with it. Every ``os.environ`` /
 ``os.getenv`` read in ``movie_rec_spark/`` must name a variable in
 ``ENV_SETTINGS``, so tuning knobs that nothing sets cannot grow back
-unnoticed.
+unnoticed. Likewise every Spark write in ``movie_rec_spark/`` must sit
+in a top-level def listed in ``WRITERS``, so a second way to publish
+files cannot grow back beside the snapshot commit unnoticed.
 """
 
 from __future__ import annotations
@@ -39,6 +41,20 @@ ENV_SETTINGS = {
     "SPARK_DRIVER_MEM",
     "SPARK_CHECKPOINT_DIR",
     "MRS_SCRATCH_DIR",
+}
+
+# the package's only Spark writers (top-level def -> why it writes)
+WRITERS = {
+    "run_pipeline": "the refresh job publishes its gold tables",
+    "_write_data_files": ("the snapshot commit's data files; the "
+                          "manifest publishes them"),
+    "write_bucketed": "layout fixture of the bucketed-join plan tests",
+    "bucketed_table": "layout fixture of the bucketed-join plan tests",
+    "write_partitioned": "layout fixture of the bucketed-join plan tests",
+    "stage_batches": "replay harness: one file per delivered micro-batch",
+    "replay_file_stream": "replay harness: the replayed stream's sink",
+    "merge_stream_snapshot": ("the streamed sink; each batch commits "
+                              "as a snapshot"),
 }
 
 KEPT = {
@@ -189,3 +205,35 @@ def test_library_reads_only_deployment_env_settings():
         "environment reads outside the deployment settings "
         f"{sorted(ENV_SETTINGS)} (use a module constant or a "
         f"parameter instead): {bad}")
+
+
+def _write_sites(tree: ast.Module):
+    """(line, enclosing top-level def or None) of every Spark write in
+    ``tree``: a ``.write`` or ``.writeStream`` property read (a call
+    such as ``ZipFile.write(...)`` is not one), or a ``saveAsTable`` /
+    ``writeTo`` call."""
+    for top in tree.body:
+        owner = top.name if isinstance(top, DEFS) else None
+        called = {id(n.func) for n in ast.walk(top)
+                  if isinstance(n, ast.Call)}
+        for n in ast.walk(top):
+            if not isinstance(n, ast.Attribute):
+                continue
+            if (n.attr in ("write", "writeStream") and id(n) not in called) \
+                    or n.attr in ("saveAsTable", "writeTo"):
+                yield n.lineno, owner
+
+
+def test_library_writes_only_from_listed_writers():
+    bad, used = [], set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for line, owner in _write_sites(tree):
+            used.add(owner)
+            if owner not in WRITERS:
+                bad.append(f"{path.relative_to(ROOT)}:{line} in {owner}")
+    assert not bad, (
+        "Spark writes outside the listed writers (publish through the "
+        f"snapshot commit, or list the def in WRITERS): {bad}")
+    stale = set(WRITERS) - used
+    assert not stale, f"WRITERS entries that no longer write: {sorted(stale)}"

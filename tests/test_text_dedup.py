@@ -184,7 +184,7 @@ def test_simhash_blocking_exact_vs_brute_force(spark, sf_docs):
         assert got == truth and truth
 
 
-def test_dedup_components_warns_when_not_converged(spark):
+def test_dedup_components_warns_when_not_converged(spark, monkeypatch):
     import warnings
 
     from movie_rec_spark.operators.dedup import dedup_components
@@ -192,11 +192,12 @@ def test_dedup_components_warns_when_not_converged(spark):
     # chain of diameter 4 cannot converge in 1 round
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "doc_a long, doc_b long")
+    # CC_LOCAL_EDGE_CAP = 0 pins the distributed iteration (the local
+    # single-task path labels any small graph exactly)
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        # local_edge_cap=0 pins the distributed iteration (the local
-        # single-task path labels any small graph exactly)
-        dedup_components(pairs, max_iter=1, local_edge_cap=0)
+        dedup_components(pairs, max_iter=1)
     assert any("did not converge" in str(x.message) for x in w)
 
 
@@ -462,7 +463,7 @@ def test_unigram_logprob_orders_common_above_rare(spark):
     assert out[100].n_tokens == 4
 
 
-def test_cc_chain_round_budgets(spark, sf_docs):
+def test_cc_chain_round_budgets(spark, sf_docs, monkeypatch):
     """Both CC variants on the declared chain graph (VERDICT r3 item 4):
     round counts must stay logarithmic — star in O(log n), min-label in
     O(log diameter) thanks to pointer jumping — and the labelings must
@@ -483,14 +484,15 @@ def test_cc_chain_round_budgets(spark, sf_docs):
     assert star == ml
 
     # Round budgets are a property of the DISTRIBUTED iterations, so pin
-    # them with local_edge_cap=0 (the declared queries above route small
-    # graphs through the single-task local pass, CC_ROUNDS == 0).
+    # them with CC_LOCAL_EDGE_CAP = 0 (the declared queries above route
+    # small graphs through the single-task local pass, CC_ROUNDS == 0).
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
     edges = D.chain_edges(sf_docs)
     it_star = {r.doc_id: r.comp for r in D.dedup_components_star(
-        edges, local_edge_cap=0).collect()}
+        edges).collect()}
     star_rounds = D.CC_ROUNDS["star"]
     it_ml = {r.doc_id: r.comp for r in D.dedup_components(
-        edges, max_iter=30, local_edge_cap=0).collect()}
+        edges, max_iter=30).collect()}
     ml_rounds = D.CC_ROUNDS["minlabel"]
 
     assert star_rounds >= 1 and star_rounds <= budget, (star_rounds, budget)
@@ -501,7 +503,7 @@ def test_cc_chain_round_budgets(spark, sf_docs):
     assert all(ml[k] == v for k, v in it_ml.items())
 
 
-def test_cc_local_path_matches_iterative(spark):
+def test_cc_local_path_matches_iterative(spark, monkeypatch):
     """The size-adaptive single-task CC pass must produce the identical
     (doc_id, comp = min reachable id) labeling as both distributed
     iterations, on mixed shapes incl. a deep chain, and must mark the
@@ -516,17 +518,16 @@ def test_cc_local_path_matches_iterative(spark):
     local = {r.doc_id: r.comp
              for r in D.dedup_components(pairs).collect()}
     assert D.CC_ROUNDS["minlabel"] == 0
-    it_ml = {r.doc_id: r.comp
-             for r in D.dedup_components(pairs, max_iter=30,
-                                         local_edge_cap=0).collect()}
-    it_star = {r.doc_id: r.comp
-               for r in D.dedup_components_star(pairs,
-                                                local_edge_cap=0).collect()}
-    assert local == it_ml == it_star
     local_star = {r.doc_id: r.comp
                   for r in D.dedup_components_star(pairs).collect()}
     assert D.CC_ROUNDS["star"] == 0
     assert local_star == local
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 0)
+    it_ml = {r.doc_id: r.comp
+             for r in D.dedup_components(pairs, max_iter=30).collect()}
+    it_star = {r.doc_id: r.comp
+               for r in D.dedup_components_star(pairs).collect()}
+    assert local == it_ml == it_star
 
 
 def test_chain_edges_split_on_gaps_and_blocks(spark):
@@ -790,6 +791,31 @@ def test_pagerank_exact_guards(spark):
     got = {r.node: r.r
            for r in D.pagerank_exact(edges, lcm_out=4).collect()}
     assert set(got) == {1, 2, 3, 4, 5} and all(v > 0 for v in got.values())
+
+
+def test_pagerank_queries_on_edgeless_corpus(spark):
+    """Ids 0, 2 and 4 form no chain edge and no general edge, so there
+    is no node to rank: both PageRank queries return an empty frame with
+    their usual schema instead of dividing by the node count, and the
+    DuckDB oracles (whose nodes are the edge-touched ids) agree. The CC
+    chain queries on the same corpus return singletons."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    docs = spark.createDataFrame([(0,), (2,), (4,)], "doc_id bigint")
+    documents = docs.toPandas()  # noqa: F841 — the oracles' table
+    oracles = E.oracle_sql()
+    for name, q in (("q_pagerank_chain", D.q_pagerank_chain),
+                    ("q_pagerank_general", D.q_pagerank_general)):
+        out = q(docs)
+        assert out.collect() == [], name
+        want = duckdb.sql(oracles[name]).df()
+        assert len(want) == 0, name
+        assert sorted(out.columns) == sorted(want.columns), name
+    for q in (D.q_cc_chain_star, D.q_cc_chain_minlabel):
+        assert {(r.doc_id, r.comp) for r in q(docs).collect()} == \
+            {(0, 0), (2, 2), (4, 4)}
 
 
 def test_chunk_knn_finds_identical_paragraph(spark):
@@ -1526,25 +1552,6 @@ def test_pipeline_llm_builds_without_driver_collect(spark, sf_docs,
     assert df.columns == ["doc_id", "source", "shard", "n_tokens",
                           "start_offset", "chunk_id",
                           "crosses_boundary", "weight_ppm"]
-
-
-def test_pipeline_llm_staged_mode_equals_checkpointed(spark, sf_docs,
-                                                      tmp_path):
-    """The durable staging mode (stage_dir= parquet handoffs — the
-    cluster-scale answer to localCheckpoint's executor-local,
-    non-replicated blocks) must be a pure execution-strategy choice:
-    byte-identical rows to the default checkpointed mode, and every
-    stage written under stage_dir as an independently inspectable
-    parquet table."""
-    base = [tuple(r) for r in sorted(
-        T.q_pipeline_llm(sf_docs).collect())]
-    staged_dir = str(tmp_path / "stages")
-    staged = [tuple(r) for r in sorted(
-        T.q_pipeline_llm(sf_docs, stage_dir=staged_dir).collect())]
-    assert staged == base
-    import os
-    for stage in ("clean", "scrub", "neardup", "train", "select"):
-        assert os.path.isdir(os.path.join(staged_dir, stage)), stage
 
 
 def test_pipeline_llm_neardup_stage_drops_simhash_dups(spark, sf_docs):
